@@ -17,6 +17,7 @@ from contextlib import contextmanager
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from lakota_spark import segwriter
 from lakota_spark.changelog import PHI, Changelog, checkpoint_cadence
 from lakota_spark.commit import Segment, Snapshot, payload_paths
 from lakota_spark.schema import Schema
@@ -807,77 +808,37 @@ class Collection:
                 # files with driver-sized total bytes — pyarrow
                 # read+rewrite beats a Spark job by ~20x (see
                 # `Series._read_run_local`). Falls back to the Spark
-                # path for KV (needs the resolving read), clipped
-                # pieces, and non-arrow backends.
-                pdf = series._read_run_local(run)
-                if pdf is not None:
-                    n = len(pdf)
-                    if n == 0:
-                        return
-                    stop, stop_closed = max(
-                        ((s.stop, s.stop_closed) for s in run),
-                        key=lambda t: (t[0], t[1]),
-                    )
-                    path, digest = series._write_segment_files_local(pdf)
-                    from lakota_spark import zonemap
-
-                    meta = {"digest": digest, "defrag": True}
-                    zm = zonemap.compute_from_pdf(pdf, self.schema)
-                    if zm:
-                        meta["zmap"] = zm
-                    merged = Segment(
-                        label=label,
-                        start=run[0].start,
-                        stop=stop,
-                        start_closed=run[0].start_closed,
-                        stop_closed=stop_closed,
-                        path=path,
-                        length=n,
-                        seq=snap.max_seq + 1,
-                        meta=meta,
-                    )
-                    # identity, not equality: `in run` would pay an
-                    # O(|run|) frozen-dataclass field compare per table
-                    # segment — quadratic on a fragmented table (20 s of
-                    # the 10k-segment defrag before this)
-                    run_ids = {id(s) for s in run}
-                    keep = [
-                        s for s in snap.segments if id(s) not in run_ids
-                    ]
-                    snap = Snapshot([*keep, merged], max_seq=snap.max_seq + 1)
-                    changed = True
+                # path for overlapping KV (needs the resolving read),
+                # clipped pieces, and non-arrow backends.
+                tbl = series._read_run_local(run)
+                if tbl is not None:
+                    pages = segwriter.encode(tbl, self.schema)
+                else:
+                    df = series._read_segments(run)
+                    if self.schema.kv:
+                        # KV runs may hold several versions of a key
+                        # across overlapping segments: resolve
+                        # last-writer-wins BEFORE merging, else the
+                        # single merged seq would make the surviving
+                        # version arbitrary at read time (the reference
+                        # defrags through the resolving read path).
+                        df = series._kv_dedup(df)
+                    pages = series._stage_df(df.select(*self.schema.columns))
+                if pages.n == 0:
                     return
-                df = series._read_segments(run)
-                if self.schema.kv:
-                    # KV runs may hold several versions of a key across
-                    # overlapping segments: resolve last-writer-wins BEFORE
-                    # merging, else the single merged seq would make the
-                    # surviving version arbitrary at read time (the
-                    # reference defrags through the resolving read path).
-                    df = series._kv_dedup(df)
-                df = df.select(*self.schema.columns)
-                n = df.count()
-                if n == 0:
-                    return
-                # `run` is sorted by start; KV segments may overlap, so the
-                # largest stop is NOT necessarily run[-1]'s — taking it
-                # would silently drop rows beyond that stop.
+                # `run` is sorted by start; KV segments may overlap, so
+                # the largest stop is NOT necessarily run[-1]'s — taking
+                # it would silently drop rows beyond that stop.
                 stop, stop_closed = max(
                     ((s.stop, s.stop_closed) for s in run),
                     key=lambda t: (t[0], t[1]),
                 )
-                path, digest = series._write_segment_files(df, n)
-                from lakota_spark import zonemap
-
-                meta = {"digest": digest, "defrag": True}
-                # no frame in hand on this branch: merge the run's own
-                # zone maps — valid for any subset of the union, so the
-                # KV last-writer-wins rewrite may reuse it too
-                zm = zonemap.merge(
-                    [(s.meta or {}).get("zmap") for s in run]
+                path, digest = segwriter.publish(
+                    self.fs, self.seg_prefix, pages
                 )
-                if zm:
-                    meta["zmap"] = zm
+                meta = {"digest": digest, "defrag": True}
+                if pages.zmap:
+                    meta["zmap"] = pages.zmap
                 merged = Segment(
                     label=label,
                     start=run[0].start,
@@ -885,11 +846,14 @@ class Collection:
                     start_closed=run[0].start_closed,
                     stop_closed=stop_closed,
                     path=path,
-                    length=n,
+                    length=pages.n,
                     seq=snap.max_seq + 1,
                     meta=meta,
                 )
-                # identity, not equality (see fast path above)
+                # identity, not equality: `in run` would pay an
+                # O(|run|) frozen-dataclass field compare per table
+                # segment — quadratic on a fragmented table (20 s of
+                # the 10k-segment defrag before this)
                 run_ids = {id(s) for s in run}
                 keep = [s for s in snap.segments if id(s) not in run_ids]
                 snap = Snapshot([*keep, merged], max_seq=snap.max_seq + 1)

@@ -768,17 +768,11 @@ def register(spark) -> None:
 
 
 class _SegmentMsg(WriterCommitMessage):
-    def __init__(self, tmp_rel, digests, n, lo, hi, zmap=None, subs=None):
-        self.tmp_rel = tmp_rel
-        self.digests = digests
-        self.n = n
-        self.lo = lo
-        self.hi = hi
-        self.zmap = zmap
-        #: range_boundaries mode: this partition staged one segment PER
-        #: boundary bucket; `subs` carries them and the parent is just
-        #: the envelope (tmp_rel None, n = total rows for empty checks)
-        self.subs = subs
+    """One write task's staged segments (`segwriter.Pages`, staged):
+    one per task, or one per boundary bucket with range_boundaries."""
+
+    def __init__(self, segs):
+        self.segs = segs
 
 
 def _parse_boundary(text: str, alias: str):
@@ -800,15 +794,10 @@ def _parse_boundary(text: str, alias: str):
 
 
 def _leaf_msgs(messages):
-    """Flatten commit messages to staged-segment leaves (a
-    range_boundaries partition stages several)."""
+    """Flatten commit messages to their staged segments."""
     for m in messages or []:
-        if m is None:
-            continue
-        if getattr(m, "subs", None):
-            yield from m.subs
-        elif m.n:
-            yield m
+        if m is not None:
+            yield from m.segs
 
 
 class LakotaArrowWriter(DataSourceArrowWriter):
@@ -816,12 +805,12 @@ class LakotaArrowWriter(DataSourceArrowWriter):
     ingest path as a native Spark writer.
 
     Executor side (`write`): each partition's record batches cast to
-    the engine's arrow schema (timestamps truncated to seconds — the
-    reference's M8[s] write cast), sort locally by the index, slice
-    into PAGE_LEN zstd parquet blobs (per-column encodings matching
-    `Series._write_segment_files_local`) and STAGE under a
-    ``_tmp-<hexts>-<uuid>`` dir (aged out by GC only after the
-    grace period) with per-blob sha1s. Driver
+    the engine's arrow schema (`segwriter.conform`: timestamps truncated
+    to seconds — the reference's M8[s] write cast), sort locally by the
+    index, encode through the one segment writer (`segwriter.encode`:
+    the same pages and content addresses as a driver-local write of
+    the same rows) and STAGE under a ``_tmp-<hexts>-<uuid>`` dir (aged
+    out by GC only after the grace period). Driver
     side (`commit`): every staged dir publishes to its Merkle content
     address (identical-content dedup like the engine), partition index
     ranges must be pairwise DISJOINT (repartitionByRange on the index
@@ -883,9 +872,7 @@ class LakotaArrowWriter(DataSourceArrowWriter):
         # everything the executors need, picklable:
         self._uri = fs.uri
         self._seg_prefix = series.collection.seg_prefix
-        self._idx = list(eng.idx)
-        self._aliases = dict(eng.columns)
-        self._compression = eng.parquet_compression()
+        self._schema = eng
         self._options = dict(options)
         self._root = bool(overwrite)
         self._overlay = str(
@@ -900,132 +887,56 @@ class LakotaArrowWriter(DataSourceArrowWriter):
         self._boundaries = None
         if raw:
             vals = [v.strip() for v in str(raw).split(",") if v.strip()]
-            alias = self._aliases[self._idx[0]]
+            alias = eng.columns[eng.idx[0]]
             self._boundaries = sorted(
                 _parse_boundary(v, alias) for v in vals
             )
 
     def write(self, iterator):
-        import hashlib
-        import io
-        import posixpath
-        import uuid as _uuid
-
         import pyarrow as pa
-        import pyarrow.compute as pc
-        import pyarrow.parquet as pq
-        from pyarrow import fs as pafs
 
-        from lakota_spark.series import PAGE_LEN
+        from lakota_spark import segwriter
 
-        pa_types = {
-            "timestamp": pa.timestamp("us", tz="UTC"),
-            "date": pa.date32(),
-            "int": pa.int64(),
-            "float": pa.float64(),
-            "str": pa.string(),
-        }
         batches = list(iterator)
-        if not batches or sum(b.num_rows for b in batches) == 0:
-            return _SegmentMsg(None, [], 0, None, None)
-        tbl = pa.Table.from_batches(batches)
-        cols = []
-        for name, alias in self._aliases.items():
-            c = tbl.column(name)
-            if alias == "timestamp":
-                # reference write cast: truncate to seconds (M8[s])
-                c = pc.floor_temporal(
-                    c.cast(pa.timestamp("us", tz="UTC")), unit="second"
-                )
-            cols.append(c.cast(pa_types[alias]))
-        tbl = pa.table(dict(zip(self._aliases, cols)))
-        tbl = tbl.sort_by([(c, "ascending") for c in self._idx])
-        enc = {
-            n: "DELTA_BINARY_PACKED"
-            for n, a in self._aliases.items()
-            if a in ("int", "timestamp", "date")
-        }
-        enc.update(
-            {n: "PLAIN" for n, a in self._aliases.items() if a == "float"}
-        )
-        dict_cols = [n for n, a in self._aliases.items() if a == "str"]
-        fsys, root = pafs.FileSystem.from_uri(self._uri)
-        from lakota_spark.changelog import staging_name
+        if not batches:
+            return _SegmentMsg([])
+        idx = self._schema.idx
+        tbl = segwriter.conform(pa.Table.from_batches(batches), self._schema)
+        tbl = tbl.sort_by([(c, "ascending") for c in idx])
+        subs = [tbl]
+        if self._boundaries:
+            # range_boundaries: split the sorted table at the pinned
+            # boundary values (first index column) and stage one segment
+            # per non-empty bucket — disjoint by construction when each
+            # bucket is co-located in one task (upstream repartition on
+            # the bucket id; the commit's overlap check guards the rest)
+            import numpy as np
 
-        def stage(sub) -> _SegmentMsg:
-            def bound(i):
-                out = []
-                for c in self._idx:
-                    v = sub.column(c)[i].as_py()
-                    if getattr(v, "tzinfo", None) is not None:
-                        v = v.replace(tzinfo=None)  # bounds: UTC-naive
-                    out.append(v)
-                return tuple(out)
-
-            lo, hi = bound(0), bound(len(sub) - 1)
-            tmp_rel = (
-                f"{self._seg_prefix}/{staging_name(_uuid.uuid4().hex)}"
+            col = tbl.column(idx[0]).to_numpy(zero_copy_only=False)
+            offsets = [
+                0,
+                *(int(np.searchsorted(col, b, side="left"))
+                  for b in self._boundaries),
+                len(tbl),
+            ]
+            subs = [tbl.slice(a, z - a) for a, z in zip(offsets, offsets[1:])]
+        return _SegmentMsg([
+            segwriter.stage(
+                pages,
+                self._uri,
+                segwriter.new_staging_rel(self._seg_prefix),
             )
-            tmp_full = posixpath.join(root, tmp_rel)
-            fsys.create_dir(tmp_full, recursive=True)
-            digests = []
-            n = len(sub)
-            for i in range(max(1, -(-n // PAGE_LEN))):
-                chunk = sub.slice(i * PAGE_LEN, PAGE_LEN)
-                buf = io.BytesIO()
-                from lakota_spark.series import _nan_safe_stat_columns
-
-                pq.write_table(
-                    chunk,
-                    buf,
-                    compression=self._compression,
-                    use_dictionary=dict_cols,
-                    column_encoding=enc,
-                    # NaN-bearing float columns must not publish
-                    # min/max — Spark row-group pruning would drop the
-                    # NaN rows its own filter semantics keep
-                    write_statistics=_nan_safe_stat_columns(chunk),
-                )
-                b = buf.getvalue()
-                digests.append(hashlib.sha1(b).hexdigest())  # noqa: S324
-                with fsys.open_output_stream(
-                    posixpath.join(tmp_full, f"part-{i:05d}.parquet")
-                ) as out:
-                    out.write(b)
-            from lakota_spark import zonemap
-
-            zmap = zonemap.compute_from_arrow(
-                sub, self._idx, self._aliases
-            )
-            return _SegmentMsg(tmp_rel, digests, n, lo, hi, zmap)
-
-        if not self._boundaries:
-            return stage(tbl)
-        # range_boundaries: split the sorted table at the pinned
-        # boundary values (first index column) and stage one segment
-        # per non-empty bucket — disjoint by construction when each
-        # bucket is co-located in one task (upstream repartition on the
-        # bucket id; the commit's overlap check still guards the rest)
-        import numpy as np
-
-        col = tbl.column(self._idx[0]).to_numpy(zero_copy_only=False)
-        offsets = (
-            [0]
-            + [int(np.searchsorted(col, b, side="left"))
-               for b in self._boundaries]
-            + [len(tbl)]
-        )
-        subs = []
-        for a, z in zip(offsets, offsets[1:]):
-            if z > a:
-                subs.append(stage(tbl.slice(a, z - a)))
-        return _SegmentMsg(None, [], len(tbl), None, None, subs=subs)
+            for pages in (segwriter.encode(t, self._schema) for t in subs)
+            if pages.n
+        ])
 
     # -- driver side ---------------------------------------------------------
 
     def commit(self, messages):
+        from concurrent.futures import ThreadPoolExecutor
+
+        from lakota_spark import segwriter
         from lakota_spark.commit import Segment, cmp_prefix
-        from lakota_spark.fsio import FS
 
         series = _open_series(self._options)
         fs = series.collection.fs
@@ -1039,80 +950,56 @@ class LakotaArrowWriter(DataSourceArrowWriter):
         # deterministic commit order: (start, stop, content digest).
         # In overlay mode LATER segments splice over earlier ones, so
         # this order IS the shadowing rule — content-addressed, stable
-        # across reruns and partitionings. Digests are Merkle-combined
-        # ONCE here and carried through sort + publish.
-        with_digest = [(m, FS.combine_sha1(m.digests)) for m in parts]
-        ordered = sorted(with_digest, key=lambda t: (t[0].lo, t[0].hi, t[1]))
+        # across reruns and partitionings.
+        ordered = sorted(
+            parts, key=lambda p: (p.lo, p.hi, fs.combine_sha1(p.digests))
+        )
+        if not self._overlay:
+            for prev, cur in zip(ordered, ordered[1:]):
+                if cmp_prefix(cur.lo, prev.hi) <= 0:
+                    self.abort(messages)
+                    raise ValueError(
+                        "lakota writer partitions overlap on the index "
+                        f"({prev.hi!r} vs {cur.lo!r}): "
+                        "repartitionByRange on the index columns before "
+                        'writing, or .option("overlay", "true") to '
+                        "splice them in (start, stop, digest) order"
+                    )
 
-        def publish(item):
-            m, digest = item
-            name = digest[:20]
-            final_rel = f"{self._seg_prefix}/{name}"
-            if fs.exists(final_rel):  # identical content already stored
-                fs.remove_tree(m.tmp_rel)
-            else:
-                try:
-                    fs.move(m.tmp_rel, final_rel)
-                except Exception:
-                    # two partitions with identical content race the
-                    # same address: the loser cleans up its staging
-                    if fs.exists(final_rel):
-                        fs.remove_tree(m.tmp_rel)
-                    else:
-                        raise
-            return name
+        def publish(pages):
+            return segwriter.publish(fs, self._seg_prefix, pages)
 
         # publishes are independent per segment — run them concurrently
         # (an object-store "move" is copy+delete per blob, and a
         # 1000-partition ingest would otherwise pay 1000 sequential
         # round-trips on the driver); ex.map preserves input order so
         # the segs list keeps the deterministic sort
-        from concurrent.futures import ThreadPoolExecutor
-
-        if len(ordered) > 1:
-            with ThreadPoolExecutor(
-                max_workers=min(len(ordered), 16)
-            ) as ex:
-                published = list(ex.map(publish, ordered))
-        else:
-            published = [publish(t) for t in ordered]
+        with ThreadPoolExecutor(max_workers=min(len(ordered), 16) or 1) as ex:
+            published = list(ex.map(publish, ordered))
         segs = []
-        for (m, digest), name in zip(ordered, published):
+        for pages, (name, digest) in zip(ordered, published):
             meta = {"digest": digest}
-            if getattr(m, "zmap", None):
-                meta["zmap"] = m.zmap
+            if pages.zmap:
+                meta["zmap"] = pages.zmap
             segs.append(
                 Segment(
                     label=series.label,
-                    start=m.lo,
-                    stop=m.hi,
+                    start=pages.lo,
+                    stop=pages.hi,
                     path=name,
-                    length=m.n,
+                    length=pages.n,
                     meta=meta,
                 )
             )
-        if not self._overlay:
-            for prev, cur in zip(segs, segs[1:]):
-                if cmp_prefix(cur.start, prev.stop) <= 0:
-                    raise ValueError(
-                        "lakota writer partitions overlap on the index "
-                        f"({prev.stop!r} vs {cur.start!r}): "
-                        "repartitionByRange on the index columns before "
-                        'writing, or .option("overlay", "true") to '
-                        "splice them in (start, stop, digest) order"
-                    )
         if segs:
             series.collection.apply_segments(segs, root=self._root)
 
     def abort(self, messages):
-        series = _open_series(self._options)
-        fs = series.collection.fs
-        for m in _leaf_msgs(messages):
-            if getattr(m, "tmp_rel", None):
-                try:
-                    fs.remove_tree(m.tmp_rel)
-                except Exception:  # noqa: BLE001 — best-effort cleanup
-                    pass
+        from lakota_spark import segwriter
+
+        fs = _open_series(self._options).collection.fs
+        for pages in _leaf_msgs(messages):
+            segwriter.discard(fs, pages)
 
 
 class LakotaStreamWriter(DataSourceStreamArrowWriter):

@@ -9,8 +9,9 @@ two backend-aware hooks for bulk segment IO:
 - ``spark_read_uris(rel_dirs)``: URIs Spark can scan for the given segment
   dirs. Hadoop-readable backends return their native URIs (distributed
   IO); non-Hadoop backends (HTTP) materialize through a local cache.
-- ``spark_readable``: when False, the write path stages parquet locally
-  and publishes the part files through this FS (`series.py`).
+- ``arrow_readable``: when False, executors cannot open the store, so
+  the segment writer's tasks hand their encoded pages back and the
+  driver publishes them through this FS (`segwriter.py`).
 
 Three implementations:
 
@@ -67,9 +68,9 @@ class BaseFS:
     uri: str
     scheme: str
     is_local: bool = False
-    spark_readable: bool = False
-    #: backend exposes a pyarrow FileSystem (`.fs` + `.full()`), so the
-    #: driver-local pandas sink can read parquet directly (no Spark job)
+    #: backend exposes a pyarrow FileSystem (`.fs` + `.full()`) that
+    #: executors can reopen from ``uri``: driver-local reads skip Spark,
+    #: and segment-writer tasks stage their pages straight into the store
     arrow_readable: bool = False
 
     #: process-wide I/O byte counters keyed "<Backend>.<op>" (reference
@@ -121,37 +122,6 @@ class BaseFS:
                 self.write_bytes_atomic(
                     dst, src.read_bytes(posixpath.join(rel_src, sub))
                 )
-
-    def files_sha1(self, rel_files: list[str], spark=None) -> list[str]:
-        """Per-file sha1 hex digests, in ``rel_files`` order.
-
-        With a SparkSession (and a Hadoop-readable scheme) the hashes run
-        as a DISTRIBUTED job — `binaryFile` scan + JVM-side `F.sha1` —
-        so no data bytes ever flow through the driver; only the 40-char
-        digests are collected. Without one (or on a non-Hadoop backend,
-        e.g. an HTTP repo) it falls back to streaming reads, which is
-        acceptable for the metadata-scale paths that use it. Both paths
-        produce IDENTICAL digests, so content addresses agree across
-        backends (push/pull dedup relies on this).
-        """
-        if spark is not None and self.spark_readable:
-            from pyspark.sql import functions as F
-
-            rows = (
-                spark.read.format("binaryFile")
-                .load([self.spark_uri(rel) for rel in rel_files])
-                .select("path", F.sha1("content").alias("sha"))
-                .collect()
-            )
-            by_base = {posixpath.basename(r.path): r.sha for r in rows}
-            return [by_base[posixpath.basename(rel)] for rel in rel_files]
-        import hashlib
-
-        out = []
-        for rel in rel_files:
-            h = hashlib.sha1(self.read_bytes(rel))  # noqa: S324 - address
-            out.append(h.hexdigest())
-        return out
 
     @staticmethod
     def combine_sha1(per_file: list[str]) -> str:
@@ -214,10 +184,6 @@ class FS(BaseFS):
         self.fs, self.root = pafs.FileSystem.from_uri(self.uri)
         self.is_local = self.scheme == "file"
         self.arrow_readable = True
-        # schemes Spark's Hadoop layer can scan directly (distributed IO)
-        self.spark_readable = self.scheme in {
-            "file", "s3", "s3a", "gs", "hdfs", "abfs", "wasbs"
-        }
 
     # -- path helpers ------------------------------------------------------
 
@@ -352,7 +318,6 @@ class HttpFS(BaseFS):
     """
 
     is_local = False
-    spark_readable = False
 
     def __init__(self, root_uri: str):
         self.uri = root_uri.rstrip("/")
@@ -455,7 +420,6 @@ class MemFS(BaseFS):
     _STORES: dict[str, tuple[dict, set, dict]] = {}
 
     is_local = False
-    spark_readable = False
 
     def __init__(self, root_uri: str = "memory://", lru_size: int | None = None):
         """``lru_size`` (bytes, also settable as ``memory://x?lru_size=N``)
@@ -638,12 +602,6 @@ class CacheFS(BaseFS):
                     )
             self.cache.write_bytes_atomic(marker, b"")
         return [self.cache.spark_uri(rel) for rel in rel_dirs]
-
-    def files_sha1(self, rel_files: list[str], spark=None) -> list[str]:
-        # hash the (write-through) local copies — distributed when possible
-        if all(self.cache.exists(rel) for rel in rel_files):
-            return self.cache.files_sha1(rel_files, spark=spark)
-        return super().files_sha1(rel_files, spark=None)
 
     # -- write-through + delegation ---------------------------------------
 

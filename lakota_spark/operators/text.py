@@ -816,9 +816,12 @@ def _winnow_fingerprints_arrow(
     max, empty set -> 0/0/null/null). Only (id, text) cross the Python
     boundary (guide §4.1: project before an opaque op); md5 + the
     numpy sliding-min are once-per-batch native folds (guide §4.2).
+    Null text yields the chain's 0/0/0/null/null row; the id column
+    keeps its input type.
     """
+    id_type = df.schema[id_col].dataType.simpleString()
     out_schema = (
-        f"{id_col} long, n_grams long, n_fps long, "
+        f"{id_col} {id_type}, n_grams long, n_fps long, "
         "fp_sum long, fp_min long, fp_max long"
     )
 
@@ -842,6 +845,8 @@ def _winnow_fingerprints_arrow(
             fmax = np.zeros(n, np.int64)
             has_fp = np.zeros(n, bool)
             for i, t in enumerate(texts):
+                if t is None:
+                    continue  # null text: no grams, no fingerprints
                 toks = ws.split(t.strip(" "))
                 m = len(toks) - (k - 1)
                 if m < 1:

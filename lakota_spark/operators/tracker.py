@@ -39,8 +39,8 @@ local paths keep the fast native-rename CAS (multi-process safe for
 concurrent local writers), while ``memory://`` and ``http(s)://``
 roots stage Spark's parquet output in a local tempdir and publish
 the part files through `write_bytes_atomic` (reads materialize via
-`spark_read_uris`' read-through cache) — the same staging discipline
-as `Series._publish_parts`. Non-Hadoop backends are single-writer by
+`spark_read_uris`' read-through cache) — stage, then publish through
+the FS verbs, like `segwriter.publish`. Non-Hadoop backends are single-writer by
 contract (they back one driver's foreachBatch loop); the version CAS
 there is exists-check + atomic write, which still detects a landed
 head and re-merges, but two simultaneous remote writers could race
@@ -198,7 +198,7 @@ class VersionedCountsTracker:
         a racing fold's identically-numbered attempt can't collide.
         Local roots let Spark write scratch in place and rename; other
         backends stage locally and upload part files through the FS
-        verbs (`Series._publish_parts` discipline)."""
+        verbs (the `segwriter.publish` discipline)."""
         writer = (
             merged.repartition(len(touched), "_bucket")
             .write.partitionBy("_bucket")

@@ -89,10 +89,9 @@ class Schema:
         )
 
     def pyarrow_schema(self):
-        """Arrow schema for driver-local segment writes. Timestamps are
-        ``timestamp(us, UTC)`` — the parquet logical type Spark reads back
-        as (session-UTC) TimestampType, so driver-written and
-        executor-written segment files unify in one scan."""
+        """Arrow schema of every segment page (`segwriter.conform`).
+        Timestamps are ``timestamp(us, UTC)`` — the parquet logical type
+        Spark reads back as (session-UTC) TimestampType."""
         import pyarrow as pa
 
         pa_types = {
@@ -229,10 +228,9 @@ class Schema:
         per-column dict (pyarrow applies its own default to unlisted
         columns, so every column is listed). Unknown codec names are
         tolerated — the reference's exotic numcodecs chains degrade to
-        the default rather than failing the write. The Spark executor
-        write path supports only table-level compression; the
-        driver-local path (every sub-PAGE_LEN append) honors the
-        per-column hints.
+        the default rather than failing the write. Every write path
+        encodes through the one segment writer (`segwriter.encode`), so
+        the per-column hints hold wherever the pages are encoded.
 
         FLOAT columns without an explicit hint default to lz4 (round
         12, VERDICT r11 #2): they're written PLAIN (no dictionary, no

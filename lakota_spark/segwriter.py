@@ -1,0 +1,277 @@
+"""The one segment writer: every write path (driver-local dict/pandas
+appends, `Series.write(DataFrame)` tasks, the ``lakota`` data source,
+defrag and KV rewrites) turns a sorted arrow table into content-addressed
+parquet pages here.
+
+`encode` slices the table with ONE page rule, encodes each page with ONE
+per-column encoding table, names each page by the sha1 of the bytes it
+produced, and reports ``n``, ``lo``/``hi`` (ONE bound normaliser) and the
+value-column zone map. Callers only differ in WHERE the bytes go:
+
+* driver-local writes keep the pages in memory and `publish` stages them
+  through the FS verbs (every backend: file, memory, HTTP);
+* executor tasks `stage` them straight into a ``_tmp-`` dir on a
+  pyarrow-readable store, and only digests/bounds/zone maps travel back
+  to the driver, which `publish`es by moving the staged dir — or, where
+  executors cannot open the store, the tasks return the pages and the
+  driver publishes them like a local write.
+
+The bytes are identical on every path, so the same rows get the same
+content address (`segments/<sha1[:20]>`, reference `lakota/series.py:
+140-157` + `lakota/utils.py:122-133`) wherever they were encoded.
+"""
+
+from __future__ import annotations
+
+import datetime as _dt
+import hashlib
+import io
+import posixpath
+import uuid
+from dataclasses import dataclass
+
+PAGE_LEN = 500_000  # target rows per page (`lakota/utils.py:38`)
+
+
+@dataclass
+class Pages:
+    """One segment's encoded pages, in Merkle (= sorted row) order.
+    ``blobs`` holds the bytes until they are staged; ``tmp_rel`` names
+    the ``_tmp-`` dir they were staged into (None: not staged yet)."""
+
+    names: list
+    digests: list
+    blobs: list | None
+    n: int
+    lo: tuple | None
+    hi: tuple | None
+    zmap: dict | None
+    tmp_rel: str | None = None
+
+
+def conform(table, schema):
+    """Cast an arrow table to the schema's arrow types, in schema column
+    order, timestamps truncated to the second (the reference's M8[s]
+    write cast; idempotent on engine-cast input), as ONE chunk per
+    column: the parquet writer cuts pages at batch boundaries too, so
+    the same rows must arrive in the same layout on every path."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    target = schema.pyarrow_schema()
+    cols = []
+    for field in target:
+        col = table.column(field.name)
+        if pa.types.is_timestamp(field.type):
+            col = pc.floor_temporal(col.cast(field.type), unit="second")
+        cols.append(col.cast(field.type))
+    return pa.Table.from_arrays(cols, schema=target).combine_chunks()
+
+
+def _nan_safe_stat_columns(table) -> list[str] | bool:
+    """Columns safe to carry parquet min/max statistics: pyarrow SKIPS
+    NaN when computing float stats, and Spark's row-group pruning
+    trusts those stats — so a pushed ``f > 10`` filter would silently
+    drop the NaN rows Spark's own NaN-greatest semantics keep.  Returns
+    True (all) when no float column holds NaN, else the keep-list."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    drop = {
+        name
+        for name, col in zip(table.column_names, table.columns)
+        if pa.types.is_floating(col.type) and pc.any(pc.is_nan(col)).as_py()
+    }
+    if not drop:
+        return True
+    return [c for c in table.column_names if c not in drop]
+
+
+def _bound(table, i: int, idx) -> tuple:
+    """Index tuple of row ``i`` as plain Python values; timestamps are
+    UTC-naive datetimes (the changelog's bound encoding)."""
+    out = []
+    for c in idx:
+        v = table.column(c)[i].as_py()
+        if isinstance(v, _dt.datetime) and v.tzinfo is not None:
+            v = v.astimezone(_dt.timezone.utc).replace(tzinfo=None)
+        out.append(v)
+    return tuple(out)
+
+
+def encode(table, schema, prefix: str = "part") -> Pages:
+    """Encode a SORTED table in the schema's arrow types (`conform`)
+    into parquet pages named ``<prefix>-<page:05d>.parquet``."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    import pyarrow.parquet as pq
+
+    from lakota_spark import zonemap
+
+    # content addresses must be a function of the data alone: drop the
+    # schema metadata (from_pandas attaches a JSON blob that embeds the
+    # pandas VERSION)
+    if table.schema.metadata:
+        table = table.replace_schema_metadata(None)
+    n = len(table)
+    if n == 0:
+        return Pages([], [], [], 0, None, None, None)
+    # Encodings: DELTA_BINARY_PACKED for the integer-backed columns
+    # (int/timestamp/date — near-free on sorted index grids), dictionary
+    # for strings, PLAIN for doubles (Spark's vectorized reader rejects
+    # BYTE_STREAM_SPLIT). Codecs: the schema's per-column hints.
+    enc = {}
+    for name, alias in schema.columns.items():
+        if alias in ("int", "timestamp", "date"):
+            enc[name] = "DELTA_BINARY_PACKED"
+        elif alias == "float":
+            enc[name] = "PLAIN"
+    dict_cols = [c for c, a in schema.columns.items() if a == "str"]
+    compression = schema.parquet_compression()
+    n_pages = -(-n // PAGE_LEN)
+    page_len = PAGE_LEN
+    if n_pages == 1 and n >= PAGE_LEN // 2:
+        # A near-full single page is encode-latency-bound (parquet
+        # encodes one file on one thread): split it into two halves the
+        # pool below encodes concurrently. Deterministic, so the content
+        # address stays a function of the data (NOTES.md "r12 half-page
+        # split" records the one-time address change this made).
+        n_pages, page_len = 2, -(-n // 2)
+
+    def encode_page(i: int) -> bytes:
+        page = table.slice(i * page_len, page_len)
+        buf = io.BytesIO()
+        pq.write_table(
+            page,
+            buf,
+            compression=compression,
+            use_dictionary=dict_cols,
+            column_encoding=enc,
+            # per PAGE: NaN-bearing float columns publish no min/max
+            write_statistics=_nan_safe_stat_columns(page),
+        )
+        return buf.getvalue()
+
+    if n_pages == 1:
+        blobs = [encode_page(0)]
+    else:  # pyarrow releases the GIL during encode/compress
+        with ThreadPoolExecutor(max_workers=min(n_pages, 16)) as ex:
+            blobs = list(ex.map(encode_page, range(n_pages)))
+    idx = list(schema.idx)
+    return Pages(
+        names=[f"{prefix}-{i:05d}.parquet" for i in range(n_pages)],
+        digests=[hashlib.sha1(b).hexdigest() for b in blobs],  # noqa: S324
+        blobs=blobs,
+        n=n,
+        lo=_bound(table, 0, idx),
+        hi=_bound(table, n - 1, idx),
+        zmap=zonemap.compute_from_arrow(table, idx, dict(schema.columns)),
+    )
+
+
+def stage(pages: Pages, uri: str, tmp_rel: str) -> Pages:
+    """Write the pages into ``tmp_rel`` of the pyarrow-readable store at
+    ``uri`` (executor side) and drop the in-memory bytes."""
+    from pyarrow import fs as pafs
+
+    fsys, root = pafs.FileSystem.from_uri(uri)
+    full = posixpath.join(root, tmp_rel)
+    fsys.create_dir(full, recursive=True)
+    for name, blob in zip(pages.names, pages.blobs):
+        with fsys.open_output_stream(posixpath.join(full, name)) as out:
+            out.write(blob)
+    pages.blobs, pages.tmp_rel = None, tmp_rel
+    return pages
+
+
+def partition_task(schema, uri: str | None, tmp_rel: str | None):
+    """`mapInArrow` body for `Series._stage_df`: encode partition ``p``
+    as ``part-<p:05d>-<page:05d>.parquet`` pages, stage them into the
+    shared ``tmp_rel`` (or, ``uri`` None, keep the bytes for the driver)
+    and emit one ``(pid, pickled Pages)`` row."""
+
+    def run(batches):
+        import pickle
+
+        import pyarrow as pa
+        from pyspark import TaskContext
+
+        batches = list(batches)
+        if not batches:
+            return
+        pid = TaskContext.get().partitionId()
+        table = conform(pa.Table.from_batches(batches), schema)
+        pages = encode(table, schema, prefix=f"part-{pid:05d}")
+        if not pages.n:
+            return
+        if uri is not None:
+            stage(pages, uri, tmp_rel)
+        yield pa.RecordBatch.from_arrays(
+            [pa.array([pid], pa.int32()), pa.array([pickle.dumps(pages)])],
+            names=["pid", "pages"],
+        )
+
+    return run
+
+
+def combine(parts: list, tmp_rel: str | None = None) -> Pages:
+    """One segment from per-partition pages, given in partition (= sort)
+    order (empty partitions emit none), staged into ``tmp_rel`` (None:
+    the parts carry their bytes)."""
+    from lakota_spark import zonemap
+
+    if not parts:
+        return Pages([], [], [], 0, None, None, None)
+    return Pages(
+        names=[nm for p in parts for nm in p.names],
+        digests=[d for p in parts for d in p.digests],
+        blobs=None if tmp_rel else [b for p in parts for b in p.blobs],
+        n=sum(p.n for p in parts),
+        lo=parts[0].lo,
+        hi=parts[-1].hi,
+        zmap=zonemap.merge([p.zmap for p in parts]),
+        tmp_rel=tmp_rel,
+    )
+
+
+def new_staging_rel(seg_prefix: str) -> str:
+    """A fresh ``_tmp-<hexts>-<uuid>`` dir under the segment prefix."""
+    from lakota_spark.changelog import staging_name
+
+    return f"{seg_prefix}/{staging_name(uuid.uuid4().hex)}"
+
+
+def discard(fs, pages: Pages) -> None:
+    """Drop a staged-but-unpublished segment (best effort: GC ages out
+    ``_tmp-`` leftovers anyway)."""
+    if pages.tmp_rel:
+        try:
+            fs.remove_tree(pages.tmp_rel)
+        except Exception:  # noqa: BLE001 — best effort: never mask
+            pass  # the caller's own error
+
+
+def publish(fs, seg_prefix: str, pages: Pages) -> tuple[str, str]:
+    """Publish a segment under its Merkle content address and return
+    ``(name, digest)``. An existing address short-circuits (reference
+    SKIP-WRITE, `lakota/pod.py:201-204`). In-memory pages are staged
+    under a hextime-stamped ``_tmp-`` dir first, then moved: GC leaves
+    young ``_tmp-`` dirs alone, whereas publishing file by file into
+    the final dir races a concurrent gc()'s soft-delete rename."""
+    digest = fs.combine_sha1(pages.digests)
+    name = digest[:20]
+    final_rel = f"{seg_prefix}/{name}"
+    if fs.exists(final_rel):
+        discard(fs, pages)
+        return name, digest
+    if pages.tmp_rel is None:
+        pages.tmp_rel = new_staging_rel(seg_prefix)
+        for nm, blob in zip(pages.names, pages.blobs):
+            fs.write_bytes_atomic(f"{pages.tmp_rel}/{nm}", blob)
+    try:
+        fs.move(pages.tmp_rel, final_rel)
+    except Exception:
+        if not fs.exists(final_rel):
+            raise
+        discard(fs, pages)  # an identical-content racer won
+    return name, digest

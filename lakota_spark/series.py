@@ -21,17 +21,15 @@ still broadcastable; the pruning pass cuts that to the queried interval.
 from __future__ import annotations
 
 import datetime as dt
-import uuid
 
 import pyarrow as pa_lib
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from lakota_spark import segwriter
 from lakota_spark.commit import Segment
-from lakota_spark.fsio import FS
-
-PAGE_LEN = 500_000  # target rows per segment (`lakota/utils.py:38`)
+from lakota_spark.segwriter import PAGE_LEN
 
 CLOSED = {
     "b": (True, True),
@@ -106,27 +104,6 @@ def _arrow_mask_expr(plan):
     if kind == "isnull":
         return _arrow_mask_expr(plan[1]).is_null()
     raise ValueError(f"unknown mask plan node {plan!r}")
-
-
-def _nan_safe_stat_columns(table) -> list[str] | bool:
-    """Columns safe to carry parquet min/max statistics: pyarrow SKIPS
-    NaN when computing float stats, and Spark's row-group pruning
-    trusts those stats — so a pushed ``f > 10`` filter silently drops
-    the NaN rows Spark's own NaN-greatest semantics would keep
-    (reproduced; Spark's writer omits stats in this case).  Returns
-    True (all) when no float column holds NaN, else the keep-list."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    drop = set()
-    for name, col in zip(table.column_names, table.columns):
-        if pa.types.is_floating(col.type) and pc.any(
-            pc.is_nan(col)
-        ).as_py():
-            drop.add(name)
-    if not drop:
-        return True
-    return [c for c in table.column_names if c not in drop]
 
 
 def _physical_plan_str(df) -> str:
@@ -330,69 +307,19 @@ class Series:
         return F.struct(*[F.col(c) for c in self.schema.idx])
 
     def _coerce_df(self, data) -> DataFrame:
-        df, _ = self._coerce_df_local(data)
-        return df
-
-    def _coerce_df_local(self, data):
-        """Coerce to a cast DataFrame; second return is the driver-local
-        pandas frame when the input was local (dict/pandas), else None —
-        lets the write path compute count/bounds without a Spark job."""
+        """Coerce to a DataFrame cast to the declared schema."""
         if isinstance(data, DataFrame):
-            return self.schema.cast(data), None
+            return self.schema.cast(data)
         # dict-of-lists / list-of-rows / pandas convenience (tests, CLI)
         import pandas as pd
 
         if isinstance(data, dict):
             data = pd.DataFrame(data)
         if isinstance(data, pd.DataFrame) and len(data) == 0:
-            return self.spark.createDataFrame([], self.schema.struct_type()), data
+            return self.spark.createDataFrame([], self.schema.struct_type())
         # infer first, then cast: inputs may hold ISO strings for timestamps
         # etc. — the declared schema coerces (`lakota/schema.py:130-133`)
-        df = self.spark.createDataFrame(data)
-        pdf = data if isinstance(data, pd.DataFrame) else None
-        return self.schema.cast(df), pdf
-
-    def _local_stats(self, pdf):
-        """(n, lo, hi) computed driver-side from a local pandas frame —
-        None when any index column's dtype would need the engine's cast
-        to compare correctly (e.g. ISO strings for a timestamp index).
-        Values are normalized to the same Python types Spark's Row
-        returns, so segment bounds are byte-identical either path."""
-        import pandas as pd
-
-        idx = list(self.schema.idx)
-        if len(pdf) == 0:
-            return 0, None, None
-        if any(c not in pdf.columns for c in idx):
-            return None
-        cols = []
-        for c in idx:
-            alias = self.schema.columns[c]
-            s = pdf[c]
-            if s.isna().any():
-                return None  # NA index values: let the engine path decide
-            kind = s.dtype.kind  # i/u int, f float, M datetime64, O object
-            if alias == "int" and kind in "iu":
-                cols.append([int(v) for v in s])
-            elif alias == "float" and kind in "iuf":
-                cols.append([float(v) for v in s])
-            elif alias == "timestamp" and kind == "M":
-                # engine cast truncates to second precision (schema.cast)
-                cols.append(
-                    [pd.Timestamp(v).floor("s").to_pydatetime() for v in s]
-                )
-            elif alias == "str" and kind == "O" and all(
-                isinstance(v, str) for v in s
-            ):
-                cols.append(list(s))
-            elif alias == "date" and kind == "O" and all(
-                type(v) is dt.date for v in s
-            ):
-                cols.append(list(s))
-            else:
-                return None  # needs the engine cast — fall back to Spark
-        rows = list(zip(*cols))
-        return len(pdf), min(rows), max(rows)
+        return self.schema.cast(self.spark.createDataFrame(data))
 
     def _local_cast(self, pdf):
         """Vectorized driver-side equivalent of ``Schema.cast`` for
@@ -484,26 +411,6 @@ class Series:
             prev_eq &= x == y
         return bool(np.all(ok | prev_eq))
 
-    def _local_bound(self, row):
-        """One index-bound tuple from a coerced pandas row, normalized to
-        the same Python types Spark's Row returns (the `_local_stats`
-        contract — segment bounds must be byte-identical either path)."""
-        import pandas as pd
-
-        out = []
-        for c in self.schema.idx:
-            alias = self.schema.columns[c]
-            v = row[c]
-            if alias == "int":
-                out.append(int(v))
-            elif alias == "float":
-                out.append(float(v))
-            elif alias == "timestamp":
-                out.append(pd.Timestamp(v).to_pydatetime())
-            else:
-                out.append(v)
-        return tuple(out)
-
     def _local_cast_arrow(self, data: dict, validate_sorted: bool = False):
         """Zero-copy arrow twin of `_local_cast` for dict-of-numpy
         inputs whose columns are already engine-physical (int64 /
@@ -511,13 +418,12 @@ class Series:
         reference's fragmentation bench. Skips pandas entirely: the
         block-manager construction alone costs ~8 ms per 500 k-row
         write (two full copies of the data), ~20% of the write floor
-        the frag-500k rung measures. Returns ``(pa.Table, n, lo, hi)``
-        with the table cast + floored + SORTED, or None to fall back to
+        the frag-500k rung measures. Returns the table cast + floored +
+        SORTED in the schema's arrow types, or None to fall back to
         the pandas path (str/date columns, non-numpy values, NaT,
         NA index values). Content addresses are byte-identical to the
         pandas path (pinned by tests/test_series.py)."""
         import numpy as np
-        import pandas as pd
         import pyarrow as pa
 
         n = None
@@ -594,19 +500,6 @@ class Series:
                 )
                 arrays = {k: v[order] for k, v in arrays.items()}
 
-        def bound(i):
-            out = []
-            for c in idx:
-                alias = self.schema.columns[c]
-                v = arrays[c][i]
-                if alias == "int":
-                    out.append(int(v))
-                elif alias == "float":
-                    out.append(float(v))
-                else:  # timestamp — match _local_bound's types
-                    out.append(pd.Timestamp(v).to_pydatetime())
-            return tuple(out)
-
         pa_schema = self.schema.pyarrow_schema()
         cols = []
         for name, alias in self.schema.columns.items():
@@ -619,15 +512,35 @@ class Series:
                 # (exactly what from_pandas does against the tz field)
                 arr = arr.cast(pa_schema.field(name).type)
             cols.append(arr)
-        tbl = pa.Table.from_arrays(cols, schema=pa_schema)
-        return tbl, n, bound(0), bound(n - 1)
+        return pa.Table.from_arrays(cols, schema=pa_schema)
 
-    def _write_segment_files_local(self, pdf) -> tuple[str, str]:
-        """Pandas entry to the driver-side segment writer: one
-        `from_pandas` conversion, then the shared arrow-table path."""
+    def _local_table(self, data, validate_sorted: bool = False):
+        """Driver-local sorted arrow table for a dict/pandas input, in
+        the schema's arrow types: `_local_cast_arrow` for dict-of-numpy,
+        else the pandas cast (`_local_cast`) + stable sort + ONE
+        ``from_pandas``. None when a column needs the engine's Spark
+        cast (ISO strings, NA index values, unknown dtypes)."""
+        import pandas as pd
         import pyarrow as pa
 
-        table = pa.Table.from_pandas(
+        if isinstance(data, dict):
+            tbl = self._local_cast_arrow(data, validate_sorted)
+            if tbl is not None:
+                return tbl
+            data = pd.DataFrame(data)
+        if not isinstance(data, pd.DataFrame):
+            return None
+        if len(data) == 0:
+            return self.schema.pyarrow_schema().empty_table()
+        pdf = self._local_cast(data)
+        if pdf is None:
+            return None
+        if not self._pdf_is_sorted(pdf):
+            if validate_sorted:
+                raise ValueError("frame is not sorted by index columns")
+            # skip-sort: appends are usually presorted
+            pdf = pdf.sort_values(self.schema.idx, kind="stable")
+        return pa.Table.from_pandas(
             pdf,
             schema=self.schema.pyarrow_schema(),
             preserve_index=False,
@@ -636,127 +549,6 @@ class Series:
             # the conversion itself on small append chunks
             nthreads=1 if len(pdf) < 100_000 else None,
         )
-        return self._write_segment_files_table(table)
-
-    def _write_segment_files_table(self, table) -> tuple[str, str]:
-        """Driver-side twin of `_write_segment_files` for local inputs:
-        slice the sorted frame into PAGE_LEN chunks, write each as one
-        zstd parquet blob via pyarrow, sha1 + Merkle-combine into the
-        content address, publish through the FS verbs (works on every
-        backend — file, mem, HTTP). Same SKIP-WRITE dedup as the Spark
-        path: an existing segment directory short-circuits the publish."""
-        import hashlib
-        import io
-        from concurrent.futures import ThreadPoolExecutor
-
-        import pyarrow.parquet as pq
-
-        fs = self.collection.fs
-        seg_prefix = self.collection.seg_prefix
-        fs.makedirs(seg_prefix)
-        # drop schema metadata (from_pandas attaches a b'pandas' JSON
-        # blob that embeds the pandas VERSION): content addresses must
-        # be a function of the data alone — identical whether the write
-        # came through the arrow fast path, the pandas path, or a
-        # future library version
-        if table.schema.metadata:
-            table = table.replace_schema_metadata(None)
-        # Encodings: DELTA_BINARY_PACKED for the integer-backed columns
-        # (int/timestamp/date — near-free on sorted index grids, ~0 bytes
-        # for regular series), dictionary for strings, PLAIN for doubles
-        # (Spark's vectorized reader rejects BYTE_STREAM_SPLIT; delta-v1
-        # pages it reads fine — measured 30-40% smaller than its own
-        # dictionary/PLAIN output on timestamp+double data).
-        enc = {
-            n_: "DELTA_BINARY_PACKED"
-            for n_, a in self.schema.columns.items()
-            if a in ("int", "timestamp", "date")
-        }
-        enc.update(
-            {
-                n_: "PLAIN"
-                for n_, a in self.schema.columns.items()
-                if a == "float"
-            }
-        )
-        dict_cols = [
-            n_ for n_, a in self.schema.columns.items() if a == "str"
-        ]
-        n = len(table)
-        n_parts = max(1, -(-n // PAGE_LEN))
-        part_len = PAGE_LEN
-        if n_parts == 1 and n >= PAGE_LEN // 2:
-            # A single near-full page is encode-LATENCY-bound: parquet
-            # encodes one file on one thread, so a 500k-row append pays
-            # the whole codec cost serially. Split it into two half
-            # pages and let the pool below overlap the encodes (round
-            # 12, VERDICT r11 #2 — measured 14.5 -> ~8 ms on the
-            # frag-500k commit path). Layout stays under the PAGE_LEN
-            # cap and the content address stays a deterministic
-            # function of the data (same data -> same two slices).
-            # ONE-TIME upgrade hazard (ADVICE r12): 250k-500k-row
-            # writes staged as ONE segment before this change, so the
-            # same rows now produce different content addresses —
-            # "same data -> double-write no-op" does not hold ACROSS
-            # the version boundary. A checkpointed foreachBatch /
-            # Series.write microbatch replayed after upgrading commits
-            # a duplicate revision instead of deduping; drain
-            # replay-sensitive streams before upgrading (NOTES.md
-            # "r12 half-page split" entry).
-            n_parts, part_len = 2, -(-n // 2)
-
-        def write_chunk(i: int) -> tuple[str, bytes]:
-            chunk = table.slice(i * part_len, part_len)
-            buf = io.BytesIO()
-            pq.write_table(
-                chunk,
-                buf,
-                # per-column codec hints from the schema mini-language
-                # ("str*|gzip") override the zstd default where given
-                compression=self.schema.parquet_compression(),
-                use_dictionary=dict_cols,
-                column_encoding=enc,
-                # NaN-bearing float columns must not publish min/max
-                # (see _nan_safe_stat_columns) — per CHUNK, so blob
-                # bytes (= content addresses) stay identical to the
-                # pre-refactor per-chunk writer
-                write_statistics=_nan_safe_stat_columns(chunk),
-            )
-            b = buf.getvalue()
-            return hashlib.sha1(b).hexdigest(), b  # noqa: S324 - address
-
-        if n_parts == 1:
-            pairs = [write_chunk(0)]
-        else:  # pyarrow releases the GIL during encode/compress
-            with ThreadPoolExecutor(max_workers=min(n_parts, 16)) as ex:
-                pairs = list(ex.map(write_chunk, range(n_parts)))
-        digests = [d for d, _ in pairs]
-        blobs = [b for _, b in pairs]
-        digest = fs.combine_sha1(digests)
-        name = digest[:20]
-        final_rel = f"{seg_prefix}/{name}"
-        if not fs.exists(final_rel):
-            # Stage under a hextime-stamped `_tmp-` dir then move,
-            # like the Spark path: GC leaves young `_tmp-` (in-flight)
-            # dirs alone and ages out crashed writers' leftovers after
-            # the grace period, whereas publishing
-            # file-by-file into the final dir races a concurrent gc()'s
-            # soft-delete rename mid-write (caught by the chaos suite).
-            from lakota_spark.changelog import staging_name
-
-            tmp_rel = f"{seg_prefix}/{staging_name(uuid.uuid4().hex)}"
-            for i, b in enumerate(blobs):
-                fs.write_bytes_atomic(
-                    f"{tmp_rel}/part-{i:05d}.parquet", b
-                )
-            try:
-                fs.move(tmp_rel, final_rel)
-            except Exception:
-                if fs.exists(final_rel):  # identical-content racer won
-                    fs.remove_tree(tmp_rel)
-                else:
-                    raise
-        return name, digest
 
     # --------------------------------------------------------------- write
 
@@ -780,10 +572,10 @@ class Series:
         (`tests/series_test.py:251-371` semantics). Empty data + explicit
         bounds = range delete.
 
-        The write runs two jobs over the input (bounds/count stats, then
-        the file write — the count pins a session-independent partition
-        layout, which content-addressing depends on). ``checkpoint``
-        controls whether the input is materialized once between them via
+        A DataFrame input may be evaluated twice: by the sortedness check
+        that picks between the pre-sorted path and a global sort (see
+        `_stage_df`), then by the write itself. ``checkpoint`` controls
+        whether the input is materialized once between them via
         ``localCheckpoint(eager=False)``; default (None) auto-enables it
         when the input is a DataFrame whose plan contains a shuffle —
         i.e. exactly when recomputing it would repeat real work. Pass
@@ -791,99 +583,31 @@ class Series:
         narrow transforms the heuristic can't see).
         """
         # Fully driver-local fast path: a dict/pandas input whose dtypes
-        # are already engine-ready never touches Spark at all — cast,
-        # sort, slice into PAGE_LEN parquet parts and content-address on
-        # the driver (vectorized pandas/pyarrow). This is the data-local
-        # choice, not a shortcut: the bytes are already in driver memory,
-        # so a cluster round-trip (createDataFrame → shuffle → executor
-        # write → digest job) adds 4-5 scheduler latencies of pure
-        # overhead per append. Small frequent appends — the reference's
-        # fragmentation bench (`bench/bench_fragmentation.py`) — hit this
-        # path at ~ms cost; genuinely distributed inputs (DataFrames)
-        # keep the executor-side write and sha1.
-        df = pdf = None
-        local_pdf = local_tbl = None
-        if isinstance(data, dict):
-            # dict-of-numpy engine-ready columns: straight to arrow,
-            # zero pandas copies (the frag-rung fast path)
-            fast = self._local_cast_arrow(data, validate_sorted)
-            if fast is not None:
-                local_tbl, n, lo, hi = fast
-        if local_tbl is None and not isinstance(data, DataFrame):
-            import pandas as pd
-
-            pdf0 = None
-            if isinstance(data, dict):
-                pdf0 = pd.DataFrame(data)
-            elif isinstance(data, pd.DataFrame):
-                pdf0 = data
-            if pdf0 is not None and len(pdf0) > 0:
-                local_pdf = self._local_cast(pdf0)
-        if local_tbl is not None:
-            pass  # n/lo/hi already set; table sorted by _local_cast_arrow
-        elif local_pdf is not None:
-            if not self._pdf_is_sorted(local_pdf):
-                if validate_sorted:
-                    raise ValueError(
-                        "frame is not sorted by index columns"
-                    )
-                # skip-sort: appends are usually presorted
-                local_pdf = local_pdf.sort_values(
-                    self.schema.idx, kind="stable"
-                )
-            # reset_index deep-copies every column (~0.2 s on the 80 MB
-            # bench frame) — skip it when the index is already trivial
-            import pandas as pd
-
-            idx = local_pdf.index
-            if not (
-                isinstance(idx, pd.RangeIndex)
-                and idx.start == 0
-                and idx.step == 1
-            ):
-                local_pdf = local_pdf.reset_index(drop=True)
-            n = len(local_pdf)
-            lo = self._local_bound(local_pdf.iloc[0])
-            hi = self._local_bound(local_pdf.iloc[-1])
+        # are already engine-ready never touches Spark at all — the bytes
+        # are already in driver memory, so a cluster round-trip would add
+        # scheduler latencies of pure overhead per append (the
+        # reference's fragmentation bench, `bench/bench_fragmentation.py`,
+        # is this shape). Everything else encodes on the executors.
+        table = None
+        if not isinstance(data, DataFrame):
+            table = self._local_table(data, validate_sorted)
+        if table is not None:
+            pages = segwriter.encode(table, self.schema)
         else:
-            df, pdf = self._coerce_df_local(data)
+            df = self._coerce_df(data)
             if checkpoint is None:
                 checkpoint = isinstance(
                     data, DataFrame
                 ) and "Exchange" in _physical_plan_str(df)
             if checkpoint:
                 df = df.localCheckpoint(eager=False)
-            # driver-local inputs (dict/pandas) with engine-ready index
-            # dtypes skip the Spark stats job — one job per write, not two
-            local = self._local_stats(pdf) if pdf is not None else None
-            if local is not None:
-                n, local_lo, local_hi = local
-            else:
-                # Pure-DataFrame input: SINGLE-PASS executor write. The
-                # old flow ran a dedicated count/min/max job before the
-                # write — a whole extra read of the input, which at
-                # cluster scale doubles the scan cost of every bulk
-                # ingest. Write first (sorted, PAGE_LEN-capped files),
-                # then take n/lo/hi from the written files' footers and
-                # edge rows. Bound-validation failures below leave the
-                # published segment dir uncommitted — content-addressed
-                # garbage the two-phase gc collects.
-                if validate_sorted:
-                    self._assert_sorted(df)
-                (
-                    exec_path,
-                    exec_digest,
-                    n,
-                    exec_lo,
-                    exec_hi,
-                    exec_zmap,
-                ) = self._write_segment_files_df(
-                    df, known_sorted=validate_sorted
-                )
+            if validate_sorted:
+                self._assert_sorted(df)
+            pages = self._stage_df(df, known_sorted=validate_sorted)
         start_closed, stop_closed = CLOSED[closed]
         start = self.schema.coerce_bound(start)
         stop = self.schema.coerce_bound(stop)
-        if n == 0:
+        if pages.n == 0:
             if start is None or stop is None:
                 return None  # nothing to do
             return self._commit_segment(
@@ -898,68 +622,51 @@ class Series:
                 ),
                 root=root,
             )
-        if local_tbl is None and local_pdf is None:
-            if local is not None:
-                lo, hi = tuple(local_lo), tuple(local_hi)
-            else:
-                lo, hi = exec_lo, exec_hi
-        # explicit bounds may only widen (reference asserts containment,
-        # `lakota/series.py:117-121`): narrower bounds would silently hide
-        # rows of the new segment at read time while length=n still counts
-        # them (meta_len/tail pruning would overstate)
-        eff_start = start if start is not None else lo
-        eff_stop = stop if stop is not None else hi
-        if len(eff_start) != len(self.schema.idx) or len(eff_stop) != len(
-            self.schema.idx
-        ):
-            raise ValueError("write bounds must cover every index column")
-        if start is not None and (
-            tuple(start) > lo or (tuple(start) == lo and not start_closed)
-        ):
-            raise ValueError(
-                f"start bound {start!r} excludes data rows (min index {lo!r})"
-            )
-        if stop is not None and (
-            tuple(stop) < hi or (tuple(stop) == hi and not stop_closed)
-        ):
-            raise ValueError(
-                f"stop bound {stop!r} excludes data rows (max index {hi!r})"
-            )
-        if validate_sorted and local_pdf is None and local is not None:
-            self._assert_sorted(df)
-
-        from lakota_spark import zonemap
-
-        zmap = None
-        if local_tbl is not None:
-            path, digest = self._write_segment_files_table(local_tbl)
-            zmap = zonemap.compute_from_arrow(
-                local_tbl, self.schema.idx, dict(self.schema.columns)
-            )
-        elif local_pdf is not None:
-            path, digest = self._write_segment_files_local(local_pdf)
-            zmap = zonemap.compute_from_pdf(local_pdf, self.schema)
-        elif local is None:
-            path, digest = exec_path, exec_digest  # already written above
-            zmap = exec_zmap
-        else:
-            path, digest = self._write_segment_files(df, n)
-            if pdf is not None:
-                zmap = zonemap.compute_from_pdf(pdf, self.schema)
+        lo, hi = pages.lo, pages.hi
+        fs = self.collection.fs
+        try:
+            # explicit bounds may only widen (reference asserts
+            # containment, `lakota/series.py:117-121`): narrower bounds
+            # would silently hide rows of the new segment at read time
+            # while length=n still counts them
+            if (start is not None and len(start) != len(lo)) or (
+                stop is not None and len(stop) != len(hi)
+            ):
+                raise ValueError("write bounds must cover every index column")
+            if start is not None and (
+                tuple(start) > lo or (tuple(start) == lo and not start_closed)
+            ):
+                raise ValueError(
+                    f"start bound {start!r} excludes data rows "
+                    f"(min index {lo!r})"
+                )
+            if stop is not None and (
+                tuple(stop) < hi or (tuple(stop) == hi and not stop_closed)
+            ):
+                raise ValueError(
+                    f"stop bound {stop!r} excludes data rows "
+                    f"(max index {hi!r})"
+                )
+        except ValueError:
+            segwriter.discard(fs, pages)
+            raise
+        path, digest = segwriter.publish(
+            fs, self.collection.seg_prefix, pages
+        )
         meta = {"digest": digest}
-        if zmap:
+        if pages.zmap:
             # value-column zone map: consulted by frame()/df() masked
             # reads to skip whole segments (zonemap.prune)
-            meta["zmap"] = zmap
+            meta["zmap"] = pages.zmap
         return self._commit_segment(
             Segment(
                 label=self.label,
-                start=eff_start,
-                stop=eff_stop,
+                start=start if start is not None else lo,
+                stop=stop if stop is not None else hi,
                 start_closed=start_closed if start is not None else True,
                 stop_closed=stop_closed if stop is not None else True,
                 path=path,
-                length=n,
+                length=pages.n,
                 meta=meta,
             ),
             root=root,
@@ -1028,78 +735,43 @@ class Series:
         plus one narrow per-pid exchange of those columns only: at
         cluster scale that is a sliver of the bytes the skipped
         range-sample + full-row sort shuffle would touch, which is why
-        the pre-sorted fast path in `_write_segment_files_df` pays it
-        unconditionally."""
+        the pre-sorted fast path in `_stage_df` pays it unconditionally."""
         try:
             self._assert_sorted(df)
         except ValueError:
             return False
         return True
 
-    def _write_segment_files(self, df: DataFrame, n_rows: int) -> tuple[str, str]:
-        """Write sorted Parquet, content-address the result.
+    def _stage_df(self, df: DataFrame, known_sorted: bool = False):
+        """Encode a cast DataFrame into one staged segment on the
+        executors: one `segwriter.encode` per partition inside a single
+        `mapInArrow` job; only digests, bounds and zone maps come back
+        to the driver (which then `segwriter.publish`es). Partition ``p``
+        writes ``part-<p:05d>-<page:05d>.parquet`` into one shared
+        ``_tmp-`` dir, so the sorted file order (`_ordered_scan`) is the
+        row order and the Merkle order. Where executors cannot open the
+        store (``arrow_readable`` False: HTTP, memory, cache-wrapped),
+        the tasks return their pages and the driver publishes the same
+        bytes through the FS verbs.
 
-        Range-partition so files carry disjoint, sorted index ranges (file
-        min/max stats then prune exactly like the reference's per-segment
-        bounds). The directory is renamed to the sha1 of its contents —
-        identical data written twice lands on the same path and the second
-        write is dropped (reference SKIP-WRITE, `lakota/pod.py:201-204`).
-        """
-        n_parts = max(1, -(-n_rows // PAGE_LEN))
-        idx_cols = [F.col(c) for c in self.schema.idx]
-        out = (
-            df.repartitionByRange(n_parts, *idx_cols)
-            .sortWithinPartitions(*idx_cols)
-            if n_parts > 1
-            else df.coalesce(1).sortWithinPartitions(*idx_cols)
-        )
-        name, digest = self._publish_parts(out)
-        return name, digest
-
-    def _write_segment_files_df(self, df: DataFrame, known_sorted: bool = False):
-        """Single-pass executor write (round 7): globally range-sort,
-        write PAGE_LEN-capped sorted parquet files, then derive n/lo/hi
-        from the written files (`_files_stats`) — no prior stats job, so
-        the input is read ONCE (plus the range sampler) instead of
-        twice. At cluster scale the dropped stats job is a whole extra
-        scan of every bulk ingest.
-
-        Round 8 (r7 ask #6): ALREADY-SORTED input — the common
-        append-ingest shape — skips the sort entirely: a narrow
-        column-pruned boundary check (`_df_presorted`, or
-        ``known_sorted=True`` when `write(validate_sorted=True)` has
+        ALREADY-SORTED input — the common append-ingest shape — skips
+        the sort: a narrow column-pruned boundary check (`_df_presorted`,
+        or ``known_sorted=True`` when `write(validate_sorted=True)` has
         just proven it) costs one idx-column pass, and on success the
-        input's own partition layout is written as-is — no range
-        sampler, no full-width shuffle. Gated on a sane input layout
-        (see the inline comment): over-partitioned input and
-        narrow-row frames go through the unchanged sort path, where
-        the range exchange doubles as compaction and the skipped
-        sampler is a minority cost (measured — NOTES r8).
+        input's own partition layout is written as-is. Gated on a sane
+        layout: confetti inputs (a 526-slice createDataFrame measured 526
+        tiny files) go through ``df.sort``, whose range exchange is also
+        the compaction; on a narrow (timestamp, float) frame the check
+        shuffle ≈ the sort it would skip, and the partition gate keeps
+        the check off exactly the shapes where it cannot win (NOTES r8).
 
-        Content addressing is unchanged (per-file sha1 job, Merkle
-        combine, SKIP-WRITE dedup). The file layout — and hence the
-        address — is deterministic for a given input partitioning on
-        BOTH paths (the sorted path preserves input partitions; the
-        sort path's range boundaries come from Spark's seeded reservoir
-        sampler); the two paths may address the same rows differently,
-        exactly as the driver-local and executor paths already do —
-        SKIP-WRITE dedup is per-path, correctness never depends on it.
+        The layout — hence the address — is deterministic for a given
+        input partitioning on both paths (the sort's range boundaries
+        come from Spark's seeded reservoir sampler). A one-partition
+        sorted input addresses exactly like a driver-local write."""
+        import pickle
 
-        Returns ``(name, digest, n, lo, hi, zmap)``; empty input
-        returns ``(None, None, 0, None, None, None)`` with nothing
-        published.
-        """
         idx_cols = [F.col(c) for c in self.schema.idx]
-        # The fast path keeps the INPUT partition layout, so it is only
-        # taken when that layout is sane (≤ 2x parallelism): confetti
-        # inputs (a 526-slice createDataFrame measured 526 tiny segment
-        # files) still go through the sort, whose range exchange is also
-        # the compaction. And the auto-check only pays when the index is
-        # a sliver of the row (text-wide tables): on a narrow
-        # (timestamp, float) frame the idx-only check shuffle ≈ the full
-        # sort it would skip (measured 0.9 s check vs 0.5 s sort at
-        # 5.26M rows) — the partition gate keeps the check off exactly
-        # the shapes where it cannot win.
         try:
             sc = df.sparkSession.sparkContext
             sane_parts = 0 < df.rdd.getNumPartitions() <= 2 * max(
@@ -1109,195 +781,21 @@ class Series:
             # introspection; take the sort path, whose range exchange
             # is also the compaction (always correct, never confetti)
             sane_parts = False
-        out = (
-            df
-            if sane_parts and (known_sorted or self._df_presorted(df))
-            else df.sort(*idx_cols)
-        )
-        return self._publish_parts(
-            out, max_records=PAGE_LEN, with_stats=True
-        )
-
-    def _publish_parts(
-        self,
-        out: DataFrame,
-        max_records: int | None = None,
-        with_stats: bool = False,
-    ):
-        """Shared staging/digest/publish tail of both segment-write
-        paths: write ``out`` to a staging location, content-address the
-        part files, publish under ``segments/<sha1[:20]>`` with
-        SKIP-WRITE dedup (reference `lakota/pod.py:201-204`).
-
-        NB: the address hashes CONTENT only — Spark part-file names
-        embed a random UUID. Per-file sha1 runs as a distributed job on
-        the executors (no segment bytes through the driver); only the
-        40-char digests are collected and Merkle-combined. On a
-        non-Hadoop backend (HTTP repo) Spark writes to LOCAL staging —
-        still distributed compute, local disk IO — and the part files
-        publish through the FS verbs; identical bytes/ordering to the
-        direct path, so content addresses agree across backends
-        (push/pull dedup relies on this).
-
-        ``with_stats=True`` also derives ``(n, lo, hi, zmap)`` from
-        the written files (`_files_stats` — the value-column zone map
-        rides the footers that are already open) and returns the
-        6-tuple ``(name, digest, n, lo, hi, zmap)`` —
-        ``(None, None, 0, None, None, None)`` for empty input, with
-        nothing published. Otherwise returns ``(name, digest)``.
-        """
+        if not (sane_parts and (known_sorted or self._df_presorted(df))):
+            df = df.sort(*idx_cols)
         fs = self.collection.fs
-        seg_prefix = self.collection.seg_prefix
-        fs.makedirs(seg_prefix)
-
-        def write_to(uri: str) -> None:
-            w = out.write.mode("overwrite")
-            if max_records is not None:
-                w = w.option("maxRecordsPerFile", max_records)
-            w.parquet(uri)
-
-        def address_and_publish(staging_fs, staging_rel, publish):
-            parts = sorted(
-                p
-                for p in staging_fs.ls(staging_rel)
-                if p.endswith(".parquet")
-            )
-            stats = None
-            if with_stats:
-                stats = self._files_stats(staging_fs, staging_rel, parts)
-                if stats[0] == 0:
-                    return None, None, 0, None, None, None
-            pref = f"{staging_rel}/" if staging_rel else ""
-            digest = fs.combine_sha1(
-                staging_fs.files_sha1(
-                    [pref + p for p in parts], spark=out.sparkSession
-                )
-            )
-            name = digest[:20]
-            publish(name, parts)
-            return (name, digest, *stats) if with_stats else (name, digest)
-
-        if fs.spark_readable:
-            from lakota_spark.changelog import staging_name
-
-            tmp_rel = f"{seg_prefix}/{staging_name(uuid.uuid4().hex)}"
-            write_to(fs.spark_uri(tmp_rel))
-
-            def publish_move(name, parts):
-                final_rel = f"{seg_prefix}/{name}"
-                if fs.exists(final_rel):
-                    fs.remove_tree(tmp_rel)  # content dedup: exists
-                else:
-                    fs.move(tmp_rel, final_rel)
-
-            result = address_and_publish(fs, tmp_rel, publish_move)
-            if with_stats and result[0] is None:
-                fs.remove_tree(tmp_rel)  # empty input: nothing published
-            return result
-        import shutil
-        import tempfile
-
-        staging = tempfile.mkdtemp(prefix="lakota-stage-")
-        try:
-            write_to("file://" + staging)
-            local = FS(staging)
-
-            def publish_copy(name, parts):
-                final_rel = f"{seg_prefix}/{name}"
-                if not fs.exists(final_rel):
-                    for part in parts:
-                        fs.write_bytes_atomic(
-                            f"{final_rel}/{part}", local.read_bytes(part)
-                        )
-
-            return address_and_publish(local, "", publish_copy)
-        finally:
-            shutil.rmtree(staging, ignore_errors=True)
-
-    def _files_stats(self, fs, dir_rel: str, parts: list[str]):
-        """``(n, lo, hi, zmap)`` straight from just-written SORTED
-        segment files: footers give exact per-file row counts, and
-        because the files are range-partitioned and internally sorted,
-        the global min/max index tuples are the FIRST row of the first
-        non-empty file and the LAST row of the last one — exact for
-        every index type including strings (parquet column statistics
-        may be truncated; actual edge rows never are). The value-column
-        zone map (`zonemap.compute_from_parquet_meta`, numeric columns
-        only) reuses the same already-open footers. Driver-side cost:
-        one footer read per file plus two partial row reads."""
-        import datetime as dtmod
-
-        import pyarrow.parquet as pq
-
-        pafs = getattr(fs, "fs", None)  # pyarrow filesystem handle
-
-        def open_pf(p):
-            rel = f"{dir_rel}/{p}" if dir_rel else p
-            full = fs.full(rel)
-            if pafs is not None:
-                return pq.ParquetFile(pafs.open_input_file(full))
-            return pq.ParquetFile(full)
-
-        idx = list(self.schema.idx)
-        pfs = []
-        try:
-            counts = []
-            for p in parts:
-                pf = open_pf(p)
-                pfs.append(pf)
-                counts.append(pf.metadata.num_rows)
-            n = sum(counts)
-            if n == 0:
-                return 0, None, None, None
-            from lakota_spark import zonemap
-
-            zmap = zonemap.compute_from_parquet_meta(
-                [pf.metadata for pf in pfs], self.schema
-            )
-            first = next(pf for pf, c in zip(pfs, counts) if c)
-            last = next(
-                pf for pf, c in zip(reversed(pfs), reversed(counts)) if c
-            )
-            lo_row = next(
-                first.iter_batches(batch_size=1, columns=idx)
-            ).to_pylist()[0]
-            rg = last.metadata.num_row_groups - 1
-            while last.metadata.row_group(rg).num_rows == 0:
-                rg -= 1
-            tbl = last.read_row_group(rg, columns=idx)
-            hi_row = tbl.slice(tbl.num_rows - 1, 1).to_pylist()[0]
-        finally:
-            for pf in pfs:
-                try:
-                    pf.close()
-                except Exception:
-                    pass
-
-        def norm(v):
-            # normalize to the plain-datetime bound types the Spark-Row
-            # and driver-local paths produce: pyarrow surfaces
-            # pd.Timestamp for ns-unit (INT96) files and may carry a tz
-            # depending on the parquet annotation
-            if isinstance(v, dtmod.datetime):
-                if v.tzinfo is not None:
-                    v = v.astimezone(dtmod.timezone.utc).replace(
-                        tzinfo=None
-                    )
-                if type(v) is not dtmod.datetime:  # pd.Timestamp subclass
-                    v = dtmod.datetime(
-                        v.year,
-                        v.month,
-                        v.day,
-                        v.hour,
-                        v.minute,
-                        v.second,
-                        v.microsecond,
-                    )
-            return v
-
-        lo = tuple(norm(lo_row[c]) for c in idx)
-        hi = tuple(norm(hi_row[c]) for c in idx)
-        return n, lo, hi, zmap
+        uri = tmp_rel = None
+        if getattr(fs, "arrow_readable", False):
+            uri = fs.uri
+            tmp_rel = segwriter.new_staging_rel(self.collection.seg_prefix)
+        rows = df.mapInArrow(
+            segwriter.partition_task(self.schema, uri, tmp_rel),
+            "pid int, pages binary",
+        ).collect()
+        rows.sort(key=lambda r: r["pid"])
+        return segwriter.combine(
+            [pickle.loads(r["pages"]) for r in rows], tmp_rel
+        )
 
     def _commit_segment(self, seg: Segment, root: bool = False):
         return self.collection.apply_segments([seg], root=root)
@@ -1707,7 +1205,7 @@ class Series:
         return pdf
 
     def _read_run_local(self, segs: list[Segment]):
-        """Driver-local pandas frame of a CLEAN segment run — the defrag
+        """Driver-local arrow table of a CLEAN segment run — the defrag
         fast path: a fragmented run is thousands of tiny files whose
         total bytes are driver-sized, so rewriting it through a Spark
         job pays pure scheduler/discovery overhead (measured 37.6 s for
@@ -1774,33 +1272,10 @@ class Series:
 
             with ThreadPoolExecutor(max_workers=min(16, len(files))) as ex:
                 tables = list(ex.map(read_one, files))
-        pa_ns = {
-            "timestamp": pa.timestamp("ns"),
-            "date": pa.date32(),
-            "int": pa.int64(),
-            "float": pa.float64(),
-            "str": pa.string(),
-        }
-        target = pa.schema(
-            [(c, pa_ns[self.schema.columns[c]]) for c in cols]
+        return segwriter.conform(
+            pa.concat_tables(tables, promote_options="permissive"),
+            self.schema,
         )
-        tbl = (
-            pa.concat_tables(tables, promote_options="permissive")
-            .select(cols)
-            .cast(target)
-        )
-        # the pandas hop below folds real NaN into null
-        # (`Table.from_pandas` on the rewrite cannot tell them apart) —
-        # a defrag must not corrupt Spark-written NaN data, so such
-        # runs take the Spark rewrite path instead
-        import pyarrow.compute as pc
-
-        for c in cols:
-            if self.schema.columns[c] == "float" and pc.any(
-                pc.is_nan(tbl.column(c))
-            ).as_py():
-                return None
-        return tbl.to_pandas(self_destruct=True)
 
     def _pandas_bound_mask(self, pdf, bound, closed: bool, is_start: bool):
         """Pandas twin of `_bound_pred`: lexicographic prefix compare
@@ -1969,9 +1444,9 @@ class Series:
         Python (file splits are bin-packed by size, losing file order),
         so ``frame(sort=True)`` historically paid a full range-exchange
         Sort that is pure overhead: clean segments are pairwise disjoint,
-        interval-ordered in the snapshot, and internally sorted (the
-        write path range-partitions + sorts, `_files_stats` relies on
-        it). This scan exploits that: the ordered part-file list is
+        interval-ordered in the snapshot, and internally sorted (every
+        writer encodes sorted rows, and part-file names sort in row
+        order — `_stage_df`). This scan exploits that: the ordered part-file list is
         packed into interval-contiguous partitions of a `mapInArrow`
         relation, each partition reads its files with pyarrow IN ORDER,
         and partition order == global sort order — so collect / limit /
@@ -2280,12 +1755,10 @@ class Series:
 
         # lenient coercion: an update frame carries the index plus a SUBSET
         # of value columns — cast only what is present
-        pdf = None
         if not isinstance(data, DataFrame):
             import pandas as pd
 
-            pdf = pd.DataFrame(dict(data))
-            data = self.spark.createDataFrame(pdf)
+            data = self.spark.createDataFrame(pd.DataFrame(dict(data)))
         types = self.schema.struct_type()
         upd = data.select(
             *[
@@ -2298,16 +1771,11 @@ class Series:
         if missing_idx:
             raise ValueError(f"update frame missing index columns {missing_idx}")
         update_cols = [c for c in self.schema.values if c in upd.columns]
-        local = self._local_stats(pdf) if pdf is not None else None
-        if local is not None and local[0] > 0:
-            _, lo, hi = local
-            lo, hi = tuple(lo), tuple(hi)
-        else:
-            stats = upd.agg(
-                F.min(self._idx_struct()).alias("lo"),
-                F.max(self._idx_struct()).alias("hi"),
-            ).collect()[0]
-            lo, hi = tuple(stats["lo"]), tuple(stats["hi"])
+        stats = upd.agg(
+            F.min(self._idx_struct()).alias("lo"),
+            F.max(self._idx_struct()).alias("hi"),
+        ).collect()[0]
+        lo, hi = tuple(stats["lo"]), tuple(stats["hi"])
         # sort=False: update_zerofill joins on the index and write()
         # range-partitions + sorts anyway — row order here is irrelevant
         base = self.frame(start=lo, stop=hi, sort=False)
@@ -2497,15 +1965,18 @@ class KVSeries(Series):
         lo = min(tuple(s.start) for s in segs)
         hi = max(tuple(s.stop) for s in segs)
         seq = snap.max_seq + 1
-        n = df.count()
-        if n == 0:
+        pages = self._stage_df(df)
+        if pages.n == 0:
             self._commit_segment(
                 Segment(self.label, lo, hi, True, True, None, 0)
             )
             return
-        path, digest = self._write_segment_files(df, n)
+        path, digest = segwriter.publish(
+            self.collection.fs, self.collection.seg_prefix, pages
+        )
         seg = Segment(
-            self.label, lo, hi, True, True, path, n, seq, {"digest": digest}
+            self.label, lo, hi, True, True, path, pages.n, seq,
+            {"digest": digest},
         )
         # force non-KV overlay so older key versions are shadowed; the
         # KV table holds OVERLAPPING segments, so the windowed fast path

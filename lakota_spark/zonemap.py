@@ -7,16 +7,14 @@ materialized aggregate trick, and at 100 TB the difference between
 "open every segment's footers and let row-group stats prune" and
 "never even list the files".
 
-Sources of the stats:
-
-* driver-local writes compute exact min/max/has-null from the pandas
-  frame (int/float/str; strings capped at 64 chars — a truncated MIN
-  is still a valid lower bound but a truncated MAX is not, so long
-  strings just drop the column);
-* executor writes reuse the parquet footers `_files_stats` ALREADY
-  opens (zero extra IO) — numeric columns only, because parquet string
-  statistics may be writer-truncated and are not trustworthy as tight
-  bounds.
+Source of the stats: the one segment writer (`segwriter.encode`)
+computes exact min/max/has-null from the arrow table it encodes
+(`compute_from_arrow`; int/float/str, strings capped at 64 chars — a
+truncated MIN is still a valid lower bound but a truncated MAX is not,
+so long strings just drop the column), on whichever side of the cluster
+the table lives. A segment written by several tasks merges their maps
+(`merge`: exact min/max, possibly dropping a column one task could not
+bound).
 
 Pruning logic is a may/must dual over the `sexpr.to_filter_plan` IR:
 ``may(plan)`` is True when SOME row could satisfy the mask (False ⇒
@@ -46,129 +44,6 @@ def _ok_num(v) -> bool:
     if isinstance(v, bool) or not isinstance(v, (int, float)):
         return False
     return not (isinstance(v, float) and not math.isfinite(v))
-
-
-def compute_from_pdf(pdf, schema) -> dict | None:
-    """Exact zone map from a driver-local frame: value columns of type
-    int/float/str -> [min, max, has_null].  Columns whose bounds are
-    not JSON-safe tight bounds (long strings, non-finite floats, all
-    null) are omitted."""
-    out = {}
-    for col, kind in schema.columns.items():
-        if col in schema.idx or kind not in ("int", "float", "str"):
-            continue
-        s = pdf[col]
-        has_null = bool(s.isna().any())
-        if kind == "str":
-            sv = s.dropna()
-            if len(sv) == 0:
-                continue
-        else:
-            # numeric: min/max skip NaN natively — no dropna COPY (the
-            # copy was ~40 ms of a bulk 5M-row write)
-            sv = s
-            if has_null and not s.notna().any():
-                continue
-        try:
-            lo, hi = sv.min(), sv.max()
-        except TypeError:
-            continue
-        if kind == "str":
-            lo, hi = str(lo), str(hi)
-            if not (_ok_str(lo) and _ok_str(hi)):
-                continue
-        else:
-            lo = lo.item() if hasattr(lo, "item") else lo
-            hi = hi.item() if hasattr(hi, "item") else hi
-            # coerce to the SCHEMA kind, not the raw input dtype: the
-            # must()-side NaN rule keys off float-typed bounds, so a
-            # float column fed python ints must not masquerade as int
-            try:
-                lo, hi = (
-                    (float(lo), float(hi))
-                    if kind == "float"
-                    else (int(lo), int(hi))
-                )
-            except (TypeError, ValueError):
-                continue
-            if not (_ok_num(lo) and _ok_num(hi)):
-                continue
-        out[col] = [lo, hi, has_null]
-    return out or None
-
-
-def compute_from_parquet_meta(metas, schema) -> dict | None:
-    """Zone map from just-written parquet footers (list of
-    ``pyarrow.parquet.FileMetaData``): numeric value columns only; a
-    column survives only if EVERY non-empty row group carries min/max
-    stats (or is all-null).  Zero extra IO — the caller already holds
-    the footers."""
-    want = {
-        col: kind
-        for col, kind in schema.columns.items()
-        if col not in schema.idx and kind in ("int", "float")
-    }
-    if not want:
-        return None
-    acc: dict[str, list] = {}
-    dead: set[str] = set()
-    for md in metas:
-        names = {
-            md.schema.column(i).name: i for i in range(md.num_columns)
-        }
-        for col in want:
-            if col in dead:
-                continue
-            ci = names.get(col)
-            if ci is None:
-                dead.add(col)
-                continue
-            for rg in range(md.num_row_groups):
-                g = md.row_group(rg)
-                if g.num_rows == 0:
-                    continue
-                st = g.column(ci).statistics
-                if st is None:
-                    dead.add(col)
-                    break
-                nulls = st.null_count
-                has_null = nulls is None or nulls > 0
-                if nulls is not None and nulls == g.num_rows:
-                    if has_null and col in acc:
-                        acc[col][2] = True
-                    elif has_null:
-                        acc[col] = [None, None, True]
-                    continue  # all-null group: no bounds to offer
-                if not st.has_min_max:
-                    dead.add(col)
-                    break
-                try:
-                    lo, hi = (
-                        (float(st.min), float(st.max))
-                        if want[col] == "float"
-                        else (int(st.min), int(st.max))
-                    )
-                except (TypeError, ValueError):
-                    dead.add(col)
-                    break
-                if not (_ok_num(lo) and _ok_num(hi)):
-                    dead.add(col)
-                    break
-                cur = acc.get(col)
-                if cur is None:
-                    acc[col] = [lo, hi, has_null]
-                else:
-                    if cur[0] is None or lo < cur[0]:
-                        cur[0] = lo
-                    if cur[1] is None or hi > cur[1]:
-                        cur[1] = hi
-                    cur[2] = cur[2] or has_null
-    out = {
-        c: v
-        for c, v in acc.items()
-        if c not in dead and v[0] is not None
-    }
-    return out or None
 
 
 def _comparable(lit, lo) -> bool:
@@ -470,9 +345,10 @@ def merge(zmaps) -> dict | None:
 
 
 def compute_from_arrow(tbl, idx, aliases) -> dict | None:
-    """Exact zone map from an arrow table (executor-side in the data
-    source writer): same rules as `compute_from_pdf`, computed with
-    ``pc.min_max``.  NOTE ``pc.min_max`` SKIPS NaN (like pandas min/max
+    """Exact zone map from an arrow table: value columns of type
+    int/float/str -> [min, max, has_null]; columns whose bounds are not
+    JSON-safe tight bounds (long strings, non-finite floats, all null)
+    are omitted.  Computed with ``pc.min_max``.  NOTE ``pc.min_max`` SKIPS NaN (like pandas min/max
     and parquet footer stats), so float bounds never see NaN — which is
     exactly why `may_match` refuses to prune float columns on the
     ``>``/``>=``/``!=`` shapes a NaN row could satisfy."""
@@ -488,11 +364,10 @@ def compute_from_arrow(tbl, idx, aliases) -> dict | None:
             continue
         has_null = c.null_count > 0
         if not has_null and kind == "float":
-            # count NaN as has_null like the pandas twin (pd.isna):
-            # float round trips make None and NaN indistinguishable, so
-            # the conservative flag keeps isnull-mask pruning identical
-            # whichever write path produced the segment (and zone maps
-            # byte-identical across paths — pinned by tests)
+            # count NaN as has_null (like pd.isna): float round trips
+            # through pandas make None and NaN indistinguishable, so the
+            # conservative flag keeps isnull-mask pruning identical
+            # however the rows reached the writer
             has_null = bool(pc.any(pc.is_nan(c)).as_py())
         mm = pc.min_max(c)
         lo, hi = mm["min"].as_py(), mm["max"].as_py()

@@ -61,9 +61,13 @@ def test_branch_merge_newest_wins(repo):
     base = Snapshot.from_payload(leaf.read(), coll.schema)
 
     def fork_write(vals):
+        from lakota_spark import segwriter
+
         seg_series = coll.series("s")
         df = seg_series._coerce_df({"ts": [2], "value": [vals]})
-        path, digest = seg_series._write_segment_files(df, 1)
+        path, digest = segwriter.publish(
+            coll.fs, coll.seg_prefix, seg_series._stage_df(df)
+        )
         seg = Segment("s", (2,), (2,), True, True, path, 1)
         snap = base.overlay(seg)
         payload = snap.to_payload(coll.schema)

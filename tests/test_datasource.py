@@ -545,6 +545,7 @@ def test_writer_identical_content_partitions(spark, ds_repo):
     any union crafted to produce two identical partitions."""
     from lakota_spark.datasource import LakotaArrowWriter, _SegmentMsg
     from lakota_spark.fsio import FS
+    from lakota_spark.segwriter import Pages
 
     repo, _ = ds_repo
     coll = repo.create_collection(Schema(ts="int*", value="float"), "dup")
@@ -559,7 +560,10 @@ def test_writer_identical_content_partitions(spark, ds_repo):
     for i in range(2):
         tmp_rel = f"{coll.seg_prefix}/_tmp-race-{i}"
         repo.fs.write_bytes_atomic(f"{tmp_rel}/part-00000.parquet", blob)
-        msgs.append(_SegmentMsg(tmp_rel, [digest], 10, (0,), (9,)))
+        msgs.append(_SegmentMsg([Pages(
+            ["part-00000.parquet"], [digest], None, 10, (0,), (9,), None,
+            tmp_rel,
+        )]))
     w._overlay = True  # identical bounds overlap by definition
     w.commit(msgs)
     name = FS.combine_sha1([digest])[:20]

@@ -66,13 +66,17 @@ def test_r14_window_is_pure_staleness_rotation():
     """VERDICT r13 #7: with zero never-recorded entries after r13, the
     r14 window must be exactly the 24 last-r10 entries plus the 26
     alphabetically-first last-r11 entries, recomputed here from the
-    committed CORRECTNESS history — keeping every registry entry's last
-    driver row >= r11 after this round."""
+    CORRECTNESS history of the rounds BEFORE r14 (the history that
+    existed when the window was chosen; later rounds' files would move
+    the recipe under a window that is already fixed) — keeping every
+    registry entry's last driver row >= r11 after this round."""
     import re
 
     last = {}
     for path in sorted(glob.glob("/root/repo/CORRECTNESS_r*.json")):
         rnd = int(re.search(r"r(\d+)", path).group(1))
+        if rnd >= 14:
+            continue
         for k, v in json.load(open(path)).items():
             if isinstance(v, dict):
                 last[k] = rnd

@@ -108,7 +108,7 @@ def test_cachefs_wraps_any_backend(spark, tmp_path):
 def fake_remote(tmp_path):
     """Object-store stand-in (NOTES item 4): a pyarrow SubTreeFileSystem
     posing as a non-local, non-Hadoop remote — exercises the direct-PUT
-    write branch, copy+delete-safe naming, local staging write path and
+    write branch, copy+delete-safe naming, driver-published pages and
     CacheFS materialization without needing moto/boto."""
     from pyarrow import fs as pafs
 
@@ -123,7 +123,6 @@ def fake_remote(tmp_path):
     (tmp_path / "bucket").mkdir()
     remote.root = ""
     remote.is_local = False
-    remote.spark_readable = False
     return remote
 
 

@@ -1,6 +1,8 @@
-"""Property test: the driver-local stats fast path must agree with the
-Spark stats job for every index-dtype combination it accepts — segment
-bounds drive pruning, so a divergence is silent data loss."""
+"""Property test: the segment writer's bounds (``n``/``lo``/``hi`` from
+`segwriter.encode` over the driver-local table) must agree with Spark's
+count/min/max of the engine-cast frame for every index-dtype combination
+the driver-local path accepts — segment bounds drive pruning, so a
+divergence is silent data loss."""
 
 import datetime as dt
 
@@ -10,6 +12,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
+from lakota_spark import segwriter
 from lakota_spark.schema import Schema
 
 ints = st.lists(st.integers(-10**9, 10**9), min_size=1, max_size=8)
@@ -60,9 +63,10 @@ def test_local_stats_agree_with_spark(case, scratch, spark):
     @given(strategy)
     def check(vals):
         pdf = pd.DataFrame({"k": vals, "value": [0.0] * len(vals)})
-        local = series._local_stats(pdf)
-        assert local is not None, "fast path unexpectedly refused"
-        n, lo, hi = local
+        table = series._local_table(pdf)
+        assert table is not None, "driver-local path unexpectedly refused"
+        pages = segwriter.encode(table, series.schema)
+        n, lo, hi = pages.n, pages.lo, pages.hi
         df = series._coerce_df(pdf)
         row = df.agg(
             F.count(F.lit(1)).alias("n"),

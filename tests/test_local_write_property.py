@@ -6,7 +6,9 @@ dedup and the double-write no-op, so any divergence silently doubles
 storage or breaks idempotence. Covers dtype width variation
 (int32/uint32/int64, float32/float64, M8[s/ms/us/ns]), NaN (stored as
 parquet NULL on both paths), unsorted input (stable lexsort vs stable
-sort_values), and duplicate index values."""
+sort_values), and duplicate index values. Fixed inputs then pin the same
+identity across all four write paths (dict, pandas, `Series.write` of a
+Spark DataFrame, and the ``lakota`` data source)."""
 
 import numpy as np
 import pandas as pd
@@ -16,6 +18,7 @@ from hypothesis import strategies as st
 
 from lakota_spark.repo import Repo
 from lakota_spark.schema import Schema
+from lakota_spark.segwriter import PAGE_LEN
 
 _int_dtypes = st.sampled_from(["int32", "int64", "uint32"])
 _float_dtypes = st.sampled_from(["float32", "float64"])
@@ -90,3 +93,73 @@ def test_fast_and_pandas_paths_byte_identical(wrepo, data):
     assert sa.segments()[0].start == sb.segments()[0].start
     assert sa.segments()[0].stop == sb.segments()[0].stop
     assert sa.df().equals(sb.df())
+
+
+# -- one segment writer: all four write paths --------------------------------
+
+_FIXED = {
+    # name: (rows, with a gzip-hinted str column)
+    "small": (20, True),
+    "page_minus_1": (PAGE_LEN - 1, False),
+    "page": (PAGE_LEN, False),
+    "page_plus_1": (PAGE_LEN + 1, False),
+}
+
+
+def _fixed_frame(n: int, with_str: bool) -> pd.DataFrame:
+    i = np.arange(n, dtype="i8")
+    cols = {
+        "k": i * 3 - 7,
+        "t": (i * 1000 + 123_456_789).astype("M8[ms]"),
+        "v": np.where(i % 7 == 3, np.nan, np.cos(i.astype("f8"))),
+    }
+    if with_str:
+        cols["s"] = np.array([f"s{j % 13}" for j in range(n)], dtype=object)
+    return pd.DataFrame(cols)
+
+
+@pytest.fixture(scope="module")
+def srepo(spark, tmp_path_factory):
+    from lakota_spark import datasource
+
+    datasource.register(spark)
+    return Repo(str(tmp_path_factory.mktemp("wpaths")), spark)
+
+
+@pytest.mark.parametrize("case", sorted(_FIXED))
+def test_all_write_paths_byte_identical(srepo, spark, case):
+    """The dict path, the pandas path, `Series.write(DataFrame)` and the
+    ``lakota`` data source encode one-partition input through the same
+    segment writer: same pages, same segment name, zone map and bounds —
+    at the PAGE_LEN edges (half-page split / two pages) and with empty
+    partitions in the Spark inputs."""
+    n, with_str = _FIXED[case]
+    extra = {"s": "str|gzip"} if with_str else {}
+    schema = Schema(k="int*", t="timestamp", v="float", **extra)
+    pdf = _fixed_frame(n, with_str)
+    proj = ["0L AS k", "timestamp'2000-01-01' AS t", "0.0 AS v"]
+    if with_str:
+        proj.append("'' AS s")
+    # two empty partitions ahead of the one holding the rows
+    empty = spark.range(0, 0, 1, 2).selectExpr(*proj)
+    sdf = empty.union(spark.createDataFrame(pdf).coalesce(1))
+    got = {}
+    for path in ("dict", "pandas", "series_df", "datasource"):
+        label = f"{case}_{path}"
+        coll = srepo.create_collection(schema, label)
+        if path == "dict":
+            coll.series("x").write({c: pdf[c].to_numpy() for c in pdf})
+        elif path == "pandas":
+            coll.series("x").write(pdf)
+        elif path == "series_df":
+            coll.series("x").write(sdf)
+        else:
+            (sdf.write.format("lakota").option("path", srepo.root)
+             .option("table", f"{label}/x").mode("append").save())
+        (seg,) = coll.snapshot().for_label("x")
+        got[path] = (
+            seg.path, seg.length, seg.start, seg.stop, seg.meta.get("zmap")
+        )
+    assert got["dict"][1] == n
+    for path, v in got.items():
+        assert v == got["dict"], (path, v, got["dict"])

@@ -277,10 +277,10 @@ def test_local_stats_match_spark_stats(repo, spark):
     snap = coll.snapshot()
     sa, sb = snap.for_label("a")[0], snap.for_label("b")[0]
     assert (sa.start, sa.stop, sa.length) == (sb.start, sb.stop, sb.length)
-    # Content addresses are deterministic WITHIN each write path (that is
-    # what SKIP-WRITE dedup needs); across the driver-local pyarrow path
-    # and the executor Spark path the parquet bytes legitimately differ
-    # (encodings), so the addresses do too.
+    # Content addresses are deterministic for the same rows in the same
+    # page layout (that is what SKIP-WRITE dedup needs); an executor write
+    # pages per input partition, so a multi-partition frame may address
+    # differently from the one-page driver-local write.
     coll.series("c").write(dict(data))  # same dict again -> same address
     sc = coll.snapshot().for_label("c")[0]
     assert sc.path == sa.path
@@ -361,43 +361,149 @@ def test_write_bounds_must_contain_data(series):
     assert rows(series.frame()) == [(TS[0], 9.0)]
 
 
-def test_content_hash_executor_side(series, monkeypatch):
-    # the write path must hash segment bytes on the executors (VERDICT r1
-    # "What's wrong" #1): files_sha1 gets a live SparkSession, and the
-    # distributed job and the streaming fallback agree bit-for-bit, so
-    # content addresses match across backends (push/pull dedup).
+def test_content_hash_executor_side(repo, monkeypatch):
+    # Series.write(DataFrame) encodes AND hashes on the executors
+    # (segwriter.encode inside mapInArrow): no binaryFile hashing job,
+    # no segment bytes read on the driver — and the published digest is
+    # still the Merkle combine of the per-file sha1 of the published
+    # files, read back through the FS (content addresses agree across
+    # backends: push/pull dedup relies on this).
+    import hashlib
+    import io
+
+    import pyarrow.parquet as pq
+    from pyspark.sql.readwriter import DataFrameReader
+
     from lakota_spark import fsio
 
-    seen = []
-    orig = fsio.FS.files_sha1
-
-    def spy(self, rel_files, spark=None):
-        seen.append(spark)
-        dist = orig(self, rel_files, spark=spark)
-        assert dist == orig(self, rel_files, spark=None)
-        return dist
-
-    monkeypatch.setattr(fsio.FS, "files_sha1", spy)
-    # a distributed (DataFrame) input is the case where executor-side
-    # hashing matters; driver-local dict/pandas inputs hash driver-side
-    # by design (the bytes are already in driver memory)
-    spark = series.spark
-    df = spark.createDataFrame(
-        [(1589455910, 6.0), (1589455911, 7.0)], "timestamp long, value double"
+    assert not hasattr(fsio.BaseFS, "files_sha1")
+    coll = repo.create_collection(
+        Schema(key="str*|gzip", value="float"), "exec"
     )
-    series.write(df)
-    assert seen and all(s is not None for s in seen)
+    spark = repo.spark
+    rows = [(f"k{i:03d}", float("nan") if i % 5 == 0 else i * 0.5)
+            for i in range(40)]
+    df = spark.createDataFrame(rows, "key string, value double")
+    df = df.repartitionByRange(3, "key").localCheckpoint()
+
+    formats, seg_reads = [], []
+    orig_format = DataFrameReader.format
+    monkeypatch.setattr(
+        DataFrameReader,
+        "format",
+        lambda self, source: formats.append(source)
+        or orig_format(self, source),
+    )
+    fs_cls = type(repo.fs)
+    orig_read = fs_cls.read_bytes
+    monkeypatch.setattr(
+        fs_cls,
+        "read_bytes",
+        lambda self, rel: seg_reads.append(rel) or orig_read(self, rel),
+    )
+    for name in ("ParquetFile", "read_table"):
+        orig = getattr(pq, name)
+        monkeypatch.setattr(
+            pq,
+            name,
+            lambda *a, _n=name, _f=orig, **k: seg_reads.append(_n)
+            or _f(*a, **k),
+        )
+    coll.series("x").write(df)
+    monkeypatch.undo()
+    assert "binaryFile" not in formats, formats
+    assert [r for r in seg_reads if "/segments/" in str(r) or
+            r in ("ParquetFile", "read_table")] == [], seg_reads
+
+    seg = coll.snapshot().for_label("x")[0]
+    assert seg.length == 40
+    seg_rel = f"{coll.seg_prefix}/{seg.path}"
+    parts = sorted(p for p in repo.fs.ls(seg_rel) if p.endswith(".parquet"))
+    assert len(parts) == 3  # one page per input partition
+    blobs = [repo.fs.read_bytes(f"{seg_rel}/{p}") for p in parts]
+    digest = fsio.FS.combine_sha1(
+        [hashlib.sha1(b).hexdigest() for b in blobs]  # noqa: S324
+    )
+    assert seg.meta["digest"] == digest and seg.path == digest[:20]
+    # the schema's codec hint and the NaN stat omission hold on the
+    # executor path too (one encoder for every writer)
+    for b in blobs:
+        rg = pq.ParquetFile(io.BytesIO(b)).metadata.row_group(0)
+        cols = {rg.column(i).path_in_schema: rg.column(i)
+                for i in range(rg.num_columns)}
+        assert cols["key"].compression == "GZIP"
+        assert cols["key"].statistics.has_min_max
+        stats = cols["value"].statistics
+        assert stats is None or not stats.has_min_max
+    assert coll.series("x").df()["key"].tolist() == [k for k, _ in rows]
 
 
 def test_content_hash_dedup_same_path(series):
     # identical data written twice content-addresses to the same segment
     # dir (reference SKIP-WRITE, `lakota/pod.py:201-204`)
+    from lakota_spark import segwriter
+
     s = series
-    df = s._coerce_df({"timestamp": [1589455990], "value": [9.0]})
-    p1, d1 = s._write_segment_files(df, 1)
-    df2 = s._coerce_df({"timestamp": [1589455990], "value": [9.0]})
-    p2, d2 = s._write_segment_files(df2, 1)
-    assert (p1, d1) == (p2, d2)
+    coll = s.collection
+
+    def stage_and_publish():
+        df = s._coerce_df({"timestamp": [1589455990], "value": [9.0]})
+        return segwriter.publish(coll.fs, coll.seg_prefix, s._stage_df(df))
+
+    assert stage_and_publish() == stage_and_publish()
+
+
+def test_driver_local_content_address_golden(repo):
+    # Pins the driver-local content address (captured before the write
+    # paths were folded into one segment writer): existing repos and
+    # the append path keep deduping only while these stay fixed.
+    import datetime as dt
+
+    import numpy as np
+
+    coll = repo.create_collection(
+        Schema(k="int*", name="str*|gzip", t="timestamp", v="float"), "gd"
+    )
+    coll.series("x").write({
+        "k": [3, 1, 2, 2, 5],
+        "name": ["b", "a", "z", "c", "q"],
+        "t": [
+            dt.datetime(2020, 1, 1, 0, 0, 1, 500),
+            dt.datetime(1999, 12, 31),
+            dt.datetime(2020, 5, 5),
+            dt.datetime(2021, 1, 1),
+            dt.datetime(2000, 2, 29, 12),
+        ],
+        "v": [1.5, float("nan"), -2.0, 0.0, 1e300],
+    })
+    seg = coll.snapshot().for_label("x")[0]
+    assert seg.meta["digest"] == "a55d20ba6bfd0d386d8d48bd830b25251b53e6b1"
+    assert seg.meta["zmap"] == {"v": [-2.0, 1e300, True]}
+    # the half-page split (dict-of-numpy fast path)
+    half = repo.create_collection(Schema(t="timestamp*", v="float"), "gh")
+    n = 300_000
+    half.series("x").write({
+        "t": (np.arange(n, dtype="i8") * 7 + 10**9).astype("M8[s]"),
+        "v": np.sin(np.arange(n, dtype="f8")),
+    })
+    assert [s.path for s in half.snapshot().for_label("x")] == [
+        "55b39b6060d79ffa2834"
+    ]
+    # the driver-local defrag rewrite (taken where pyarrow can read the
+    # store; elsewhere defrag rewrites through the executors)
+    if not getattr(repo.fs, "arrow_readable", False):
+        return
+    frag = repo.create_collection(Schema(t="int*", v="float", s="str"), "gf")
+    for i in range(4):
+        frag.series("x").write({
+            "t": list(range(i * 10, i * 10 + 10)),
+            "v": [j / 3 for j in range(10)],
+            "s": [f"s{j}" for j in range(10)],
+        })
+    frag.defrag(max_chunk=1)
+    assert [s.path for s in frag.snapshot().for_label("x")] == [
+        "7929f6075be75606eb22"
+    ]
 
 
 def test_assert_sorted_distributed(repo):
@@ -445,7 +551,7 @@ def test_presorted_executor_write_skips_sort(repo):
     # r7 ask #6: a well-partitioned, already-sorted DataFrame input
     # writes WITHOUT the range-sample + full sort (input layout kept),
     # and the result is indistinguishable on read: same rows, same
-    # bounds, segment files still globally ordered for _files_stats
+    # bounds, segment files still globally ordered by name
     from pyspark.sql import functions as F
 
     spark = repo.spark

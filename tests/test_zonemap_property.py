@@ -9,6 +9,7 @@ Pure-python evaluators keep the property fast (no Spark in the loop).
 import math
 
 import pandas as pd
+import pyarrow as pa
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -177,7 +178,11 @@ def _eval(plan, row, cmp_fn):
 @given(_rows, _plans())
 def test_prune_is_sound_under_both_semantics(rows, plan):
     pdf = pd.DataFrame(rows, columns=["i", "v", "f", "s"])
-    zmap = zonemap.compute_from_pdf(pdf, SCHEMA)
+    zmap = zonemap.compute_from_arrow(
+        pa.Table.from_pandas(pdf, preserve_index=False),
+        SCHEMA.idx,
+        SCHEMA.columns,
+    )
     if zmap is None:
         return  # nothing to prune on — trivially sound
     if zonemap.may_match(plan, zmap):
