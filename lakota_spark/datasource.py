@@ -12,9 +12,11 @@ The idiomatic-Spark front door to the storage engine (round 10):
               .option("table", "temperature/paris")
               .load())
 
-Batch read: one input partition per segment part-file (pruned snapshot
-metadata — Spark never schedules a file outside the queried interval),
-pyarrow reads on the executors, and FILTER PUSHDOWN via
+Batch read: the pruned snapshot's segment part-files (Spark never
+schedules a file outside the queried interval) packed into contiguous
+input partitions of about one writer page of rows each
+(`series.scan_chunks`, capped by ``maxPartitions``), pyarrow reads on
+the executors, and FILTER PUSHDOWN via
 `DataSourceReader.pushFilters`: supported predicates (comparisons, In,
 IsNull/IsNotNull on schema columns) compile to the same neutral plan the
 ordered scan uses (`series._arrow_mask_expr`) — row-group pruning at
@@ -253,18 +255,20 @@ class _Scanner:
                 yield from tbl.to_batches()
 
 
-#: default ceiling on scheduled input partitions — each costs a Python
-#: worker round-trip, so a fragmented snapshot (thousands of small
-#: segments) packs many files per partition; override per read with
-#: .option("maxPartitions", N) to match a larger cluster's parallelism
+#: default ceiling on scheduled input partitions (`series.scan_chunks`
+#: packs about one writer page of rows per partition below it); override
+#: per read with .option("maxPartitions", N) to match a larger cluster's
+#: parallelism
 _MAX_PARTITIONS = 64
 
 
 def _seg_partitions(
-    series, segs, uri, plan, max_parts: int = _MAX_PARTITIONS
+    series, segs, uri, plan, max_parts: int
 ) -> list[InputPartition]:
-    max_parts = max(1, int(max_parts))
+    from lakota_spark.series import scan_chunks
+
     entries = []  # (file, per-segment effective bounds or None)
+    rows = 0
     fs = series.collection.fs
     for s in segs:
         if not s.path:
@@ -277,12 +281,10 @@ def _seg_partitions(
         if s.meta.get("clip"):
             bounds = (s.start, s.stop, s.start_closed, s.stop_closed)
         entries.extend((f, bounds) for f in files)
-    per = max(1, -(-len(entries) // max_parts))
+        rows += s.length
     return [
-        InputPartition(
-            {"files": entries[i:i + per], "uri": uri, "plan": plan}
-        )
-        for i in range(0, len(entries), per)
+        InputPartition({"files": chunk, "uri": uri, "plan": plan})
+        for chunk in scan_chunks(entries, rows, max_parts)
     ]
 
 
@@ -458,11 +460,9 @@ class LakotaBatchReader(DataSourceReader):
             if s.path
         ]
         uri = _resolve_backend(self._series, rels)
-        parts = _seg_partitions(
+        return _seg_partitions(
             self._series, segs, uri, plan, self._max_parts
         )
-        # Spark requires at least one partition
-        return parts or [InputPartition({"files": []})]
 
     def read(self, partition):
         scanner = _Scanner(self._struct, self._idx)
@@ -741,10 +741,9 @@ class LakotaStreamReader(DataSourceStreamReader):
             f"{self._series.collection.seg_prefix}/{s.path}" for s in segs
         ]
         uri = _resolve_backend(self._series, rels)
-        parts = _seg_partitions(
+        return _seg_partitions(
             self._series, segs, uri, None, self._max_parts
         )
-        return parts or [InputPartition({"files": []})]
 
     def read(self, partition):
         scanner = _Scanner(self._struct, self._idx)

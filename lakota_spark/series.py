@@ -44,6 +44,27 @@ CLOSED = {
 }
 
 
+def scan_chunks(files: list, rows: int, ceiling: int) -> list[list]:
+    """The one task-count rule of the Python-side scans
+    (`Series._ordered_scan` and the ``lakota`` data source's batch and
+    stream readers): split the ordered ``files`` into
+    ``ceil(rows / PAGE_LEN)`` contiguous chunks, clamped to
+    ``[1, len(files)]`` and to ``ceiling``.
+
+    Every Python task pays a worker round trip whatever it reads, so a
+    pruned read of a few small segments runs as ONE task, and a large
+    scan gets about one writer page of rows per task. ``rows`` is the
+    pruned segments' ``Segment.length`` total — snapshot metadata, so
+    packing opens no file. Chunks keep input order (partition order ==
+    sort order for the ordered scan); an empty input still yields one
+    empty chunk, since Spark needs at least one partition."""
+    n = max(1, min(len(files), ceiling, -(-rows // PAGE_LEN)))
+    return [
+        files[i * len(files) // n:(i + 1) * len(files) // n]
+        for i in range(n)
+    ]
+
+
 def _pa_bound_mask(tbl, idx, bound, closed, is_start):
     """Lexicographic prefix-bound mask over an arrow table — the exact
     twin of `Series._pandas_bound_mask` in pyarrow.compute. Shared by
@@ -1457,8 +1478,9 @@ class Series:
         lexicographic prefix bound applies arrow-side, and only
         ``cols ∪ idx`` columns are read.
 
-        Scale shape: one task per ~2×parallelism chunk of files, bytes
-        never touch the driver, reads are C++ parquet on the executors.
+        Scale shape: `scan_chunks` packs the files into one task per
+        ~PAGE_LEN rows (at most 2×parallelism tasks), bytes never touch
+        the driver, reads are C++ parquet on the executors.
         Returns None when the scan shape disqualifies — KV needing
         last-writer-wins dedup (``kv_ok=True`` means the caller proved
         the queried set pairwise-disjoint, so dedup is a no-op and the
@@ -1551,28 +1573,36 @@ class Series:
             else None,
             mask_plan=mask_plan,
         )
+        rows = sum(s.length for s in live)
         try:
-            # classic: parallelize slices the file list WITHOUT an
-            # exchange — each task opens its own segment files
+            # classic: parallelize places one chunk per partition WITHOUT
+            # an exchange — each task opens its own segment files
             sc = self.spark.sparkContext
-            n_parts = max(1, min(len(files), sc.defaultParallelism * 2))
-            rdd = sc.parallelize([(f,) for f in files], n_parts)
+            chunks = scan_chunks(files, rows, 2 * sc.defaultParallelism)
+            rdd = sc.parallelize(chunks, len(chunks)).flatMap(
+                lambda chunk: [(f,) for f in chunk]
+            )
             fdf = self.spark.createDataFrame(rdd, "rel string")
         except Exception:  # noqa: BLE001 — Connect: no RDD surface; a
-            # local relation + round-robin repartition spreads the file
-            # list instead (one tiny exchange over pathnames, not data)
-            n_parts = max(
-                1,
-                min(
-                    len(files),
-                    int(
-                        self.spark.conf.get("spark.sql.shuffle.partitions")
-                    ),
-                ),
+            # local relation range-partitioned on each file's chunk
+            # keeps chunk order (one tiny exchange over pathnames, not
+            # data), and sorting on the file's position restores file
+            # order inside a partition
+            chunks = scan_chunks(
+                files,
+                rows,
+                int(self.spark.conf.get("spark.sql.shuffle.partitions")),
             )
-            fdf = self.spark.createDataFrame(
-                [(f,) for f in files], "rel string"
-            ).repartition(n_parts)
+            tagged = [(i, f) for i, chunk in enumerate(chunks) for f in chunk]
+            fdf = (
+                self.spark.createDataFrame(
+                    [(i, pos, f) for pos, (i, f) in enumerate(tagged)],
+                    "chunk int, pos int, rel string",
+                )
+                .repartitionByRange(len(chunks), "chunk")
+                .sortWithinPartitions("pos")
+                .select("rel")
+            )
         return fdf.mapInArrow(reader, out_struct)
 
     def _apply_range(

@@ -33,7 +33,9 @@ Degradation map (why each allowlisted site is safe under Connect):
 - series.py sorted-write partition gate: try/except → always-sort path
   (correct, conservative).
 - series.py `_ordered_scan` file fan-out: `sc.parallelize` → local
-  relation + round-robin `repartition` over pathnames.
+  relation range-partitioned on each file's chunk id, then sorted on
+  file position (partition order stays the sort order;
+  `tests/test_scan_chunks.py` forces this branch).
 - cli.py / bench.py / scripts: driver-side tools that build their own
   classic local session via `get_spark()` — classic by design, never
   imported by library consumers.
@@ -65,6 +67,8 @@ def test_connect_client_ships_every_engine_api():
             "def mapInPandas",
             "def localCheckpoint",
             "def repartition",
+            "def repartitionByRange",
+            "def sortWithinPartitions",
             "def explain",
         ],
         "group.py": [

@@ -81,11 +81,18 @@ def test_pushed_bounds_prune_segments(spark, ds_repo):
         GreaterThanOrEqual(("ts",), 120), LessThan(("ts",), 180),
     ]))
     assert unsupported == []
-    parts = reader.partitions()
-    all_parts = LakotaBatchReader(
-        opts, sr.schema.struct_type()
-    ).partitions()
-    assert len(parts) < len(all_parts)
+
+    def files(r):
+        return [f for p in r.partitions() for f, _ in p.value["files"]]
+
+    segs = sorted(coll.snapshot().for_label("x"), key=lambda g: g.start)
+    dirs = [f"{coll.seg_prefix}/{g.path}/" for g in segs]
+    all_files = files(LakotaBatchReader(opts, sr.schema.struct_type()))
+    # unfiltered: one file per segment, in interval order; pushed
+    # [120, 180): exactly the [100, 200) segment's file
+    assert len(all_files) == 3
+    assert all(f.startswith(d) for f, d in zip(all_files, dirs))
+    assert files(reader) == [all_files[1]]
     # and end-to-end through Spark the same query is exact
     df = _load(spark, repo, table="seg/x").where("ts >= 120 and ts < 180")
     assert sorted(r.ts for r in df.collect()) == list(range(120, 180))

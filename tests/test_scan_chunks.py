@@ -1,0 +1,165 @@
+"""`series.scan_chunks` — the one task-count rule of the Python-side
+scans (the ordered `frame(sort=True)` scan and the ``lakota`` data
+source's batch and stream readers): about one writer page of rows per
+task, contiguous and in input order, capped by the caller's ceiling.
+"""
+
+import pytest
+
+from lakota_spark import plans
+from lakota_spark.datasource import LakotaBatchReader, register
+from lakota_spark.schema import Schema
+from lakota_spark.segwriter import PAGE_LEN
+from lakota_spark.series import Series, scan_chunks
+
+
+def _files(n):
+    return [f"seg{i:03d}/part-00000-00000.parquet" for i in range(n)]
+
+
+def test_small_pruned_read_is_one_chunk():
+    files = _files(21)
+    assert scan_chunks(files, 10_500, 8) == [files]
+
+
+def test_chunk_count_follows_rows():
+    files = _files(240)
+    chunks = scan_chunks(files, 1_200_000, 64)
+    assert PAGE_LEN == 500_000
+    assert [len(c) for c in chunks] == [80, 80, 80]
+
+
+def test_ceiling_caps_chunks():
+    assert len(scan_chunks(_files(1000), 10**12, 8)) == 8
+    assert len(scan_chunks(_files(1000), 10**12, 2)) == 2
+    # a non-positive ceiling still plans one task
+    assert scan_chunks(_files(3), 10**9, 0) == [_files(3)]
+
+
+def test_fewer_files_than_pages_is_one_file_per_chunk():
+    files = _files(3)
+    assert scan_chunks(files, 10**7, 64) == [[f] for f in files]
+
+
+def test_chunks_cover_every_file_once_in_order():
+    for n in range(0, 31):
+        files = _files(n)
+        for rows in (0, 1, PAGE_LEN, PAGE_LEN + 1, 7 * PAGE_LEN, 10**9):
+            for ceiling in (1, 2, 5, 8, 64):
+                chunks = scan_chunks(files, rows, ceiling)
+                want = max(1, min(n, ceiling, -(-rows // PAGE_LEN)))
+                assert len(chunks) == want
+                # contiguous slices in input order, each file once
+                assert [f for c in chunks for f in c] == files
+                if n:
+                    assert all(chunks)
+                    sizes = [len(c) for c in chunks]
+                    assert max(sizes) - min(sizes) <= 1
+
+
+def test_empty_input_is_one_empty_chunk():
+    assert scan_chunks([], 0, 64) == [[]]
+
+
+@pytest.fixture()
+def seg21(spark, repo):
+    """21 disjoint segments of 500 rows, written out of interval order."""
+    register(spark)
+    coll = repo.create_collection(
+        Schema(ts="int*", value="float"), "pack"
+    )
+    s = coll.series("x")
+    for k in [*range(1, 21, 2), *range(0, 21, 2)]:
+        lo = k * 500
+        s.write({
+            "ts": list(range(lo, lo + 500)),
+            "value": [float(i) for i in range(lo, lo + 500)],
+        })
+    return repo, s
+
+
+def _reader(repo, **opts):
+    opts = {"path": repo.root, "table": "pack/x", **opts}
+    return LakotaBatchReader(opts, Schema(ts="int*", value="float")
+                             .struct_type())
+
+
+def test_small_scans_plan_one_task(spark, seg21):
+    repo, s = seg21
+    ref = sorted(
+        (r.ts, r.value)
+        for r in s.frame(start=250, stop=10_249, sort=False).collect()
+    )
+    assert len(ref) == 10_000
+    df = s.frame(start=250, stop=10_249)
+    assert df.rdd.getNumPartitions() == 1
+    assert [(r.ts, r.value) for r in df.collect()] == ref
+    parts = _reader(repo).partitions()
+    assert len(parts) == 1 and len(parts[0].value["files"]) == 21
+    got = (
+        spark.read.format("lakota").option("path", repo.root)
+        .option("table", "pack/x").load()
+        .where("ts >= 250 and ts < 10250").collect()
+    )
+    assert sorted((r.ts, r.value) for r in got) == ref
+
+
+def test_max_partitions_still_caps(monkeypatch, seg21):
+    repo, _ = seg21
+    # one 500-row "page" per segment: the row rule asks for 21 tasks
+    monkeypatch.setattr("lakota_spark.series.PAGE_LEN", 500)
+    assert len(_reader(repo).partitions()) == 21
+    parts = _reader(repo, maxPartitions="2").partitions()
+    assert [len(p.value["files"]) for p in parts] == [10, 11]
+
+
+def test_empty_read_keeps_one_partition(spark, repo):
+    register(spark)
+    repo.create_collection(Schema(ts="int*", value="float"), "pack")
+    parts = _reader(repo).partitions()
+    assert len(parts) == 1 and parts[0].value["files"] == []
+    df = (
+        spark.read.format("lakota").option("path", repo.root)
+        .option("table", "pack/x").load()
+    )
+    assert df.count() == 0
+
+
+def test_connect_fallback_keeps_sort_order(spark, repo, monkeypatch):
+    """Without a `sparkContext` (Spark Connect) the ordered scan spreads
+    its file list through a local relation; range partitioning on the
+    chunk id plus a sort on file position must keep partition order ==
+    sort order, as the classic `parallelize` branch does."""
+    coll = repo.create_collection(Schema(ts="int*", value="float"), "fb")
+    s = coll.series("x")
+    for k in [*range(1, 40, 2), *range(0, 40, 2)]:
+        lo = k * 500
+        s.write({
+            "ts": list(range(lo, lo + 500)),
+            "value": [float(i) for i in range(lo, lo + 500)],
+        })
+    # shrink the page so the 20k rows pack into several chunks
+    monkeypatch.setattr("lakota_spark.series.PAGE_LEN", 1000)
+    classic_df = s.frame()
+    assert classic_df.rdd.getNumPartitions() == min(
+        20, 2 * spark.sparkContext.defaultParallelism
+    )
+    classic = [(r.ts, r.value) for r in classic_df.collect()]
+    assert [t for t, _ in classic] == list(range(20_000))
+
+    class NoContext:
+        """The session as the series sees it, minus `sparkContext`."""
+
+        def __getattr__(self, name):
+            if name == "sparkContext":
+                raise RuntimeError("no sparkContext under Spark Connect")
+            return getattr(spark, name)
+
+    monkeypatch.setattr(Series, "spark", property(lambda self: NoContext()))
+    with pytest.raises(RuntimeError):
+        s.spark.sparkContext
+    fallback_df = s.frame(sort=True)
+    plan = plans.explain_str(fallback_df, "simple")
+    assert "MapInArrow" in plan and "rangepartitioning(chunk" in plan, plan
+    fallback = [(r.ts, r.value) for r in fallback_df.collect()]
+    assert fallback == classic
