@@ -15,7 +15,13 @@ A from-scratch re-expression of the capabilities of bertrandchenal/lakota
   multimodal plumbing) — all plain PySpark.
 """
 
-from lakota_spark.session import get_spark
+from lakota_spark import zipcache
+
+# First, before anything else imports: a Python worker that runs lakota
+# code stops re-reading pyspark.zip's directory at every task start.
+zipcache.install()
+
+from lakota_spark.session import get_spark  # noqa: E402
 
 __version__ = "0.1.0"
 

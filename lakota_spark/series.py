@@ -707,7 +707,7 @@ class Series:
         the per-pid exchange here carries index columns only — a sliver
         of the full-row shuffle the pre-sorted fast path skips.
         """
-        rep = self._sorted_report(df)
+        rep = sorted(self._sorted_report(df).collect(), key=lambda r: r["_pid"])
         if any((r["n_desc"] or 0) > 0 for r in rep):
             raise ValueError("frame is not sorted by index columns")
         for prev, cur in zip(rep, rep[1:]):
@@ -719,13 +719,14 @@ class Series:
                     f"(partition boundary {last!r} > {first!r})"
                 )
 
-    def _sorted_report(self, df: DataFrame):
-        """Per-input-partition ``(n_desc, first, last)`` rows, sorted by
-        partition id: ``n_desc`` counts adjacent descents inside the
-        partition (struct comparison = lexicographic index-tuple order,
-        row order pinned by monotonically_increasing_id, which is
-        consecutive within a partition); ``first``/``last`` are the
-        partition's edge index tuples via order-aware min_by/max_by."""
+    def _sorted_report(self, df: DataFrame) -> DataFrame:
+        """The plan `_assert_sorted` collects: one ``(_pid, n_desc,
+        first, last)`` row per input partition. ``n_desc`` counts
+        adjacent descents inside the partition (struct comparison =
+        lexicographic index-tuple order, row order pinned by
+        monotonically_increasing_id, which is consecutive within a
+        partition); ``first``/``last`` are the partition's edge index
+        tuples via order-aware min_by/max_by."""
         from pyspark.sql import Window
 
         idx = list(self.schema.idx)
@@ -736,7 +737,7 @@ class Series:
         )
         w = Window.partitionBy("_pid").orderBy("_mid")
         desc = (F.col("_s") < F.lag("_s").over(w)).cast("int")
-        rep = (
+        return (
             base.withColumn("_desc", desc)
             .groupBy("_pid")
             .agg(
@@ -744,10 +745,7 @@ class Series:
                 F.min_by("_s", "_mid").alias("first"),
                 F.max_by("_s", "_mid").alias("last"),
             )
-            .collect()
         )
-        rep.sort(key=lambda r: r["_pid"])
-        return rep
 
     def _df_presorted(self, df: DataFrame) -> bool:
         """True iff ``df`` is already globally sorted by the index

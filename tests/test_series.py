@@ -523,14 +523,22 @@ def test_assert_sorted_distributed(repo):
     ok = spark.createDataFrame(rdd, "timestamp long, value double")
     assert ok.rdd.getNumPartitions() == 4
     s._assert_sorted(ok)
-    # the check plan is exchange-free (no shuffle, no single partition)
-    from pyspark.sql import functions as F
-    plan = (
-        ok.select("timestamp")
-        .withColumn("_pid", F.spark_partition_id())
-        ._jdf.queryExecution().executedPlan().toString()
+    # the plan the check runs has ONE exchange, hash-partitioned on the
+    # partition id, and only the index struct + _pid/_mid cross it (no
+    # single-partition funnel, no value columns shuffled)
+    import re
+
+    from lakota_spark import plans
+
+    plan = plans.explain_str(s._sorted_report(ok), "formatted")
+    assert re.findall(r"^\(\d+\) (\w*Exchange)\b", plan, re.M) == ["Exchange"]
+    (cols, args), = re.findall(
+        r"^\(\d+\) Exchange\nInput \[\d+\]: \[(.*)\]\nArguments: (.*)$",
+        plan,
+        re.M,
     )
-    assert "Exchange" not in plan
+    assert re.match(r"hashpartitioning\(_pid#\d+, \d+\)", args), plan
+    assert [c.split("#")[0] for c in cols.split(", ")] == ["_s", "_pid", "_mid"]
     # sorted within partitions but boundaries out of order: fails
     rdd_bad = spark.sparkContext.parallelize(
         [(50, 1.0), (51, 1.0), (1, 1.0), (2, 1.0)], 2
