@@ -15,7 +15,6 @@ import os
 from contextlib import contextmanager
 
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from lakota_spark import segwriter
 from lakota_spark.changelog import PHI, Changelog, checkpoint_cadence
@@ -383,36 +382,6 @@ class Collection:
         except Exception:
             self._batch = None
             raise
-
-    # ----------------------------------------------------- per-seg bounds
-
-    def bounds_df(self, segs: list[Segment]):
-        idx_t = self.schema.index_struct_type()
-        schema = T.StructType(
-            [
-                T.StructField("_seg_key", T.StringType()),
-                T.StructField("_seg_label", T.StringType()),
-                T.StructField("_seg_start", idx_t),
-                T.StructField("_seg_stop", idx_t),
-                T.StructField("_seg_start_closed", T.BooleanType()),
-                T.StructField("_seg_stop_closed", T.BooleanType()),
-                T.StructField("_seg_seq", T.LongType()),
-            ]
-        )
-        rows = [
-            (
-                s.path,
-                s.label,
-                tuple(s.start),
-                tuple(s.stop),
-                s.start_closed,
-                s.stop_closed,
-                s.seq,
-            )
-            for s in segs
-            if s.path
-        ]
-        return self.spark.createDataFrame(rows, schema=schema)
 
     # ------------------------------------------------------- maintenance
 
@@ -814,15 +783,13 @@ class Collection:
                 if tbl is not None:
                     pages = segwriter.encode(tbl, self.schema)
                 else:
-                    df = series._read_segments(run)
-                    if self.schema.kv:
-                        # KV runs may hold several versions of a key
-                        # across overlapping segments: resolve
-                        # last-writer-wins BEFORE merging, else the
-                        # single merged seq would make the surviving
-                        # version arbitrary at read time (the reference
-                        # defrags through the resolving read path).
-                        df = series._kv_dedup(df)
+                    # KV runs may hold several versions of a key across
+                    # overlapping segments: resolve last-writer-wins
+                    # BEFORE merging, else the single merged seq would
+                    # make the surviving version arbitrary at read time
+                    # (the reference defrags through the resolving
+                    # read path).
+                    df = series._read(run, kv_dedup=self.schema.kv)
                     pages = series._stage_df(df.select(*self.schema.columns))
                 if pages.n == 0:
                     return

@@ -259,8 +259,8 @@ class Snapshot:
                 # file, so the read path must re-filter them. Unmarked
                 # segments' intervals are guaranteed to contain every file
                 # row (write-time bound containment check), which lets
-                # `_read_segments` scan them join-free — the common
-                # append-only / post-defrag fast path.
+                # the segment scan (`segscan`) read them unfiltered —
+                # the common append-only / post-defrag case.
                 head = replace(
                     seg,
                     stop=new.start,
@@ -341,7 +341,7 @@ class Snapshot:
     # -- (de)serialization -------------------------------------------------
 
     #: payload format: 2 = overlay-clipped pieces carry a meta "clip"
-    #: marker (read path trusts its ABSENCE for the join-free scan).
+    #: marker (read path trusts its ABSENCE to skip the clip filter).
     #: Format-1 payloads predate the marker, so every segment there must
     #: be treated as possibly-clipped — correctness first, the fast scan
     #: returns after a defrag/squash rewrites the segments.

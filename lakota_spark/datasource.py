@@ -18,13 +18,16 @@ input partitions of about one writer page of rows each
 (`series.scan_chunks`, capped by ``maxPartitions``), pyarrow reads on
 the executors, and FILTER PUSHDOWN via
 `DataSourceReader.pushFilters`: supported predicates (comparisons, In,
-IsNull/IsNotNull on schema columns) compile to the same neutral plan the
-ordered scan uses (`series._arrow_mask_expr`) — row-group pruning at
-read time, exact arrow-side filtering after the cast, and leading-index
-bounds additionally prune whole SEGMENTS driver-side. Unsupported
-predicates are handed back to Spark. Clipped segments (overlay-narrowed
-bounds) apply their effective-bound mask arrow-side, so results match
-`Series.frame(sort=False)` exactly. KV collections serve when their
+IsNull/IsNotNull on schema columns) compile to the same neutral plan
+`Series.frame(mask=)` uses (`series._arrow_mask_expr`) — row-group
+pruning at read time, exact arrow-side filtering after the cast, and
+leading-index bounds additionally prune whole SEGMENTS driver-side.
+Unsupported predicates are handed back to Spark. Planning and scanning
+are `segscan.partitions` / `segscan.scan`, the same code behind
+`Series.frame`: clipped segments (overlay-narrowed bounds) are clipped
+to their effective bounds, and a referenced segment buried by gc is
+moved back out of trash, so results match `Series.frame(sort=False)`
+exactly. KV collections serve when their
 resolved snapshot is pairwise range-DISJOINT (round 13 — each key has
 exactly one live version, so no shuffle is needed; the registry shape);
 overlapping KV refuses at scan time (last-writer-wins needs a global
@@ -66,7 +69,7 @@ extension surface (SURVEY §2.12-adjacent) built on public PySpark 4
 from __future__ import annotations
 
 import datetime as _dt
-from typing import TYPE_CHECKING, Iterator
+from typing import TYPE_CHECKING
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -85,6 +88,8 @@ from pyspark.sql.datasource import (
     LessThanOrEqual,
     WriterCommitMessage,
 )
+
+from lakota_spark import segscan
 
 if TYPE_CHECKING:  # pragma: no cover
     from pyspark.sql.datasource import Filter
@@ -120,23 +125,6 @@ def _open_series(options):
     return repo.collection(cname).series(label)
 
 
-def _resolve_backend(series, rels):
-    """The executor-reopenable pyarrow root for the segment files —
-    `Series._ordered_scan`'s backend resolution: a pyarrow-readable
-    store directly, or a cache-backed store after materializing the
-    needed objects through the read cache."""
-    fs = series.collection.fs
-    if getattr(fs, "arrow_readable", False):
-        return fs.uri
-    if hasattr(fs, "cache"):
-        fs.spark_read_uris(rels)
-        return fs.cache.uri
-    raise ValueError(
-        "lakota data source needs a pyarrow-readable (or cache-backed) "
-        "backend; use Series.frame() on this store"
-    )
-
-
 def _lit(v, tz_aware=True):
     if isinstance(v, _dt.datetime) and tz_aware and v.tzinfo is None:
         return v.replace(tzinfo=_dt.timezone.utc)
@@ -170,122 +158,11 @@ class LakotaDataSource(DataSource):
         return LakotaStreamWriter(self.options, schema, overwrite=overwrite)
 
 
-class _Scanner:
-    """Executor-side read state shared by the batch and stream readers.
-    Everything rides INSIDE the InputPartition values (uri, files,
-    bounds, plan): the reader object's executor copy is pickled at
-    planning time, so driver-side mutations from pushFilters()/
-    partitions() must not be load-bearing."""
-
-    def __init__(self, struct, idx):
-        self.struct = struct
-        self.idx = list(idx)
-
-    def scan(self, part: InputPartition) -> Iterator:
-        import posixpath
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-        from pyarrow import fs as pafs
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        from lakota_spark.series import _arrow_mask_expr, _pa_bound_mask
-
-        meta = part.value
-        if not meta["files"]:
-            return
-        fsys, root = pafs.FileSystem.from_uri(meta["uri"])
-        target = to_arrow_schema(self.struct)
-        plan = meta.get("plan")
-        mask_expr = _arrow_mask_expr(plan) if plan is not None else None
-        # the `_read_run_local` lesson: per-file pq.read_table calls are
-        # GIL-bound python overhead on fragmented snapshots — UNCLIPPED
-        # files (no per-segment bounds, the common case) read as ONE
-        # C++ dataset scan; clipped files keep per-file bound masks
-        plain = [rel for rel, b in meta["files"] if b is None]
-        clipped = [(rel, b) for rel, b in meta["files"] if b is not None]
-        if len(plain) > 4:
-            import pyarrow.dataset as pads
-
-            ds = pads.dataset(
-                [posixpath.join(root, rel) for rel in plain],
-                format="parquet",
-                filesystem=fsys,
-            )
-            try:
-                tbl = ds.to_table(filter=mask_expr)
-            except (pa.ArrowInvalid, pa.ArrowNotImplementedError):
-                if mask_expr is None:
-                    raise
-                tbl = ds.to_table()
-            tbl = tbl.select(target.names).cast(target)
-            if mask_expr is not None:
-                tbl = tbl.filter(mask_expr)
-            if tbl.num_rows:
-                yield from tbl.to_batches()
-            files = clipped
-        else:
-            files = [(rel, None) for rel in plain] + clipped
-        for rel, bounds in files:
-            full = posixpath.join(root, rel)
-            try:
-                tbl = pq.read_table(
-                    full, filesystem=fsys, filters=mask_expr
-                )
-            except (pa.ArrowInvalid, pa.ArrowNotImplementedError):
-                if mask_expr is None:
-                    raise
-                tbl = pq.read_table(full, filesystem=fsys)
-            tbl = tbl.select(target.names).cast(target)
-            if bounds is not None:
-                start_b, stop_b, s_cl, e_cl = bounds
-                if start_b is not None:
-                    tbl = tbl.filter(
-                        _pa_bound_mask(tbl, self.idx, start_b, s_cl, True)
-                    )
-                if stop_b is not None:
-                    tbl = tbl.filter(
-                        _pa_bound_mask(tbl, self.idx, stop_b, e_cl, False)
-                    )
-            if mask_expr is not None:
-                # authoritative post-cast filter (read-time pushdown may
-                # have retried unfiltered on physical-type mismatch)
-                tbl = tbl.filter(mask_expr)
-            if tbl.num_rows:
-                yield from tbl.to_batches()
-
-
 #: default ceiling on scheduled input partitions (`series.scan_chunks`
 #: packs about one writer page of rows per partition below it); override
 #: per read with .option("maxPartitions", N) to match a larger cluster's
 #: parallelism
 _MAX_PARTITIONS = 64
-
-
-def _seg_partitions(
-    series, segs, uri, plan, max_parts: int
-) -> list[InputPartition]:
-    from lakota_spark.series import scan_chunks
-
-    entries = []  # (file, per-segment effective bounds or None)
-    rows = 0
-    fs = series.collection.fs
-    for s in segs:
-        if not s.path:
-            continue
-        d = f"{series.collection.seg_prefix}/{s.path}"
-        files = sorted(
-            f"{d}/{nm}" for nm in fs.ls(d) if nm.endswith(".parquet")
-        )
-        bounds = None
-        if s.meta.get("clip"):
-            bounds = (s.start, s.stop, s.start_closed, s.stop_closed)
-        entries.extend((f, bounds) for f in files)
-        rows += s.length
-    return [
-        InputPartition({"files": chunk, "uri": uri, "plan": plan})
-        for chunk in scan_chunks(entries, rows, max_parts)
-    ]
 
 
 class LakotaBatchReader(DataSourceReader):
@@ -454,19 +331,15 @@ class LakotaBatchReader(DataSourceReader):
             from lakota_spark import zonemap
 
             segs = zonemap.prune(segs, plan)
-        rels = [
-            f"{self._series.collection.seg_prefix}/{s.path}"
-            for s in segs
-            if s.path
+        return [
+            InputPartition(meta)
+            for meta in segscan.partitions(
+                self._series, segs, plan, self._max_parts
+            )
         ]
-        uri = _resolve_backend(self._series, rels)
-        return _seg_partitions(
-            self._series, segs, uri, plan, self._max_parts
-        )
 
     def read(self, partition):
-        scanner = _Scanner(self._struct, self._idx)
-        yield from scanner.scan(partition)
+        yield from segscan.scan(partition.value, self._struct)
 
 
 
@@ -528,7 +401,6 @@ class LakotaStreamReader(DataSourceStreamReader):
             )
         self._struct = schema
         self._max_parts = int(options.get("maxPartitions", _MAX_PARTITIONS))
-        self._idx = list(self._series.schema.idx)
         self._earliest = (
             str(options.get("startingOffsets", "latest")).lower()
             == "earliest"
@@ -737,17 +609,15 @@ class LakotaStreamReader(DataSourceStreamReader):
             ]
         # append semantics: emit the new segments' rows AS WRITTEN (no
         # effective-bound clipping — this is a tail of writes)
-        rels = [
-            f"{self._series.collection.seg_prefix}/{s.path}" for s in segs
+        return [
+            InputPartition(meta)
+            for meta in segscan.partitions(
+                self._series, segs, None, self._max_parts
+            )
         ]
-        uri = _resolve_backend(self._series, rels)
-        return _seg_partitions(
-            self._series, segs, uri, None, self._max_parts
-        )
 
     def read(self, partition):
-        scanner = _Scanner(self._struct, self._idx)
-        yield from scanner.scan(partition)
+        yield from segscan.scan(partition.value, self._struct)
 
     def commit(self, end: dict) -> None:
         # the marker advances on SEALED ends in partitions() — nothing

@@ -2,7 +2,7 @@
 
 These ingest the `events` testdata INTO a lakota_spark repo (write path:
 cast, sort, segment, commit) and answer queries through `Series.frame`
-(read path: snapshot resolution, pruning, bounds join, pushdown) — so the
+(read path: snapshot resolution, pruning, bound clipping, pushdown) — so the
 DuckDB oracle checks the whole engine round-trip, not just a DataFrame
 expression. The repo is built once per (sf_dir) and cached on disk.
 """
@@ -92,14 +92,14 @@ def engine_range_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def engine_sorted_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Round-trip through the round-9 ORDERED read path: same range as
+    """Round-trip through the sorted read: same range as
     `engine_range_scan` but ``sort=True``, so the interval-ordered
-    mapInArrow scan (pyarrow reads on the executors, coarse filters +
-    exact prefix-bound mask applied arrow-side, cast to Spark's arrow
-    schema — `Series._ordered_scan`) carries the whole result. The
-    driver's value hash is order-insensitive, so this entry externally
-    validates the new path's CONTENT (pushdown, mask, cast); the
-    zero-Exchange/Sort ORDER contract is pinned by
+    mapInArrow scan (pyarrow reads on the executors, the prefix bounds
+    pushed into the dataset scan and applied exactly after the cast to
+    Spark's arrow schema — `Series._read` over `segscan`) carries the
+    whole result. The driver's value hash is order-insensitive, so this
+    entry externally validates the scan's CONTENT (pushdown, mask,
+    cast); the zero-Exchange/Sort ORDER contract is pinned by
     tests/test_plans.py::test_engine_sorted_read_no_exchange."""
     repo = _event_repo(spark, sf_dir)
     series = repo.collection("events").series("all")
@@ -294,7 +294,7 @@ def engine_datasource_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 def engine_mask_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """`frame(mask=...)` under the driver oracle (round 10): the s-expr
     mask compiles to the arrow-side filter INSIDE the exchange-free
-    ordered scan (row-group pruning + exact post-cast filter — the
+    segment scan (row-group pruning + exact post-cast filter — the
     VERDICT r9 #3 composition), stacked on a ts range handed to
     `frame(start/stop)`. The oracle runs the same predicate over the
     raw parquet (engine truncates ts to seconds)."""
@@ -494,11 +494,12 @@ def engine_kv_registry_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     last-writer-wins a per-row no-op, so the masked read must (a) run
     `zonemap.prune_kv` with nothing blocked — every bucket whose value
     zone map refutes the mask drops before any parquet bytes move —
-    and (b) skip the dedup window entirely (raw scan: no Window, no
-    Exchange, mask pushed to parquet — plan pinned by
+    and (b) skip the dedup window entirely (plain segment scan: no
+    Window, no Exchange, mask pushed into the scan — plan pinned by
     tests/test_plans.py::test_kv_registry_scan_plan; refutation
-    effectiveness under a correlated distribution is priced by
-    scripts/probe_kv_zonemap.py, 123 -> 5 segments). The oracle is the
+    effectiveness under a correlated distribution is priced in NOTES.md
+    "KV zone-map pruning with shadowing awareness", 123 -> 5
+    segments). The oracle is the
     plain value filter over the raw parquet: identical rows prove the
     dedup-free plan reads exactly what the full plan would."""
     repo = _event_repo(spark, sf_dir)

@@ -2126,7 +2126,7 @@ def winnow_fingerprint_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashlib/numpy fold (bit-identical to the expression chain, pinned by
     test_winnow_arrow_impl_bit_identical) measured 0.26× at 32 cores and
     0.11× at 8 cores vs the zip_with chains at sf0.1 (round-14 A/B,
-    scripts/probe_winnow_arrow_r14.py)."""
+    OPTIMIZATION_r14.md §4)."""
     from lakota_spark.operators.util import ensure_parallelism
 
     return T.winnow_fingerprints(

@@ -174,7 +174,9 @@ class Schema:
                     tzinfo=None
                 )
             if isinstance(v, dt.datetime):
-                return v.replace(microsecond=0)  # M8[s] second precision
+                # M8[s] second precision, as a plain datetime: subclasses
+                # (pd.Timestamp) are not accepted by Spark row types
+                return dt.datetime(*v.timetuple()[:6], tzinfo=v.tzinfo)
             if isinstance(v, dt.date):
                 return dt.datetime(v.year, v.month, v.day)
         elif alias == "date":

@@ -5,17 +5,15 @@ cast to schema → range-partition + sort → write a content-addressed
 Parquet segment → overlay onto the leaf snapshot → append a revision.
 
 Read path (`lakota/series.py:314-338`): resolve snapshot → prune segments
-by label + interval (pure metadata, before Spark sees any file) → ONE
-parquet scan of the surviving files → broadcast-join the tiny per-segment
-bounds table keyed on the segment directory name → apply effective-bound
-and query-range filters (both plain Catalyst predicates: pushdown, column
-pruning and row-group skipping all engage) → optional select/limit/offset.
+by label + interval (pure metadata, before Spark sees any file) → one
+`mapInArrow` relation over the surviving segments' files in interval
+order (`segscan`: the query bounds and the mask pushed into each pyarrow
+dataset scan, overlay-clipped segments clipped to their effective
+bounds, only the needed columns decoded) → optional select/limit/offset.
+Partition order is sort order, so a sorted read plans no Exchange.
 
-Scale notes: the only driver-side work is metadata (segment lists); data
-never flows through the driver. A snapshot with S segments costs one
-broadcast of S rows — with defrag keeping segments at ~page_len rows,
-100 TB ≈ a few hundred thousand segments ≈ a few tens of MB of bounds,
-still broadcastable; the pruning pass cuts that to the queried interval.
+Scale notes: the only driver-side work is metadata (segment lists and
+their file listings); data never flows through the driver.
 """
 
 from __future__ import annotations
@@ -27,7 +25,7 @@ import pyarrow as pa_lib
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from lakota_spark import segwriter
+from lakota_spark import segscan, segwriter
 from lakota_spark.commit import Segment
 from lakota_spark.segwriter import PAGE_LEN
 
@@ -45,9 +43,9 @@ CLOSED = {
 
 
 def scan_chunks(files: list, rows: int, ceiling: int) -> list[list]:
-    """The one task-count rule of the Python-side scans
-    (`Series._ordered_scan` and the ``lakota`` data source's batch and
-    stream readers): split the ordered ``files`` into
+    """The one task-count rule of the segment scan (`segscan.partitions`,
+    behind `Series.frame`/`tail`, defrag and the ``lakota`` data
+    source's batch and stream readers): split the ordered ``files`` into
     ``ceil(rows / PAGE_LEN)`` contiguous chunks, clamped to
     ``[1, len(files)]`` and to ``ceiling``.
 
@@ -56,7 +54,7 @@ def scan_chunks(files: list, rows: int, ceiling: int) -> list[list]:
     scan gets about one writer page of rows per task. ``rows`` is the
     pruned segments' ``Segment.length`` total — snapshot metadata, so
     packing opens no file. Chunks keep input order (partition order ==
-    sort order for the ordered scan); an empty input still yields one
+    sort order for `Series.frame`); an empty input still yields one
     empty chunk, since Spark needs at least one partition."""
     n = max(1, min(len(files), ceiling, -(-rows // PAGE_LEN)))
     return [
@@ -65,32 +63,12 @@ def scan_chunks(files: list, rows: int, ceiling: int) -> list[list]:
     ]
 
 
-def _pa_bound_mask(tbl, idx, bound, closed, is_start):
-    """Lexicographic prefix-bound mask over an arrow table — the exact
-    twin of `Series._pandas_bound_mask` in pyarrow.compute. Shared by
-    the ordered mapInArrow reader and the `lakota` data source."""
-    import pyarrow.compute as pc
-
-    strict = None
-    eq_all = None
-    for c, v in zip(idx[: len(bound)], bound):
-        col = tbl.column(c)
-        cmp = pc.greater(col, v) if is_start else pc.less(col, v)
-        eq = pc.equal(col, v)
-        if strict is None:
-            strict, eq_all = cmp, eq
-        else:
-            strict = pc.or_(strict, pc.and_(eq_all, cmp))
-            eq_all = pc.and_(eq_all, eq)
-    return pc.or_(strict, eq_all) if closed else strict
-
-
 def _arrow_mask_expr(plan):
     """Rebuild a `sexpr.to_filter_plan` plan as a pyarrow.compute
-    Expression — executor-side inside `_ordered_reader` (so a user mask
-    participates in row-group pruning AND exact filtering on the sorted
-    scan), and driver-side by `frame()` to VALIDATE the plan against an
-    empty cast table before trusting the fast path with it."""
+    Expression — executor-side inside `segscan.scan` (so a user mask
+    participates in row-group pruning AND exact filtering), and
+    driver-side by `_compile_mask` to VALIDATE the plan against an
+    empty cast table before pushing it into the scan."""
     import pyarrow.compute as pc
 
     kind = plan[0]
@@ -144,167 +122,6 @@ def _physical_plan_str(df) -> str:
         with contextlib.redirect_stdout(buf):
             df.explain()
         return buf.getvalue()
-
-
-def _ordered_reader(
-    root_uri: str,
-    read_struct,
-    out_cols: list[str],
-    filters: list[tuple],
-    bounds,
-    mask_plan=None,
-):
-    """Executor-side reader for `Series._ordered_scan`: each partition
-    reads its (interval-contiguous, name-sorted) part files with pyarrow
-    IN ORDER and yields record batches cast to Spark's expected arrow
-    schema — preserving the global sort without any Exchange.
-
-    ``read_struct`` is the Spark StructType of the read projection
-    (out_cols plus any index columns a bound mask needs); ``bounds`` is
-    ``(idx_cols, start_b, start_closed, stop_b, stop_closed)`` or None.
-    The exact lexicographic prefix mask mirrors
-    `Series._pandas_bound_mask` in pyarrow.compute, applied AFTER the
-    cast to Spark's arrow types so timestamp comparisons see ONE
-    timezone convention (Spark-written segments read tz=UTC, legacy
-    INT96 reads naive — the cast unifies both; naive datetime bounds
-    are UTC-localized to match, the session timezone being UTC). The
-    coarse leading-index filters keep row-group pruning; a file whose
-    physical type refuses the comparison (naive legacy timestamps)
-    retries unfiltered — the exact mask still clips it."""
-    import datetime as _dt
-
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    read_cols = [f.name for f in read_struct.fields]
-    target = to_arrow_schema(read_struct)
-
-    def utcize(v):
-        if isinstance(v, _dt.datetime) and v.tzinfo is None:
-            return v.replace(tzinfo=_dt.timezone.utc)
-        return v
-
-    filters = [(c, op, utcize(v)) for c, op, v in filters]
-    if bounds is not None:
-        idx_b, start_b, s_cl, stop_b, e_cl = bounds
-        bounds = (
-            idx_b,
-            tuple(map(utcize, start_b)) if start_b is not None else None,
-            s_cl,
-            tuple(map(utcize, stop_b)) if stop_b is not None else None,
-            e_cl,
-        )
-
-    bound_mask = _pa_bound_mask
-
-    def read(batches):
-        import posixpath
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-        from pyarrow import fs as pafs
-
-        fsys, root = pafs.FileSystem.from_uri(root_uri)
-        rels = [
-            rel
-            for batch in batches
-            for rel in batch.column("rel").to_pylist()
-        ]
-        if not rels:
-            return
-
-        mask_expr = (
-            _arrow_mask_expr(mask_plan) if mask_plan is not None else None
-        )
-
-        def finish(tbl):
-            tbl = tbl.select(read_cols).cast(target)
-            if bounds is not None:
-                idx, start_b, s_closed, stop_b, e_closed = bounds
-                if start_b is not None:
-                    tbl = tbl.filter(
-                        bound_mask(tbl, idx, start_b, s_closed, True)
-                    )
-                if stop_b is not None:
-                    tbl = tbl.filter(
-                        bound_mask(tbl, idx, stop_b, e_closed, False)
-                    )
-            if mask_expr is not None:
-                # exact mask post-cast — authoritative even when the
-                # read-time pushdown below had to retry unfiltered
-                tbl = tbl.filter(mask_expr)
-            return tbl
-
-        if len(rels) > 8:
-            # fragmented partition: ONE C++ dataset scan instead of
-            # per-file pq.read_table calls (GIL-bound python overhead
-            # dominates many small files — the `_read_run_local`
-            # lesson). Scanner.to_table materializes in fragment
-            # (= given-path) order, preserving the partition's sort.
-            import pyarrow.dataset as pads
-
-            expr = None
-            for c, op, v in filters:
-                f = pads.field(c)
-                if op == ">=":
-                    e = f >= v
-                elif op == ">":
-                    e = f > v
-                elif op == "<=":
-                    e = f <= v
-                else:
-                    e = f < v
-                expr = e if expr is None else expr & e
-            if mask_expr is not None:
-                expr = mask_expr if expr is None else expr & mask_expr
-            ds = pads.dataset(
-                [posixpath.join(root, rel) for rel in rels],
-                format="parquet",
-                filesystem=fsys,
-            )
-            try:
-                tbl = ds.to_table(columns=read_cols, filter=expr)
-            except (pa.ArrowInvalid, pa.ArrowNotImplementedError):
-                if expr is None:
-                    raise
-                tbl = ds.to_table(columns=read_cols)
-            tbl = finish(tbl)
-            if tbl.num_rows:
-                yield from tbl.select(out_cols).to_batches()
-            return
-        read_filters = filters or None
-        if mask_expr is not None:
-            # read_table takes ONE filters value — fold the coarse
-            # tuples into the mask expression so both still prune
-            import pyarrow.dataset as pads
-
-            read_filters = mask_expr
-            for c, op, v in filters:
-                f = pads.field(c)
-                e = (
-                    f >= v if op == ">=" else f > v if op == ">"
-                    else f <= v if op == "<=" else f < v
-                )
-                read_filters = read_filters & e
-        for rel in rels:
-            full = posixpath.join(root, rel)
-            try:
-                tbl = pq.read_table(
-                    full,
-                    filesystem=fsys,
-                    columns=read_cols,
-                    filters=read_filters,
-                )
-            except (pa.ArrowInvalid, pa.ArrowNotImplementedError):
-                if read_filters is None:
-                    raise
-                tbl = pq.read_table(
-                    full, filesystem=fsys, columns=read_cols
-                )
-            tbl = finish(tbl)
-            if tbl.num_rows:
-                yield from tbl.select(out_cols).to_batches()
-
-    return read
 
 
 class Series:
@@ -767,7 +584,7 @@ class Series:
         `mapInArrow` job; only digests, bounds and zone maps come back
         to the driver (which then `segwriter.publish`es). Partition ``p``
         writes ``part-<p:05d>-<page:05d>.parquet`` into one shared
-        ``_tmp-`` dir, so the sorted file order (`_ordered_scan`) is the
+        ``_tmp-`` dir, so the sorted file order (`segscan`) is the
         row order and the Merkle order. Where executors cannot open the
         store (``arrow_readable`` False: HTTP, memory, cache-wrapped),
         the tasks return their pages and the driver publishes the same
@@ -845,24 +662,27 @@ class Series:
         mask: str | None = None,
     ) -> DataFrame:
         """``mask=`` takes an s-expr predicate (``"(< self.value 28)"``,
-        reference `lakota/frame.py:157-169`) applied INSIDE the read:
-        on the classic path it reaches the parquet scan (Catalyst
-        pushdown), and on the sorted fast path its pushable subset
-        compiles to a pyarrow filter inside the ordered mapInArrow scan
-        (row-group pruning + exact arrow-side filter — VERDICT r9 #3:
-        a filter written ON TOP of the mapInArrow relation can never be
-        pushed, so hand it to ``mask=`` instead). Masks outside the
-        pushable subset fall back to the classic path; KV series apply
-        the mask AFTER last-writer-wins dedup (filtering first could
-        resurrect shadowed rows)."""
+        reference `lakota/frame.py:157-169`) applied INSIDE the read: its
+        pushable subset compiles to a pyarrow filter inside the segment
+        scan (row-group pruning + exact arrow-side filter — VERDICT r9
+        #3: a filter written ON TOP of the mapInArrow relation can never
+        be pushed, so hand it to ``mask=`` instead). Masks outside the
+        pushable subset filter the scan's output; KV series with
+        overlapping segments apply the mask AFTER last-writer-wins dedup
+        (filtering first could resurrect shadowed rows).
+
+        Rows come from ONE `mapInArrow` relation over the pruned
+        segments (`_read`): segments in interval order, partition order
+        == sort order, so ``sort=True`` costs no Exchange or Sort.
+        Overlapping KV is the one layout that shuffles (the dedup
+        window), then sorts."""
         segs = self.segments(start, stop, before, closed)
         cols = select or list(self.schema.columns)
         # KV dedup is only NEEDED when two queried segments could hold
         # the same key — i.e. their intervals overlap. A pairwise-
         # disjoint queried set (the append-heavy registry shape) makes
         # last-writer-wins a per-row no-op, so the read drops the
-        # window exchange entirely and qualifies for the same raw-scan
-        # / exchange-free-sorted fast paths as a non-KV series
+        # window exchange entirely and reads like a non-KV series
         # (round 13; differential + plan contracts in
         # tests/test_zonemap.py / test_plans.py).
         kv_dedup = self.schema.kv
@@ -872,14 +692,13 @@ class Series:
             kv_dedup = not zonemap.pairwise_disjoint(
                 [s for s in segs if s.path]
             )
-        mask_col = None
-        mask_plan = mask_fields = None
+        mask_col = mask_plan = None
         if mask is not None:
             from lakota_spark import sexpr as _sexpr
 
             mc = _sexpr.evaluate(_sexpr.parse(mask))
             mask_col = mc.value if isinstance(mc, _sexpr.Alias) else mc
-            mask_plan, mask_fields = self._compile_mask(mask)
+            mask_plan, _ = self._compile_mask(mask)
             if mask_plan is not None:
                 # value-column zone maps: skip whole segments the mask
                 # provably cannot match. Overlapping KV goes through
@@ -896,52 +715,22 @@ class Series:
                     if kv_dedup
                     else zonemap.prune(segs, mask_plan)
                 )
-        if sort:
-            # Sorted reads of clean (never-clipped) segments skip the
-            # global orderBy entirely (VERDICT r8 #2): segments are
-            # pairwise disjoint and internally sorted, so an interval-
-            # ordered scan IS the sorted frame — no range exchange, no
-            # Sort node (see `_ordered_scan`).
-            fast = None
-            if mask is None or mask_plan is not None:
-                fast = self._ordered_scan(
-                    segs,
-                    self.schema.coerce_bound(start),
-                    self.schema.coerce_bound(stop),
-                    *CLOSED[closed],
-                    cols=cols,
-                    mask_plan=mask_plan,
-                    mask_cols=tuple(mask_fields or ()),
-                    kv_ok=self.schema.kv and not kv_dedup,
-                )
-            if fast is not None:
-                if offset:
-                    fast = fast.offset(offset)
-                if limit is not None:
-                    fast = fast.limit(limit)
-                return fast
-
-        # The query-range predicate MUST be handed to the scan before the
-        # _seg_key projection: input_file_name() is nondeterministic, so
-        # Catalyst will not push any filter placed above it down to parquet.
-        def _pred(d):
-            d = self._apply_range(
-                d,
-                self.schema.coerce_bound(start),
-                self.schema.coerce_bound(stop),
-                *CLOSED[closed],
-            )
-            if mask_col is not None and not kv_dedup:
-                d = d.where(mask_col)
-            return d
-
-        df = self._read_segments(segs, range_pred=_pred, kv=kv_dedup)
+        rng = segscan.range_plan(
+            self.schema,
+            self.schema.coerce_bound(start),
+            self.schema.coerce_bound(stop),
+            *CLOSED[closed],
+        )
         if kv_dedup:
-            df = self._kv_dedup(df)
+            df = self._read(segs, rng, kv_dedup=True)
             if mask_col is not None:
                 df = df.where(mask_col)
-        if sort:
-            df = df.orderBy(*[F.col(c) for c in self.schema.idx])
+            if sort:
+                df = df.orderBy(*[F.col(c) for c in self.schema.idx])
+        elif mask_col is not None and mask_plan is None:
+            df = self._read(segs, rng).where(mask_col)
+        else:
+            df = self._read(segs, segscan.conj(rng, mask_plan), cols=cols)
         if offset:
             df = df.offset(offset)
         if limit is not None:
@@ -949,14 +738,15 @@ class Series:
         return df.select(*cols)
 
     def _compile_mask(self, mask: str | None, tz_aware: bool = True):
-        """Compile ``mask`` to a pyarrow filter plan for the ordered
+        """Compile ``mask`` to a pyarrow filter plan for the segment
         scan: `sexpr.to_filter_plan` handles the pushable subset,
         literals compared to timestamp index/value columns coerce to
         UTC datetimes (matching the post-cast arrow schema), and the
         plan is VALIDATED driver-side against an empty cast table so a
-        type the executors would choke on falls back to the classic
-        path instead of failing mid-job. Returns (plan, fields) or
-        (None, None) when the mask is absent or not fast-path-safe.
+        type the executors would choke on is applied as a Spark filter
+        on the scan's output instead of failing mid-job. Returns
+        (plan, fields) or (None, None) when the mask is absent or not
+        pushable.
         ``tz_aware=False`` keeps timestamp literals naive for the
         driver-local reader, whose cast target is naive ns."""
         if mask is None:
@@ -1004,8 +794,8 @@ class Series:
             # Spark totals-orders doubles with NaN greatest; Arrow
             # follows IEEE (NaN fails every comparison). Rewrite float
             # comparisons so the arrow evaluation — and the zone-map
-            # pruning that consumes the same plan — matches the classic
-            # Catalyst path on NaN rows.
+            # pruning that consumes the same plan — matches Spark's own
+            # filter on NaN rows.
             plan = _sexpr.spark_nan_semantics(
                 plan,
                 {
@@ -1028,7 +818,7 @@ class Series:
                     [(c, pa_ns[t]) for c, t in self.schema.columns.items()]
                 ).empty_table()
             probe.filter(_arrow_mask_expr(plan))
-        except Exception:  # noqa: BLE001 — any rejection means classic path
+        except Exception:  # noqa: BLE001 — any rejection: filter on top
             return None, None
         return plan, fields
 
@@ -1146,8 +936,8 @@ class Series:
         start_b = self.schema.coerce_bound(start)
         stop_b = self.schema.coerce_bound(stop)
         start_closed, stop_closed = CLOSED[closed]
-        # coarse row-group pruning on the leading index column (the same
-        # shape `_bound_pred` pushes to the Spark scan)
+        # coarse row-group pruning on the leading index column; the exact
+        # prefix bound applies below (`_pandas_bound_mask`)
         filters = []
         if start_b is not None:
             op = ">=" if (start_closed or len(start_b) > 1) else ">"
@@ -1297,8 +1087,8 @@ class Series:
         )
 
     def _pandas_bound_mask(self, pdf, bound, closed: bool, is_start: bool):
-        """Pandas twin of `_bound_pred`: lexicographic prefix compare
-        over the leading ``len(bound)`` index columns."""
+        """Pandas twin of `segscan.bound_plan`: lexicographic prefix
+        compare over the leading ``len(bound)`` index columns."""
         import numpy as np
 
         idx = self.schema.idx
@@ -1311,347 +1101,76 @@ class Series:
             eq_all &= (s == v).to_numpy()
         return strict | eq_all if closed else strict
 
-    def _resurrect_missing(self, paths: list[str]) -> None:
-        """Move referenced segment dirs back out of GC trash (see
-        `_read_segments`); missing dirs with no trash copy are left for
-        the retry to fail loudly on."""
-        from lakota_spark.repo import TRASH_MARK
-
-        fs = self.collection.fs
-        seg_prefix = self.collection.seg_prefix
-        listing = None
-        for p in paths:
-            if fs.exists(f"{seg_prefix}/{p}"):
-                continue
-            if listing is None:
-                listing = fs.ls(seg_prefix)
-            for name in listing:
-                if name.startswith(p + TRASH_MARK):
-                    fs.move(f"{seg_prefix}/{name}", f"{seg_prefix}/{p}")
-                    break
-
-    def _read_paths(self, paths: list[str]) -> DataFrame:
-        """Parquet scan over segment dirs with the GC self-heal retry.
-
-        GC bury race (inherited from the reference `lakota/repo.py:
-        368-375`): a concurrent gc() lists segments BEFORE scanning
-        revisions, so a segment written-but-not-yet-committed can be
-        soft-deleted; the reference only re-enables it on the NEXT
-        gc pass, failing reads in between. Self-heal instead:
-        resurrect referenced-but-buried segments from trash and
-        retry once. Zero cost on the happy path (no per-segment
-        existence probes — the failed read is the probe)."""
-        fs = self.collection.fs
-        seg_prefix = self.collection.seg_prefix
-        # per-path listing tasks dominate many-segment scans at the
-        # Spark default (10000 == one task per path); batch them for
-        # the DURATION OF THE LISTING only (file-index construction
-        # happens inside spark.read.parquet), then restore — a
-        # session-wide override would leak into every later parquet
-        # scan on user-supplied sessions, including non-lakota ones
-        # (ADVICE r6). Only the untouched default is overridden — an
-        # explicit user setting (session.py sets 64 for engine-built
-        # sessions) wins.
-        key = "spark.sql.sources.parallelPartitionDiscovery.parallelism"
-        override = (
-            len(paths) > 32 and self.spark.conf.get(key, "10000") == "10000"
-        )
-        if override:
-            self.spark.conf.set(key, "64")
-        try:
-            try:
-                return self.spark.read.parquet(
-                    *fs.spark_read_uris(
-                        [f"{seg_prefix}/{p}" for p in paths]
-                    )
-                )
-            except Exception:
-                self._resurrect_missing(paths)
-                return self.spark.read.parquet(
-                    *fs.spark_read_uris(
-                        [f"{seg_prefix}/{p}" for p in paths]
-                    )
-                )
-        finally:
-            if override:
-                self.spark.conf.unset(key)
-
-    def _read_segments(
-        self, segs: list[Segment], range_pred=None, kv: bool | None = None
+    def _read(
+        self, segs: list[Segment], plan=None, kv_dedup=False, cols=None
     ) -> DataFrame:
-        # `kv` = does this read need `_seg_seq` for last-writer-wins?
-        # Defaults to the schema flag; frame() passes False for a
-        # pairwise-disjoint KV set, which routes the read through the
-        # join-free clean path below (raw parquet scan, no seq column,
-        # no broadcast bounds-join)
-        kv = self.schema.kv if kv is None else kv
-        live = [s for s in segs if s.path]
-        if not live:
-            out = self.spark.createDataFrame(
-                [], self.schema.struct_type()
-            )
-            if kv:
-                # `_kv_dedup` windows on `_seg_seq` unconditionally —
-                # the empty relation must carry it too (reachable since
-                # r13's shadowing-aware pruning can empty the segment
-                # list, and for an empty KV series before that)
-                out = out.withColumn("_seg_seq", F.lit(0).cast("long"))
-            return out
-        # Join-free fast path: a segment never clipped by an overlay (no
-        # "clip" marker) has effective bounds ⊇ its file's rows — the
-        # per-row in_seg test is vacuously true, so its files scan
-        # directly (predicates push down to parquet, no join in the
-        # plan). Only clipped pieces — and KV reads, which need
-        # `_seg_seq` for last-writer-wins — pay the broadcast
-        # bounds-join. Append-only and post-defrag series read at raw
-        # parquet-scan speed.
-        clean = [] if kv else [s for s in live if not s.meta.get("clip")]
-        dirty = live if kv else [s for s in live if s.meta.get("clip")]
-        parts = []
-        if clean:
-            df = self._read_paths(sorted({s.path for s in clean}))
-            if range_pred is not None:
-                df = range_pred(df)
-            parts.append(df.withColumn("_seg_seq", F.lit(0).cast("long")))
-        if dirty:
-            df = self._read_paths(sorted({s.path for s in dirty}))
-            if range_pred is not None:
-                df = range_pred(df)  # before input_file_name: stays pushable
-            bounds = self.collection.bounds_df(dirty)
-            seg_key = F.element_at(F.split(F.input_file_name(), "/"), -2)
-            idx = self._idx_struct()
-            in_seg = (
-                (idx > F.col("_seg_start"))
-                | (F.col("_seg_start_closed") & (idx == F.col("_seg_start")))
-            ) & (
-                (idx < F.col("_seg_stop"))
-                | (F.col("_seg_stop_closed") & (idx == F.col("_seg_stop")))
-            )
-            parts.append(
-                df.withColumn("_seg_key", seg_key)
-                .join(F.broadcast(bounds), on="_seg_key")
-                .where(in_seg)
-                .drop(
-                    "_seg_key",
-                    "_seg_start",
-                    "_seg_stop",
-                    "_seg_start_closed",
-                    "_seg_stop_closed",
-                    "_seg_label",
-                )
-            )
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+        """Rows of ``segs`` passing ``plan`` as a `mapInArrow` relation
+        over the `segscan` chunks, one partition per chunk in segment
+        order: partition order == sort order, no Exchange. ``cols``
+        narrows the read (default: every column). ``kv_dedup``: every
+        row carries `segscan.SEQ` and last-writer-wins resolves
+        overlapping segments (one shuffle; row order lost).
 
-    def _ordered_scan(
-        self,
-        segs: list[Segment],
-        start_b,
-        stop_b,
-        start_closed: bool,
-        stop_closed: bool,
-        cols: list[str],
-        mask_plan=None,
-        mask_cols: tuple[str, ...] = (),
-        kv_ok: bool = False,
-    ) -> DataFrame | None:
-        """Exchange-free SORTED distributed read (VERDICT r8 #2).
+        Classic sessions spread the chunks with ``sc.parallelize`` (about
+        one writer page of rows per task, at most 2×parallelism tasks).
+        Spark Connect has no RDD surface: a local relation
+        range-partitioned on each chunk's index keeps chunk order (one
+        tiny exchange over plan blobs, not data)."""
+        import pickle
 
-        A native parquet scan cannot report ordering to Catalyst from
-        Python (file splits are bin-packed by size, losing file order),
-        so ``frame(sort=True)`` historically paid a full range-exchange
-        Sort that is pure overhead: clean segments are pairwise disjoint,
-        interval-ordered in the snapshot, and internally sorted (every
-        writer encodes sorted rows, and part-file names sort in row
-        order — `_stage_df`). This scan exploits that: the ordered part-file list is
-        packed into interval-contiguous partitions of a `mapInArrow`
-        relation, each partition reads its files with pyarrow IN ORDER,
-        and partition order == global sort order — so collect / limit /
-        offset / toPandas see sorted rows with ZERO Exchange or Sort
-        nodes in the plan (`tests/test_plans.py` pins this). Pushdown is
-        preserved by hand: coarse leading-index filters go to
-        ``pq.read_table(filters=)`` (row-group pruning), the exact
-        lexicographic prefix bound applies arrow-side, and only
-        ``cols ∪ idx`` columns are read.
+        from pyspark.sql.types import LongType, StructField, StructType
 
-        Scale shape: `scan_chunks` packs the files into one task per
-        ~PAGE_LEN rows (at most 2×parallelism tasks), bytes never touch
-        the driver, reads are C++ parquet on the executors.
-        Returns None when the scan shape disqualifies — KV needing
-        last-writer-wins dedup (``kv_ok=True`` means the caller proved
-        the queried set pairwise-disjoint, so dedup is a no-op and the
-        scan applies; the KV snapshot keeps commit order, so sort by
-        start to restore interval order), clipped segments (need the
-        bounds join), or a backend that resolves to neither a
-        pyarrow-readable root nor a local read-through cache — and the
-        classic scan + orderBy path applies."""
-        if self.schema.kv and not kv_ok:
-            return None
-        live = [s for s in segs if s.path]
-        if not live or any(s.meta.get("clip") for s in live):
-            return None
-        if self.schema.kv:
-            live = sorted(live, key=lambda s: tuple(s.start))
-        rels = [
-            f"{self.collection.seg_prefix}/{s.path}" for s in live
+        fields = self.schema.struct_type().fields
+        if kv_dedup:
+            fields = [*fields, StructField(segscan.SEQ, LongType())]
+        elif self.schema.kv:
+            # the KV snapshot keeps commit order: interval order is the
+            # sort order of a disjoint set
+            segs = sorted(segs, key=lambda s: tuple(s.start))
+        if cols is not None:
+            fields = [f for c in cols for f in fields if f.name == c]
+        struct = StructType(fields)
+        spark = self.spark
+        try:
+            sc = spark.sparkContext
+            ceiling = 2 * sc.defaultParallelism
+        except Exception:  # noqa: BLE001 — Connect: no sparkContext
+            sc = None
+            ceiling = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        metas = [
+            pickle.dumps(m)
+            for m in segscan.partitions(self, segs, plan, ceiling, kv_dedup)
         ]
-        if len(set(rels)) != len(rels):
-            return None  # one file under two pieces ⇒ effectively clipped
-        fs = self.collection.fs
-        if getattr(fs, "arrow_readable", False):
-            base = fs  # executors reopen pafs.FileSystem.from_uri(fs.uri)
-            materialize = None
-        elif hasattr(fs, "cache"):
-
-            def materialize():
-                fs.spark_read_uris(rels)  # fetch through the read cache
-
-            materialize()
-            base = fs.cache
+        if sc is not None:
+            rdd = sc.parallelize([(m,) for m in metas], len(metas))
+            parts = spark.createDataFrame(rdd, "part binary")
         else:
-            return None
-
-        def list_parts():
-            files = []
-            for rel in rels:  # interval order == global sort order
-                names = sorted(
-                    n for n in base.ls(rel) if n.endswith(".parquet")
+            parts = (
+                spark.createDataFrame(
+                    list(enumerate(metas)), "chunk int, part binary"
                 )
-                if not names:
-                    return None
-                files.extend(f"{rel}/{n}" for n in names)
-            return files
-
-        try:
-            files = list_parts()
-        except OSError:
-            files = None
-        if files is None:
-            # GC bury race: resurrect referenced-but-buried segments and
-            # retry once (same self-heal as `_read_paths`)
-            self._resurrect_missing([s.path for s in live])
-            if materialize is not None:
-                materialize()
-            try:
-                files = list_parts()
-            except OSError:
-                return None
-            if files is None:
-                return None
-        idx = list(self.schema.idx)
-        need_mask = start_b is not None or stop_b is not None
-        read_cols = list(
-            dict.fromkeys(
-                [*cols, *(idx if need_mask else []), *mask_cols]
+                .repartitionByRange(len(metas), "chunk")
+                .sortWithinPartitions("chunk")
+                .select("part")
             )
-        )
-        # coarse row-group pruning on the leading index column — the
-        # same shape `_bound_pred` pushes to a native scan
-        filters = []
-        if start_b is not None:
-            op = ">=" if (start_closed or len(start_b) > 1) else ">"
-            filters.append((idx[0], op, start_b[0]))
-        if stop_b is not None:
-            op = "<=" if (stop_closed or len(stop_b) > 1) else "<"
-            filters.append((idx[0], op, stop_b[0]))
-        from pyspark.sql.types import StructType
+        schema = self.schema.struct_type()
 
-        fields = {f.name: f for f in self.schema.struct_type().fields}
-        out_struct = StructType([fields[c] for c in cols])
-        read_struct = StructType([fields[c] for c in read_cols])
-        reader = _ordered_reader(
-            base.uri,
-            read_struct,
-            cols,
-            filters,
-            (idx, start_b, start_closed, stop_b, stop_closed)
-            if need_mask
-            else None,
-            mask_plan=mask_plan,
-        )
-        rows = sum(s.length for s in live)
-        try:
-            # classic: parallelize places one chunk per partition WITHOUT
-            # an exchange — each task opens its own segment files
-            sc = self.spark.sparkContext
-            chunks = scan_chunks(files, rows, 2 * sc.defaultParallelism)
-            rdd = sc.parallelize(chunks, len(chunks)).flatMap(
-                lambda chunk: [(f,) for f in chunk]
-            )
-            fdf = self.spark.createDataFrame(rdd, "rel string")
-        except Exception:  # noqa: BLE001 — Connect: no RDD surface; a
-            # local relation range-partitioned on each file's chunk
-            # keeps chunk order (one tiny exchange over pathnames, not
-            # data), and sorting on the file's position restores file
-            # order inside a partition
-            chunks = scan_chunks(
-                files,
-                rows,
-                int(self.spark.conf.get("spark.sql.shuffle.partitions")),
-            )
-            tagged = [(i, f) for i, chunk in enumerate(chunks) for f in chunk]
-            fdf = (
-                self.spark.createDataFrame(
-                    [(i, pos, f) for pos, (i, f) in enumerate(tagged)],
-                    "chunk int, pos int, rel string",
-                )
-                .repartitionByRange(len(chunks), "chunk")
-                .sortWithinPartitions("pos")
-                .select("rel")
-            )
-        return fdf.mapInArrow(reader, out_struct)
+        def read(batches):
+            for batch in batches:
+                for meta in batch.column("part").to_pylist():
+                    yield from segscan.scan(
+                        pickle.loads(meta), struct, schema
+                    )
 
-    def _apply_range(
-        self, df: DataFrame, start, stop, start_closed: bool, stop_closed: bool
-    ) -> DataFrame:
-        """Query-interval predicate with closed-bound semantics (P5/P6).
-        Prefix bounds constrain only the leading index columns
-        (`lakota/series.py:12-20`).
-
-        Pushdown shape matters: a STRUCT comparison never reaches the
-        parquet scan, so single-column bounds emit plain column predicates
-        (fully pushable → row-group/page skipping), and multi-column
-        bounds add a pushable coarse predicate on the leading column plus
-        the exact lexicographic struct compare as a post-filter.
-        """
-        idx = self.schema.idx
-        if start is not None:
-            df = df.where(
-                self._bound_pred(start, start_closed, is_start=True)
-            )
-        if stop is not None:
-            df = df.where(self._bound_pred(stop, stop_closed, is_start=False))
-        return df
-
-    def _bound_pred(self, bound, closed: bool, is_start: bool):
-        idx = self.schema.idx
-        k = len(bound)
-        if k == 1:
-            c = F.col(idx[0])
-            v = F.lit(bound[0])
-            if is_start:
-                return (c >= v) if closed else (c > v)
-            return (c <= v) if closed else (c < v)
-        s = F.struct(*[F.col(c) for c in idx[:k]])
-        lit = F.struct(*[F.lit(v).alias(c) for c, v in zip(idx[:k], bound)])
-        exact = (s > lit) if is_start else (s < lit)
-        if closed:
-            exact = exact | (s == lit)
-        # coarse leading-column predicate: pushable to the parquet scan
-        lead = F.col(idx[0])
-        coarse = (lead >= F.lit(bound[0])) if is_start else (
-            lead <= F.lit(bound[0])
-        )
-        return coarse & exact
+        df = parts.mapInArrow(read, struct)
+        return self._kv_dedup(df) if kv_dedup else df
 
     def _kv_dedup(self, df: DataFrame) -> DataFrame:
         """Last-writer-wins by key: later commits (higher seq) shadow
         earlier rows of the same key (`lakota/series.py:449-475`)."""
         w = Window.partitionBy(
             *[F.col(c) for c in self.schema.idx]
-        ).orderBy(F.col("_seg_seq").desc())
+        ).orderBy(F.col(segscan.SEQ).desc())
         return (
             df.withColumn("_rn", F.row_number().over(w))
             .where(F.col("_rn") == 1)
@@ -1720,11 +1239,7 @@ class Series:
                 k = len(segs)  # overlapping KV needs every segment for
                 # last-writer-wins
             while True:
-                df = self._read_segments(
-                    segs[len(segs) - k :], kv=kv_dedup
-                )
-                if kv_dedup:
-                    df = self._kv_dedup(df)
+                df = self._read(segs[len(segs) - k :], kv_dedup=kv_dedup)
                 if k >= len(segs):
                     break
                 if df.limit(length).count() >= length:
@@ -1901,8 +1416,9 @@ class Series:
         return None
 
     def __len__(self) -> int:
-        """Spark count over effective bounds (exact under overlays)."""
-        return self.frame(sort=False).count()
+        """Spark count over effective bounds (exact under overlays); the
+        scan decodes only the leading index column."""
+        return self.frame(sort=False, select=self.schema.idx[:1]).count()
 
     def __getitem__(self, key) -> "SeriesSlice":
         """Quickstart slice syntax (`lakota/__init__.py` front page):
@@ -1943,7 +1459,8 @@ class SeriesSlice:
         return self.series.df(start=self.start, stop=self.stop, **kwargs)
 
     def __len__(self) -> int:
-        return self.frame(sort=False).count()
+        idx = self.series.schema.idx[:1]
+        return self.frame(sort=False, select=idx).count()
 
 
 class KVSeries(Series):

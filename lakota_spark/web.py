@@ -30,8 +30,8 @@ Endpoints (reference parity, `lkweb/main.py:68-244`):
                                           ``(last self.col)`` reduce
 
 Paging goes through ``Series.frame(limit=, offset=, select=)`` — the
-round-9 ordered scan serves each page without a global sort, so the UI
-stays responsive on large series. Read-only by construction: the
+interval-ordered segment scan serves each page without a global sort,
+so the UI stays responsive on large series. Read-only by construction: the
 handler never mutates the repo; like the reference it is a deployment
 building block (put it behind your gateway), not a multi-tenant
 service.

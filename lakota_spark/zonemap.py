@@ -278,7 +278,8 @@ def prune_kv(segments, plan):
 
     Differentially verified against a pruning-free pandas
     replay (Hypothesis, `tests/test_zonemap.py`); read-amplification
-    win measured by `scripts/probe_kv_zonemap.py`."""
+    win measured in NOTES.md, "KV zone-map pruning with shadowing
+    awareness" (123 -> 5 segments)."""
     from lakota_spark.commit import cmp_prefix
 
     if plan is None or not segments:

@@ -50,3 +50,20 @@ def any_repo(request, spark):
         else:
             yield Repo(root, spark)
     shutil.rmtree(root, ignore_errors=True)
+
+
+@pytest.fixture()
+def planned(monkeypatch):
+    """Every `segscan.partitions` result (the planned chunks of each
+    segment read) in call order; the planner itself is unchanged."""
+    from lakota_spark import segscan
+
+    seen = []
+    real = segscan.partitions
+
+    def spy(*args, **kwargs):
+        seen.append(real(*args, **kwargs))
+        return seen[-1]
+
+    monkeypatch.setattr(segscan, "partitions", spy)
+    return seen

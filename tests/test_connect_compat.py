@@ -32,9 +32,9 @@ Degradation map (why each allowlisted site is safe under Connect):
   `df.explain()` fallback.
 - series.py sorted-write partition gate: try/except → always-sort path
   (correct, conservative).
-- series.py `_ordered_scan` file fan-out: `sc.parallelize` → local
-  relation range-partitioned on each file's chunk id, then sorted on
-  file position (partition order stays the sort order;
+- series.py `_read` chunk fan-out: `sc.parallelize` → local relation
+  of the planned chunks range-partitioned on the chunk index, then
+  sorted on it (partition order stays the sort order;
   `tests/test_scan_chunks.py` forces this branch).
 - cli.py / bench.py / scripts: driver-side tools that build their own
   classic local session via `get_spark()` — classic by design, never
@@ -102,7 +102,7 @@ _ALLOWED = {
     ("operators/text.py", r"sparkContext"): 1,  # identity fallback
     ("operators/skew.py", r"\._jc\b"): 1,  # guarded classic fallback
     ("series.py", r"_jdf"): 1,  # _physical_plan_str explain fallback
-    ("series.py", r"sparkContext"): 2,  # sort gate + file fan-out
+    ("series.py", r"sparkContext"): 2,  # sort gate + chunk fan-out
     ("series.py", r"\.rdd\b"): 1,
     ("series.py", r"parallelize\("): 1,
 }

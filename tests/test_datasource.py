@@ -462,7 +462,7 @@ def test_writer_type_matrix_roundtrip(spark, ds_repo):
 def test_datasource_over_http_backend(spark):
     # non-pyarrow remote: the reader materializes the needed segment
     # dirs through the read cache at planning time and executors scan
-    # the local cache bytes (the _ordered_scan backend discipline)
+    # the local cache bytes (the `segscan` backend discipline)
     import shutil
     import tempfile
 
@@ -1200,3 +1200,89 @@ def test_stream_survives_retention_trim_behind_it(spark, ds_repo):
         assert emitted() == total + 1
     finally:
         q.stop()
+
+
+def _stream_rows(repo, table):
+    """Every row the stream reader emits from the first revision to
+    head, read through its own planner and scanner on the driver."""
+    from lakota_spark.datasource import LakotaStreamReader
+
+    opts = {"path": repo.root, "table": table}
+    schema = _open(repo, table).schema.struct_type()
+    r = LakotaStreamReader(opts, schema)
+    parts = r.partitions({"rev": ""}, r.latestOffset())
+    return sorted(
+        tuple(row.values())
+        for p in parts
+        for b in r.read(p)
+        for row in b.to_pylist()
+    )
+
+
+def _open(repo, table):
+    cname, label = table.split("/")
+    return repo.collection(cname).series(label)
+
+
+def test_clipped_timestamp_series_matches_frame(spark, ds_repo):
+    """An overlay clips a timestamp-indexed segment: the batch reader
+    applies the clip with UTC literals (it used to raise ArrowInvalid
+    comparing tz-aware rows with naive bounds) and equals
+    frame(sort=False); the stream reader emits both writes as written."""
+    import datetime as dt
+
+    repo, _ = ds_repo
+    coll = repo.create_collection(
+        Schema(ts="timestamp*", value="float"), "tsc"
+    )
+    s = coll.series("x")
+    base = dt.datetime(2024, 1, 1)
+    s.write({"ts": [base + dt.timedelta(hours=i) for i in range(50)],
+             "value": [float(i) for i in range(50)]})
+    s.write({"ts": [base + dt.timedelta(hours=h) for h in (20, 30)],
+             "value": [99.0, 98.0]})
+    assert any(g.meta.get("clip") for g in coll.snapshot().for_label("x"))
+    frame = sorted(
+        (r.ts, r.value) for r in s.frame(sort=False).collect()
+    )
+    assert len(frame) == 50 - 9
+    got = sorted((r.ts, r.value) for r in _load(spark, repo, "tsc/x").collect())
+    assert got == frame
+    rng = (
+        _load(spark, repo, "tsc/x")
+        .where("ts >= '2024-01-01 10:00:00' and value < 50")
+        .collect()
+    )
+    assert sorted((r.ts, r.value) for r in rng) == [
+        (t, v) for t, v in frame if t >= base + dt.timedelta(hours=10)
+        and v < 50
+    ]
+    assert len(_stream_rows(repo, "tsc/x")) == 52
+
+
+def test_gc_buried_segment_is_resurrected(spark, ds_repo):
+    """A referenced segment dir that gc moved to trash (the bury race)
+    is moved back by the planner, and every row comes back through
+    frame(), the batch reader and the stream reader (the readers used
+    to return the other segment's rows only)."""
+    from lakota_spark.repo import TRASH_MARK
+
+    repo, _ = ds_repo
+    coll = repo.create_collection(Schema(ts="int*", value="float"), "gc")
+    s = coll.series("x")
+    s.write({"ts": list(range(50)), "value": [0.0] * 50})
+    s.write({"ts": list(range(50, 100)), "value": [1.0] * 50})
+    seg = next(g for g in coll.snapshot().for_label("x") if g.start == (0,))
+    rel = f"{coll.seg_prefix}/{seg.path}"
+
+    def bury():
+        coll.fs.move(rel, rel + TRASH_MARK + "00000000000000")
+        assert not coll.fs.exists(rel)
+
+    bury()
+    assert s.frame().count() == 100 and coll.fs.exists(rel)
+    bury()
+    assert _load(spark, repo, "gc/x").count() == 100
+    assert coll.fs.exists(rel)
+    bury()
+    assert len(_stream_rows(repo, "gc/x")) == 100

@@ -32,7 +32,7 @@ def model_apply(model: dict, op) -> None:
 
 def engine_rows(snap: Snapshot, writes: dict) -> dict:
     """Read back via segment pruning + effective-bound filtering — the
-    exact per-row predicate `Series._read_segments` evaluates in Spark."""
+    per-row clip `segscan` applies to each overlay-clipped segment."""
     out: dict[int, int] = {}
     for seg in snap.for_label("s"):
         rows = writes[seg.seq]  # rows physically in that segment's file

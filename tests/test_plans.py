@@ -43,18 +43,53 @@ def test_events_ns_range_pushdown(spark):
     assert "GreaterThanOrEqual(ts" in pushed and "LessThan(ts" in pushed
 
 
-def test_engine_read_pushdown(repo):
+def test_engine_read_pushdown(repo, planned, monkeypatch):
+    # range bounds reach the segment read twice: the planner only lists
+    # the files of segments inside the interval, and the scanner pushes
+    # the bound filter into its dataset scan; select reaches it as the
+    # column list (plus the index column the bound filter reads)
+    import pyarrow.dataset as pads
+
+    from lakota_spark import segscan
+    from lakota_spark.series import _arrow_mask_expr
+
     coll = repo.create_collection(Schema(ts="int*", value="float"), "p")
     s = coll.series("x")
-    s.write({"ts": list(range(50)), "value": [float(i) for i in range(50)]})
-    # the CLASSIC scan path (sort=False): range bounds reach parquet
-    df = s.frame(start=10, stop=20, sort=False)
-    plans.assert_pushed(
-        df, "GreaterThanOrEqual(ts,10)", "LessThanOrEqual(ts,20)"
+    for lo in (0, 50, 100):
+        s.write({"ts": list(range(lo, lo + 50)),
+                 "value": [float(i) for i in range(lo, lo + 50)]})
+    df = s.frame(start=10, stop=20, select=["value"], sort=False)
+    assert [r.value for r in df.collect()] == [float(i) for i in range(10, 21)]
+    (metas,) = planned
+    first = next(g for g in coll.snapshot().for_label("x") if g.start == (0,))
+    files = [f for m in metas for f, _ in m["files"]]
+    assert files and all(
+        f.startswith(f"{coll.seg_prefix}/{first.path}/") for f in files
     )
-    # select-pushdown: only requested columns in the scan
-    df2 = s.frame(select=["ts"], sort=False)
-    assert "value" not in plans.scan_columns(df2)
+    bounds = segscan.range_plan(s.schema, (10,), (20,), True, True)
+    assert [m["plan"] for m in metas] == [bounds]
+    # the executor scan of those chunks, run here under a spy
+    reads = []
+    real_ds = pads.dataset
+
+    class Spy:
+        def __init__(self, ds):
+            self.ds = ds
+
+        def to_table(self, **kwargs):
+            reads.append(kwargs)
+            return self.ds.to_table(**kwargs)
+
+    monkeypatch.setattr(pads, "dataset", lambda *a, **k: Spy(real_ds(*a, **k)))
+    got = [
+        v
+        for m in metas
+        for b in segscan.scan(m, df.schema, s.schema.struct_type())
+        for v in b.column("value").to_pylist()
+    ]
+    assert got == [float(i) for i in range(10, 21)]
+    assert [r["columns"] for r in reads] == [["value", "ts"]]
+    assert reads[0]["filter"].equals(_arrow_mask_expr(bounds))
 
 
 def test_engine_sorted_read_no_exchange(repo):
@@ -85,16 +120,18 @@ def test_engine_sorted_read_no_exchange(repo):
     assert vals == sorted(vals)
 
 
-def test_engine_sorted_read_overlay_falls_back_sorted(repo):
-    # a clipped (overlay-narrowed) segment disqualifies the ordered scan;
-    # the classic path must still return globally sorted rows
+def test_engine_sorted_read_overlay_no_sort(repo):
+    # a clipped (overlay-narrowed) segment is read in interval order
+    # with its bounds applied in the scan: globally sorted rows with no
+    # Sort or Exchange node
     coll = repo.create_collection(Schema(ts="int*", value="float"), "ovl")
     s = coll.series("x")
     s.write({"ts": list(range(100)), "value": [0.0] * 100})
     s.write({"ts": [40, 50], "value": [9.0, 9.0]}, start=40, stop=50)
     df = s.frame()
     plan = plans.explain_str(df, "simple")
-    assert "Sort" in plan, plan  # fallback path: explicit orderBy
+    assert "Sort" not in plan and "Exchange" not in plan, plan
+    assert "MapInArrow" in plan, plan
     rows = [(r.ts, r.value) for r in df.collect()]
     assert [t for t, _ in rows] == sorted(t for t, _ in rows)
     # the patch REPLACED [40, 50]: 40/50 carry the new value, 41–49 gone
@@ -478,9 +515,9 @@ def test_winnow_zero_shuffle_operator(spark):
 
 
 def test_clean_segment_read_is_join_free(spark, tmp_path):
-    # Never-clipped segments scan as a bare FileScan (no bounds join);
-    # an overlay update clips -> the join returns for the dirty pieces;
-    # defrag rewrites them -> the fast plan comes back.
+    # No segment read joins: never-clipped segments, overlay-clipped
+    # pieces (their bounds apply inside the scan) and the defragmented
+    # result all plan without a Join, with the same counts.
     from lakota_spark.repo import Repo
     from lakota_spark.schema import Schema
 
@@ -495,13 +532,14 @@ def test_clean_segment_read_is_join_free(spark, tmp_path):
         })
     plan = plans.explain_str(s.frame(sort=False), "simple")
     assert "Join" not in plan, plan
-    # overlay update: the clipped pieces of the old segment need the
-    # per-segment bounds filter again
-    s.write({"ts": [50], "v": [999.0]})
-    plan = plans.explain_str(s.frame(sort=False), "simple")
-    assert "Join" in plan, plan
     assert s.frame(sort=False).count() == 200
-    # defrag rewrites the fragmented run into clean segments: join-free
+    # overlay update clips the old segment: still no join
+    s.write({"ts": [50], "v": [999.0]})
+    assert any(g.meta.get("clip") for g in coll.snapshot().for_label("s"))
+    plan = plans.explain_str(s.frame(sort=False), "simple")
+    assert "Join" not in plan, plan
+    assert s.frame(sort=False).count() == 200
+    # defrag rewrites the fragmented run into clean segments
     coll.defrag()
     plan = plans.explain_str(s.frame(sort=False), "simple")
     assert "Join" not in plan, plan
@@ -950,7 +988,7 @@ def test_lm_salted_join_spreads_hot_key(spark):
         spark.conf.set("spark.sql.adaptive.enabled", aqe)
 
 
-def test_kv_registry_scan_plan(spark):
+def test_kv_registry_scan_plan(spark, planned):
     # round 13: the disjoint-KV registry read must carry NO dedup
     # window and NO exchange — last-writer-wins is a per-row no-op on
     # range-disjoint buckets, so the masked read is a raw pushed-down
@@ -963,18 +1001,20 @@ def test_kv_registry_scan_plan(spark):
     df = engine_demo.engine_kv_registry_scan(spark, SF)
     plan = plans.explain_str(df, "simple")
     assert "Window" not in plan and "Exchange" not in plan, plan
-    # the mask reaches the parquet scan
-    plans.assert_pushed(df, "LessThan(value")
+    series = engine_demo._event_repo(spark, SF).collection(
+        "kvreg"
+    ).series("all")
+    # the mask reaches the segment scan: every planned chunk carries it
+    mask = series._compile_mask("(< self.value 2.0)")[0]
+    assert planned and all(m["plan"] == mask for m in planned[-1])
     # every bucket carries a value zone map and the pruner ran over a
     # fully-disjoint set (nothing blocked). The bench value column is
     # near-uniform per bucket so this mask rarely refutes a whole
     # bucket — refutation effectiveness is pinned by the prune_kv unit
-    # suite and scripts/probe_kv_zonemap.py (123 -> 5 segments); what
-    # this contract pins is the PLAN: no window, no exchange, pushed
-    # mask, zone maps present to prune when the data allows
-    series = engine_demo._event_repo(spark, SF).collection(
-        "kvreg"
-    ).series("all")
+    # suite and NOTES.md "KV zone-map pruning with shadowing awareness"
+    # (123 -> 5 segments); what this contract pins is the PLAN: no
+    # window, no exchange, pushed mask, zone maps present to prune when
+    # the data allows
     segs = series.segments()
     assert len(segs) >= 16
     assert all((s.meta or {}).get("zmap") for s in segs)

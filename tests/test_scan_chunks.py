@@ -1,5 +1,5 @@
-"""`series.scan_chunks` — the one task-count rule of the Python-side
-scans (the ordered `frame(sort=True)` scan and the ``lakota`` data
+"""`series.scan_chunks` — the one task-count rule of the segment scan
+(`segscan.partitions`, behind `frame()` and the ``lakota`` data
 source's batch and stream readers): about one writer page of rows per
 task, contiguous and in input order, capped by the caller's ceiling.
 """
@@ -126,10 +126,10 @@ def test_empty_read_keeps_one_partition(spark, repo):
 
 
 def test_connect_fallback_keeps_sort_order(spark, repo, monkeypatch):
-    """Without a `sparkContext` (Spark Connect) the ordered scan spreads
-    its file list through a local relation; range partitioning on the
-    chunk id plus a sort on file position must keep partition order ==
-    sort order, as the classic `parallelize` branch does."""
+    """Without a `sparkContext` (Spark Connect) the segment scan spreads
+    its planned chunks through a local relation; range partitioning and
+    sorting on the chunk index must keep partition order == sort order,
+    as the classic `parallelize` branch does."""
     coll = repo.create_collection(Schema(ts="int*", value="float"), "fb")
     s = coll.series("x")
     for k in [*range(1, 40, 2), *range(0, 40, 2)]:

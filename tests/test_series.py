@@ -857,11 +857,12 @@ def test_frame_mask_on_sorted_fast_path(repo):
     assert [r.ts for r in sliced.collect()] == [6, 8, 10, 12]
 
 
-def test_frame_mask_fallback_and_kv_semantics(repo):
-    # non-pushable mask forms (arithmetic) fall back to the classic
-    # path — documented behavior — and stay correct; KV series apply
-    # the mask AFTER last-writer-wins dedup so a filter on the value
-    # column can never resurrect a shadowed row.
+def test_frame_mask_fallback_and_kv_semantics(repo, planned):
+    # non-pushable mask forms (arithmetic) filter the scan's output —
+    # documented behavior — and stay correct; pushable ones reach the
+    # segment scan; KV series apply the mask AFTER last-writer-wins
+    # dedup so a filter on the value column can never resurrect a
+    # shadowed row.
     from lakota_spark import plans
     from lakota_spark.schema import Schema
 
@@ -875,13 +876,15 @@ def test_frame_mask_fallback_and_kv_semantics(repo):
         "tag": ["a"] * 50,
     })
     df = s.frame(mask="(< (+ self.value 1) 6)")
-    assert "MapInArrow" not in plans.explain_str(df, "simple")
+    plan = plans.explain_str(df, "simple")
+    assert "Filter" in plan and "MapInArrow" in plan, plan
+    assert planned[-1][0]["plan"] is None
     assert sorted(r.ts for r in df.collect()) == [0, 1, 2, 3, 4]
-    # classic path pushes the mask into the scan (below _seg_key)
-    pushed = " ".join(plans.pushed_filters(s.frame(
-        sort=False, mask="(> self.value 45)"
-    )))
-    assert "GreaterThan(value,45" in pushed, pushed
+    # a pushable mask is carried by every planned scan chunk
+    df = s.frame(sort=False, mask="(> self.value 45)")
+    mask = s._compile_mask("(> self.value 45)")[0]
+    assert all(m["plan"] == mask for m in planned[-1])
+    assert sorted(r.ts for r in df.collect()) == [46, 47, 48, 49]
 
     kv = repo.create_collection(
         Schema.kv_schema(k="int*", v="float"), "kvm"
@@ -1046,3 +1049,31 @@ def test_local_write_paths_byte_identical(repo):
     ck = repo.create_collection(Schema(k="int*", v="float"), "fast_c")
     with pytest.raises(ValueError, match="not sorted"):
         ck.series("x").write(bad, validate_sorted=True)
+
+
+def test_write_with_pandas_timestamp_bounds(repo):
+    """pd.Timestamp write bounds coerce to plain datetimes (a Timestamp
+    bound used to fail the read as an unacceptable TimestampType
+    value), and the overlay they describe reads back exactly."""
+    import datetime as dt
+
+    import pandas as pd
+
+    coll = repo.create_collection(Schema(ts="timestamp*", value="float"), "pdt")
+    s = coll.series("x")
+    ts = pd.date_range("2024-01-01", periods=48, freq="h")
+    s.write(pd.DataFrame({"ts": ts, "value": [float(i) for i in range(48)]}))
+    bound = coll.schema.coerce_scalar("ts", pd.Timestamp("2024-01-01 05:00:07.5"))
+    assert type(bound) is dt.datetime and bound == dt.datetime(2024, 1, 1, 5, 0, 7)
+    s.write(
+        pd.DataFrame({"ts": ts[12:14], "value": [99.0, 98.0]}),
+        start=pd.Timestamp("2024-01-01 10:00"),
+        stop=pd.Timestamp("2024-01-01 16:00"),
+    )
+    got = [(r.ts, r.value) for r in s.frame().collect()]
+    want = [
+        (t.to_pydatetime(), float(i)) for i, t in enumerate(ts)
+        if not 10 <= i <= 16
+    ] + [(ts[12].to_pydatetime(), 99.0), (ts[13].to_pydatetime(), 98.0)]
+    assert got == sorted(want)
+    assert s.df()["value"].tolist() == [v for _, v in sorted(want)]
