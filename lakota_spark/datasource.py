@@ -868,7 +868,7 @@ class LakotaArrowWriter(DataSourceArrowWriter):
 
         fs = _open_series(self._options).collection.fs
         for pages in _leaf_msgs(messages):
-            segwriter.discard(fs, pages)
+            segwriter.discard(fs, pages.tmp_rel)
 
 
 class LakotaStreamWriter(DataSourceStreamArrowWriter):

@@ -184,11 +184,44 @@ def stage(pages: Pages, uri: str, tmp_rel: str) -> Pages:
     return pages
 
 
+def descents(table, idx) -> int:
+    """Adjacent row pairs of ``table`` whose index tuples DESCEND in the
+    order ``df.sort`` on the index columns produces: lexicographic,
+    nulls first, NaN after every number and equal to NaN. Equal tuples
+    are no descent. Zero iff the rows are already in that order."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    n = len(table)
+    if n < 2:
+        return 0
+    desc = tie = None  # row i+1 < row i; row i+1 == row i so far
+    for c in idx:
+        col = table.column(c)
+        a, b = col.slice(0, n - 1), col.slice(1)
+        lt, eq = pc.less(b, a), pc.equal(b, a)
+        if pa.types.is_floating(col.type):
+            an, bn = pc.is_nan(a), pc.is_nan(b)
+            lt = pc.or_kleene(lt, pc.and_not_kleene(an, bn))
+            eq = pc.or_kleene(eq, pc.and_kleene(an, bn))
+        if col.null_count:  # comparisons with a null are null
+            an, bn = pc.is_null(a), pc.is_null(b)
+            lt = pc.or_(lt.fill_null(False), pc.and_not(bn, an))
+            eq = pc.or_(eq.fill_null(False), pc.and_(an, bn))
+        desc = lt if desc is None else pc.or_(desc, pc.and_(tie, lt))
+        tie = eq if tie is None else pc.and_(tie, eq)
+    return pc.sum(desc).as_py() or 0
+
+
 def partition_task(schema, uri: str | None, tmp_rel: str | None):
-    """`mapInArrow` body for `Series._stage_df`: encode partition ``p``
-    as ``part-<p:05d>-<page:05d>.parquet`` pages, stage them into the
-    shared ``tmp_rel`` (or, ``uri`` None, keep the bytes for the driver)
-    and emit one ``(pid, pickled Pages)`` row."""
+    """`mapInArrow` body for `Series._stage_df`: conform partition ``p``
+    and check its row order (`descents`). An unsorted partition emits
+    ``(p, null)`` and encodes nothing. A sorted one is encoded as
+    ``part-<p:05d>-<page:05d>.parquet`` pages, staged into the shared
+    ``tmp_rel`` (or, ``uri`` None, kept as bytes for the driver) and
+    emitted as ``(p, pickled Pages)``; its ``lo``/``hi`` are its first
+    and last index tuples, which is all `sort_violation` needs to check
+    the partition edges. Empty partitions emit nothing."""
 
     def run(batches):
         import pickle
@@ -201,17 +234,43 @@ def partition_task(schema, uri: str | None, tmp_rel: str | None):
             return
         pid = TaskContext.get().partitionId()
         table = conform(pa.Table.from_batches(batches), schema)
-        pages = encode(table, schema, prefix=f"part-{pid:05d}")
-        if not pages.n:
-            return
-        if uri is not None:
-            stage(pages, uri, tmp_rel)
+        payload = None
+        if not descents(table, schema.idx):
+            pages = encode(table, schema, prefix=f"part-{pid:05d}")
+            if not pages.n:
+                return
+            if uri is not None:
+                stage(pages, uri, tmp_rel)
+            payload = pickle.dumps(pages)
         yield pa.RecordBatch.from_arrays(
-            [pa.array([pid], pa.int32()), pa.array([pickle.dumps(pages)])],
+            [pa.array([pid], pa.int32()), pa.array([payload], pa.binary())],
             names=["pid", "pages"],
         )
 
     return run
+
+
+def _sort_key(bound: tuple) -> tuple:
+    """``bound`` as a key in `descents`' order (nulls first, NaN last)."""
+    return tuple(
+        (0,) if v is None else (2,) if v != v else (1, v) for v in bound
+    )
+
+
+def sort_violation(parts: list) -> str | None:
+    """Why `partition_task` results, in partition order (None: a
+    partition with a descent), do not form one sorted segment, or None
+    when they do. Equal index tuples across a partition edge pass. The
+    write-path invariant of the reference (`lakota/series.py:94`)."""
+    if any(p is None for p in parts):
+        return "frame is not sorted by index columns"
+    for prev, cur in zip(parts, parts[1:]):
+        if _sort_key(cur.lo) < _sort_key(prev.hi):
+            return (
+                "frame is not sorted by index columns "
+                f"(partition boundary {prev.hi!r} > {cur.lo!r})"
+            )
+    return None
 
 
 def combine(parts: list, tmp_rel: str | None = None) -> Pages:
@@ -241,12 +300,12 @@ def new_staging_rel(seg_prefix: str) -> str:
     return f"{seg_prefix}/{staging_name(uuid.uuid4().hex)}"
 
 
-def discard(fs, pages: Pages) -> None:
-    """Drop a staged-but-unpublished segment (best effort: GC ages out
-    ``_tmp-`` leftovers anyway)."""
-    if pages.tmp_rel:
+def discard(fs, tmp_rel: str | None) -> None:
+    """Drop a staged-but-unpublished ``_tmp-`` dir (best effort: GC ages
+    out ``_tmp-`` leftovers anyway)."""
+    if tmp_rel:
         try:
-            fs.remove_tree(pages.tmp_rel)
+            fs.remove_tree(tmp_rel)
         except Exception:  # noqa: BLE001 — best effort: never mask
             pass  # the caller's own error
 
@@ -262,7 +321,7 @@ def publish(fs, seg_prefix: str, pages: Pages) -> tuple[str, str]:
     name = digest[:20]
     final_rel = f"{seg_prefix}/{name}"
     if fs.exists(final_rel):
-        discard(fs, pages)
+        discard(fs, pages.tmp_rel)
         return name, digest
     if pages.tmp_rel is None:
         pages.tmp_rel = new_staging_rel(seg_prefix)
@@ -273,5 +332,5 @@ def publish(fs, seg_prefix: str, pages: Pages) -> tuple[str, str]:
     except Exception:
         if not fs.exists(final_rel):
             raise
-        discard(fs, pages)  # an identical-content racer won
+        discard(fs, pages.tmp_rel)  # an identical-content racer won
     return name, digest

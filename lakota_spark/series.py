@@ -228,36 +228,15 @@ class Series:
             return None
         return out
 
-    def _pdf_is_sorted(self, pdf) -> bool:
-        """Vectorized lexicographic is-sorted over the index columns.
-        (`pd.MultiIndex.from_frame(...).is_monotonic_increasing`
-        factorizes every column — seconds at millions of rows; the
-        pairwise compare below is three numpy passes per column.)"""
-        import numpy as np
-
-        if len(pdf) < 2:
-            return True
-        idx = self.schema.idx
-        if len(idx) == 1:
-            return bool(pdf[idx[0]].is_monotonic_increasing)
-        prev_eq = np.ones(len(pdf) - 1, dtype=bool)
-        ok = np.zeros(len(pdf) - 1, dtype=bool)
-        for c in idx:
-            a = pdf[c].to_numpy()
-            x, y = a[:-1], a[1:]
-            ok |= prev_eq & (x < y)
-            prev_eq &= x == y
-        return bool(np.all(ok | prev_eq))
-
-    def _local_cast_arrow(self, data: dict, validate_sorted: bool = False):
+    def _local_cast_arrow(self, data: dict):
         """Zero-copy arrow twin of `_local_cast` for dict-of-numpy
         inputs whose columns are already engine-physical (int64 /
         float64 / datetime64) — the small-frequent-append shape of the
         reference's fragmentation bench. Skips pandas entirely: the
         block-manager construction alone costs ~8 ms per 500 k-row
         write (two full copies of the data), ~20% of the write floor
-        the frag-500k rung measures. Returns the table cast + floored +
-        SORTED in the schema's arrow types, or None to fall back to
+        the frag-500k rung measures. Returns the table cast + floored
+        in the schema's arrow types, or None to fall back to
         the pandas path (str/date columns, non-numpy values, NaT,
         NA index values). Content addresses are byte-identical to the
         pandas path (pinned by tests/test_series.py)."""
@@ -317,27 +296,6 @@ class Series:
                 arrays[c]
             ).any():
                 return None
-        # lexicographic is-sorted (same three-pass form as
-        # _pdf_is_sorted); stable lexsort when not
-        if n > 1:
-            prev_eq = np.ones(n - 1, dtype=bool)
-            ok = np.zeros(n - 1, dtype=bool)
-            for c in idx:
-                col = arrays[c]
-                x, y = col[:-1], col[1:]
-                ok |= prev_eq & (x < y)
-                prev_eq &= x == y
-            if not bool(np.all(ok | prev_eq)):
-                if validate_sorted:
-                    raise ValueError(
-                        "frame is not sorted by index columns"
-                    )
-                # stable lexsort == the pandas path's stable sort_values
-                order = np.lexsort(
-                    tuple(arrays[c] for c in reversed(idx))
-                )
-                arrays = {k: v[order] for k, v in arrays.items()}
-
         pa_schema = self.schema.pyarrow_schema()
         cols = []
         for name, alias in self.schema.columns.items():
@@ -355,38 +313,40 @@ class Series:
     def _local_table(self, data, validate_sorted: bool = False):
         """Driver-local sorted arrow table for a dict/pandas input, in
         the schema's arrow types: `_local_cast_arrow` for dict-of-numpy,
-        else the pandas cast (`_local_cast`) + stable sort + ONE
-        ``from_pandas``. None when a column needs the engine's Spark
-        cast (ISO strings, NA index values, unknown dtypes)."""
+        else the pandas cast (`_local_cast`) + ONE ``from_pandas``; then
+        a stable sort unless `segwriter.descents` finds none. None when
+        a column needs the engine's Spark cast (ISO strings, NA index
+        values, unknown dtypes)."""
         import pandas as pd
         import pyarrow as pa
 
-        if isinstance(data, dict):
-            tbl = self._local_cast_arrow(data, validate_sorted)
-            if tbl is not None:
-                return tbl
-            data = pd.DataFrame(data)
-        if not isinstance(data, pd.DataFrame):
-            return None
-        if len(data) == 0:
-            return self.schema.pyarrow_schema().empty_table()
-        pdf = self._local_cast(data)
-        if pdf is None:
-            return None
-        if not self._pdf_is_sorted(pdf):
+        tbl = self._local_cast_arrow(data) if isinstance(data, dict) else None
+        if tbl is None:
+            if isinstance(data, dict):
+                data = pd.DataFrame(data)
+            if not isinstance(data, pd.DataFrame):
+                return None
+            if len(data) == 0:
+                return self.schema.pyarrow_schema().empty_table()
+            pdf = self._local_cast(data)
+            if pdf is None:
+                return None
+            tbl = pa.Table.from_pandas(
+                pdf,
+                schema=self.schema.pyarrow_schema(),
+                preserve_index=False,
+                # nthreads=1 below 100k rows: from_pandas otherwise spins
+                # up a fresh thread pool per call (~1.5 ms), which
+                # dominates the conversion itself on small append chunks
+                nthreads=1 if len(pdf) < 100_000 else None,
+            )
+        if segwriter.descents(tbl, self.schema.idx):
             if validate_sorted:
                 raise ValueError("frame is not sorted by index columns")
-            # skip-sort: appends are usually presorted
-            pdf = pdf.sort_values(self.schema.idx, kind="stable")
-        return pa.Table.from_pandas(
-            pdf,
-            schema=self.schema.pyarrow_schema(),
-            preserve_index=False,
-            # nthreads=1 below 100k rows: from_pandas otherwise spins up
-            # a fresh thread pool per call (~1.5 ms), which dominates
-            # the conversion itself on small append chunks
-            nthreads=1 if len(pdf) < 100_000 else None,
-        )
+            # skip-sort: appends are usually presorted. sort_by is
+            # stable, so equal keys keep their input order.
+            tbl = tbl.sort_by([(c, "ascending") for c in self.schema.idx])
+        return tbl
 
     # --------------------------------------------------------------- write
 
@@ -410,15 +370,21 @@ class Series:
         (`tests/series_test.py:251-371` semantics). Empty data + explicit
         bounds = range delete.
 
-        A DataFrame input may be evaluated twice: by the sortedness check
-        that picks between the pre-sorted path and a global sort (see
-        `_stage_df`), then by the write itself. ``checkpoint`` controls
-        whether the input is materialized once between them via
-        ``localCheckpoint(eager=False)``; default (None) auto-enables it
-        when the input is a DataFrame whose plan contains a shuffle —
-        i.e. exactly when recomputing it would repeat real work. Pass
-        False to force recompute (cheap scans), True to force (expensive
-        narrow transforms the heuristic can't see).
+        A DataFrame input is written in one Spark job when it is
+        already sorted by the index: the encode tasks check the row
+        order as they encode (see `_stage_df`). An input that is not
+        sorted is read again by ``df.sort`` and a second encode job;
+        ``validate_sorted=True`` raises a ValueError instead ("not
+        sorted" inside a partition, "partition boundary" across two).
+        ``checkpoint`` controls whether the input is materialized by the
+        first job that reads it, via ``localCheckpoint(eager=False)``;
+        default (None) auto-enables it when the input is a DataFrame
+        whose plan contains a shuffle, so a fall-back to the sort does
+        not repeat that shuffle (measured faster on sorted and unsorted
+        shuffle-bearing inputs alike, NOTES.md "Sortedness checked
+        inside the encode task"). Pass False to force recompute (cheap
+        scans), True to force (expensive narrow transforms the heuristic
+        can't see).
         """
         # Fully driver-local fast path: a dict/pandas input whose dtypes
         # are already engine-ready never touches Spark at all — the bytes
@@ -439,9 +405,7 @@ class Series:
                 ) and "Exchange" in _physical_plan_str(df)
             if checkpoint:
                 df = df.localCheckpoint(eager=False)
-            if validate_sorted:
-                self._assert_sorted(df)
-            pages = self._stage_df(df, known_sorted=validate_sorted)
+            pages = self._stage_df(df, validate_sorted)
         start_closed, stop_closed = CLOSED[closed]
         start = self.schema.coerce_bound(start)
         stop = self.schema.coerce_bound(stop)
@@ -486,7 +450,7 @@ class Series:
                     f"(max index {hi!r})"
                 )
         except ValueError:
-            segwriter.discard(fs, pages)
+            segwriter.discard(fs, pages.tmp_rel)
             raise
         path, digest = segwriter.publish(
             fs, self.collection.seg_prefix, pages
@@ -510,75 +474,7 @@ class Series:
             root=root,
         )
 
-    def _assert_sorted(self, df: DataFrame) -> None:
-        """Reference write-path invariant (`lakota/series.py:94`). Opt-in.
-
-        Fully distributed and JVM-side (round 8; was Arrow/mapInPandas —
-        measured 7.6 s on a 526-partition 5.26M-row frame from the
-        per-task Python round-trip alone, vs ~0.4 s for this form):
-        per-partition descent count + first/last index tuples via ONE
-        narrow exchange of the index columns only (hash by partition id,
-        whole-stage codegen window + partial agg), then the driver
-        compares the P tiny boundary tuples in input-partition order.
-        The round-1 sin this replaced was a GLOBAL single-task window;
-        the per-pid exchange here carries index columns only — a sliver
-        of the full-row shuffle the pre-sorted fast path skips.
-        """
-        rep = sorted(self._sorted_report(df).collect(), key=lambda r: r["_pid"])
-        if any((r["n_desc"] or 0) > 0 for r in rep):
-            raise ValueError("frame is not sorted by index columns")
-        for prev, cur in zip(rep, rep[1:]):
-            last = tuple(prev["last"])
-            first = tuple(cur["first"])
-            if first < last:
-                raise ValueError(
-                    "frame is not sorted by index columns "
-                    f"(partition boundary {last!r} > {first!r})"
-                )
-
-    def _sorted_report(self, df: DataFrame) -> DataFrame:
-        """The plan `_assert_sorted` collects: one ``(_pid, n_desc,
-        first, last)`` row per input partition. ``n_desc`` counts
-        adjacent descents inside the partition (struct comparison =
-        lexicographic index-tuple order, row order pinned by
-        monotonically_increasing_id, which is consecutive within a
-        partition); ``first``/``last`` are the partition's edge index
-        tuples via order-aware min_by/max_by."""
-        from pyspark.sql import Window
-
-        idx = list(self.schema.idx)
-        base = (
-            df.select(F.struct(*[F.col(c) for c in idx]).alias("_s"))
-            .withColumn("_pid", F.spark_partition_id())
-            .withColumn("_mid", F.monotonically_increasing_id())
-        )
-        w = Window.partitionBy("_pid").orderBy("_mid")
-        desc = (F.col("_s") < F.lag("_s").over(w)).cast("int")
-        return (
-            base.withColumn("_desc", desc)
-            .groupBy("_pid")
-            .agg(
-                F.sum("_desc").alias("n_desc"),
-                F.min_by("_s", "_mid").alias("first"),
-                F.max_by("_s", "_mid").alias("last"),
-            )
-        )
-
-    def _df_presorted(self, df: DataFrame) -> bool:
-        """True iff ``df`` is already globally sorted by the index
-        across partitions in partition order — `_assert_sorted`'s check
-        as a predicate. One column-pruned pass over the index columns
-        plus one narrow per-pid exchange of those columns only: at
-        cluster scale that is a sliver of the bytes the skipped
-        range-sample + full-row sort shuffle would touch, which is why
-        the pre-sorted fast path in `_stage_df` pays it unconditionally."""
-        try:
-            self._assert_sorted(df)
-        except ValueError:
-            return False
-        return True
-
-    def _stage_df(self, df: DataFrame, known_sorted: bool = False):
+    def _stage_df(self, df: DataFrame, validate_sorted: bool = False):
         """Encode a cast DataFrame into one staged segment on the
         executors: one `segwriter.encode` per partition inside a single
         `mapInArrow` job; only digests, bounds and zone maps come back
@@ -590,24 +486,24 @@ class Series:
         the tasks return their pages and the driver publishes the same
         bytes through the FS verbs.
 
-        ALREADY-SORTED input — the common append-ingest shape — skips
-        the sort: a narrow column-pruned boundary check (`_df_presorted`,
-        or ``known_sorted=True`` when `write(validate_sorted=True)` has
-        just proven it) costs one idx-column pass, and on success the
-        input's own partition layout is written as-is. Gated on a sane
-        layout: confetti inputs (a 526-slice createDataFrame measured 526
-        tiny files) go through ``df.sort``, whose range exchange is also
-        the compaction; on a narrow (timestamp, float) frame the check
-        shuffle ≈ the sort it would skip, and the partition gate keeps
-        the check off exactly the shapes where it cannot win (NOTES r8).
+        ALREADY-SORTED input — the common append-ingest shape — is
+        written in its own partition layout, with no sort and no
+        separate check: each task checks its partition's row order
+        before encoding (`segwriter.partition_task`), and the driver
+        checks the partition edges in partition order
+        (`segwriter.sort_violation`). So the rows checked are the rows
+        written, in one job. If either check fails, the staged dir is
+        discarded and the input goes through ``df.sort`` and a second
+        encode job; ``validate_sorted=True`` raises the check's
+        ValueError instead. Gated on a sane layout: confetti inputs (a
+        526-slice createDataFrame measured 526 tiny files) go straight
+        to ``df.sort``, whose range exchange is also the compaction
+        (with ``validate_sorted``, after the check job).
 
         The layout — hence the address — is deterministic for a given
         input partitioning on both paths (the sort's range boundaries
         come from Spark's seeded reservoir sampler). A one-partition
         sorted input addresses exactly like a driver-local write."""
-        import pickle
-
-        idx_cols = [F.col(c) for c in self.schema.idx]
         try:
             sc = df.sparkSession.sparkContext
             sane_parts = 0 < df.rdd.getNumPartitions() <= 2 * max(
@@ -617,8 +513,23 @@ class Series:
             # introspection; take the sort path, whose range exchange
             # is also the compaction (always correct, never confetti)
             sane_parts = False
-        if not (sane_parts and (known_sorted or self._df_presorted(df))):
-            df = df.sort(*idx_cols)
+        if sane_parts or validate_sorted:
+            parts, tmp_rel = self._encode_partitions(df)
+            why = segwriter.sort_violation(parts)
+            if why is None and sane_parts:
+                return segwriter.combine(parts, tmp_rel)
+            segwriter.discard(self.collection.fs, tmp_rel)
+            if why is not None and validate_sorted:
+                raise ValueError(why)
+        parts, tmp_rel = self._encode_partitions(df.sort(*self.schema.idx))
+        return segwriter.combine(parts, tmp_rel)
+
+    def _encode_partitions(self, df: DataFrame):
+        """Run `segwriter.partition_task` over ``df`` in one job: the
+        per-partition results in partition order (None: not sorted) and
+        the ``_tmp-`` dir they were staged into (None: not staged)."""
+        import pickle
+
         fs = self.collection.fs
         uri = tmp_rel = None
         if getattr(fs, "arrow_readable", False):
@@ -629,9 +540,11 @@ class Series:
             "pid int, pages binary",
         ).collect()
         rows.sort(key=lambda r: r["pid"])
-        return segwriter.combine(
-            [pickle.loads(r["pages"]) for r in rows], tmp_rel
-        )
+        parts = [
+            None if r["pages"] is None else pickle.loads(r["pages"])
+            for r in rows
+        ]
+        return parts, tmp_rel
 
     def _commit_segment(self, seg: Segment, root: bool = False):
         return self.collection.apply_segments([seg], root=root)

@@ -31,7 +31,7 @@ Degradation map (why each allowlisted site is safe under Connect):
 - series.py `_physical_plan_str`: `_jdf.queryExecution()` → captured
   `df.explain()` fallback.
 - series.py sorted-write partition gate: try/except → always-sort path
-  (correct, conservative).
+  (correct, conservative; ``validate_sorted=True`` still checks first).
 - series.py `_read` chunk fan-out: `sc.parallelize` → local relation
   of the planned chunks range-partitioned on the chunk index, then
   sorted on it (partition order stays the sort order;
