@@ -112,8 +112,11 @@ def staging_name(uid: str) -> str:
     The embedded hextime lets `Repo.gc` age out leftovers of writers
     killed between staging and commit/abort. Keep this format and
     `staging_epoch` in lockstep — every writer (driver-local, executor,
-    streaming) and the GC parser go through this pair."""
-    return f"_tmp-{hexts()}-{uid}"
+    streaming) and the GC parser go through this pair. The stamp is the
+    plain wall clock: ``uid`` makes the name unique, and bumping the
+    monotonic commit clock here ran commit stamps ahead of
+    ``time.time()``, so ``before=time.time()`` missed recent writes."""
+    return f"_tmp-{hexts(time.time())}-{uid}"
 
 
 def staging_epoch(name: str) -> float | None:

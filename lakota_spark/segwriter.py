@@ -54,17 +54,30 @@ def conform(table, schema):
     order, timestamps truncated to the second (the reference's M8[s]
     write cast; idempotent on engine-cast input), as ONE chunk per
     column: the parquet writer cuts pages at batch boundaries too, so
-    the same rows must arrive in the same layout on every path."""
+    the same rows must arrive in the same layout on every path.
+
+    A NaN in a non-index float column becomes null, as the dict/pandas
+    path's ``from_pandas`` conversion stores it (and as the reference's
+    numpy masks treat it: no comparison matches), so every write path
+    stores one value and one address. Index columns keep NaN: it has a
+    place in the sort order (`descents`, ``df.sort``), null another."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
     target = schema.pyarrow_schema()
+    idx = set(schema.idx)
     cols = []
     for field in target:
-        col = table.column(field.name)
+        col = table.column(field.name).cast(field.type)
         if pa.types.is_timestamp(field.type):
-            col = pc.floor_temporal(col.cast(field.type), unit="second")
-        cols.append(col.cast(field.type))
+            col = pc.floor_temporal(col, unit="second")
+        elif (
+            pa.types.is_floating(field.type)
+            and field.name not in idx
+            and pc.any(pc.is_nan(col)).as_py()
+        ):
+            col = pc.if_else(pc.is_nan(col), None, col)
+        cols.append(col)
     return pa.Table.from_arrays(cols, schema=target).combine_chunks()
 
 
@@ -213,7 +226,9 @@ def descents(table, idx) -> int:
     return pc.sum(desc).as_py() or 0
 
 
-def partition_task(schema, uri: str | None, tmp_rel: str | None):
+def partition_task(
+    schema, uri: str | None, tmp_rel: str | None, max_parts: int | None = None
+):
     """`mapInArrow` body for `Series._stage_df`: conform partition ``p``
     and check its row order (`descents`). An unsorted partition emits
     ``(p, null)`` and encodes nothing. A sorted one is encoded as
@@ -221,7 +236,10 @@ def partition_task(schema, uri: str | None, tmp_rel: str | None):
     ``tmp_rel`` (or, ``uri`` None, kept as bytes for the driver) and
     emitted as ``(p, pickled Pages)``; its ``lo``/``hi`` are its first
     and last index tuples, which is all `sort_violation` needs to check
-    the partition edges. Empty partitions emit nothing."""
+    the partition edges. A partition at ``p >= max_parts`` is past the
+    writer's layout gate, so the input will be sorted anyway: it is
+    checked but not encoded, and its Pages carry no page names. Empty
+    partitions emit nothing."""
 
     def run(batches):
         import pickle
@@ -234,13 +252,18 @@ def partition_task(schema, uri: str | None, tmp_rel: str | None):
             return
         pid = TaskContext.get().partitionId()
         table = conform(pa.Table.from_batches(batches), schema)
+        if not len(table):
+            return
         payload = None
         if not descents(table, schema.idx):
-            pages = encode(table, schema, prefix=f"part-{pid:05d}")
-            if not pages.n:
-                return
-            if uri is not None:
-                stage(pages, uri, tmp_rel)
+            if max_parts is not None and pid >= max_parts:
+                idx, n = schema.idx, len(table)
+                pages = Pages([], [], None, n, _bound(table, 0, idx),
+                              _bound(table, n - 1, idx), None)
+            else:
+                pages = encode(table, schema, prefix=f"part-{pid:05d}")
+                if uri is not None:
+                    stage(pages, uri, tmp_rel)
             payload = pickle.dumps(pages)
         yield pa.RecordBatch.from_arrays(
             [pa.array([pid], pa.int32()), pa.array([payload], pa.binary())],

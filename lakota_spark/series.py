@@ -6,10 +6,11 @@ Parquet segment → overlay onto the leaf snapshot → append a revision.
 
 Read path (`lakota/series.py:314-338`): resolve snapshot → prune segments
 by label + interval (pure metadata, before Spark sees any file) → one
-`mapInArrow` relation over the surviving segments' files in interval
-order (`segscan`: the query bounds and the mask pushed into each pyarrow
-dataset scan, overlay-clipped segments clipped to their effective
-bounds, only the needed columns decoded) → optional select/limit/offset.
+`mapInArrow` relation over ``spark.range``, one id per planned chunk
+of the surviving segments' files in interval order (`segscan`: the
+query bounds and the mask pushed into each pyarrow dataset scan,
+overlay-clipped segments clipped to their effective bounds, only the
+needed columns decoded) → optional select/limit/offset.
 Partition order is sort order, so a sorted read plans no Exchange.
 
 Scale notes: the only driver-side work is metadata (segment lists and
@@ -61,6 +62,18 @@ def scan_chunks(files: list, rows: int, ceiling: int) -> list[list]:
         files[i * len(files) // n:(i + 1) * len(files) // n]
         for i in range(n)
     ]
+
+
+def _task_ceiling(spark) -> int:
+    """The most tasks one `_read` scan plans, and the most non-empty
+    partitions a `Series.write(DataFrame)` input may bring and still be
+    written in its own layout: 2 × defaultParallelism, or
+    ``spark.sql.shuffle.partitions`` under Spark Connect (no
+    `sparkContext`)."""
+    try:
+        return 2 * max(spark.sparkContext.defaultParallelism, 1)
+    except Exception:  # noqa: BLE001 — Connect: no sparkContext
+        return int(spark.conf.get("spark.sql.shuffle.partitions"))
 
 
 def _arrow_mask_expr(plan):
@@ -495,39 +508,36 @@ class Series:
         written, in one job. If either check fails, the staged dir is
         discarded and the input goes through ``df.sort`` and a second
         encode job; ``validate_sorted=True`` raises the check's
-        ValueError instead. Gated on a sane layout: confetti inputs (a
-        526-slice createDataFrame measured 526 tiny files) go straight
-        to ``df.sort``, whose range exchange is also the compaction
-        (with ``validate_sorted``, after the check job).
+        ValueError instead. Confetti inputs (a 526-slice createDataFrame
+        measured 526 tiny files) go through ``df.sort`` too, whose range
+        exchange is the compaction: the encode job itself applies the
+        gate, since counting partitions up front ran Spark jobs on an
+        uncheckpointed range-exchanged input. A non-empty partition at
+        index `_task_ceiling` or later is checked but not encoded, and
+        the driver then discards the staged pages and sorts.
 
         The layout — hence the address — is deterministic for a given
         input partitioning on both paths (the sort's range boundaries
         come from Spark's seeded reservoir sampler). A one-partition
         sorted input addresses exactly like a driver-local write."""
-        try:
-            sc = df.sparkSession.sparkContext
-            sane_parts = 0 < df.rdd.getNumPartitions() <= 2 * max(
-                sc.defaultParallelism, 1
-            )
-        except Exception:  # noqa: BLE001 — Connect: no partition-count
-            # introspection; take the sort path, whose range exchange
-            # is also the compaction (always correct, never confetti)
-            sane_parts = False
-        if sane_parts or validate_sorted:
-            parts, tmp_rel = self._encode_partitions(df)
-            why = segwriter.sort_violation(parts)
-            if why is None and sane_parts:
-                return segwriter.combine(parts, tmp_rel)
-            segwriter.discard(self.collection.fs, tmp_rel)
-            if why is not None and validate_sorted:
-                raise ValueError(why)
+        parts, tmp_rel = self._encode_partitions(
+            df, _task_ceiling(df.sparkSession)
+        )
+        why = segwriter.sort_violation(parts)
+        if why is None and all(p.names for p in parts):
+            return segwriter.combine(parts, tmp_rel)
+        segwriter.discard(self.collection.fs, tmp_rel)
+        if why is not None and validate_sorted:
+            raise ValueError(why)
         parts, tmp_rel = self._encode_partitions(df.sort(*self.schema.idx))
         return segwriter.combine(parts, tmp_rel)
 
-    def _encode_partitions(self, df: DataFrame):
+    def _encode_partitions(self, df: DataFrame, max_parts: int | None = None):
         """Run `segwriter.partition_task` over ``df`` in one job: the
         per-partition results in partition order (None: not sorted) and
-        the ``_tmp-`` dir they were staged into (None: not staged)."""
+        the ``_tmp-`` dir they were staged into (None: not staged).
+        Partitions from index ``max_parts`` on are checked, not
+        encoded."""
         import pickle
 
         fs = self.collection.fs
@@ -536,7 +546,7 @@ class Series:
             uri = fs.uri
             tmp_rel = segwriter.new_staging_rel(self.collection.seg_prefix)
         rows = df.mapInArrow(
-            segwriter.partition_task(self.schema, uri, tmp_rel),
+            segwriter.partition_task(self.schema, uri, tmp_rel, max_parts),
             "pid int, pages binary",
         ).collect()
         rows.sort(key=lambda r: r["pid"])
@@ -585,10 +595,11 @@ class Series:
         (filtering first could resurrect shadowed rows).
 
         Rows come from ONE `mapInArrow` relation over the pruned
-        segments (`_read`): segments in interval order, partition order
-        == sort order, so ``sort=True`` costs no Exchange or Sort.
-        Overlapping KV is the one layout that shuffles (the dedup
-        window), then sorts."""
+        segments (`_read`): ``spark.range`` with one id per planned
+        chunk, each task scanning its chunk from the closure. Segments
+        are in interval order and partition order == sort order, so
+        ``sort=True`` costs no Exchange or Sort. Overlapping KV is the
+        one layout that shuffles (the dedup window), then sorts."""
         segs = self.segments(start, stop, before, closed)
         cols = select or list(self.schema.columns)
         # KV dedup is only NEEDED when two queried segments could hold
@@ -1024,16 +1035,17 @@ class Series:
         row carries `segscan.SEQ` and last-writer-wins resolves
         overlapping segments (one shuffle; row order lost).
 
-        Classic sessions spread the chunks with ``sc.parallelize`` (about
-        one writer page of rows per task, at most 2×parallelism tasks).
-        Spark Connect has no RDD surface: a local relation
-        range-partitioned on each chunk's index keeps chunk order (one
-        tiny exchange over plan blobs, not data)."""
-        import pickle
-
+        The relation is ``spark.range(0, n, 1, n)``: partition ``i``
+        holds only ``id = i``, and its task scans ``chunks[i]``. The
+        planned chunks travel inside the `mapInArrow` closure, so the
+        plan is Range + MapInArrow on classic and Spark Connect
+        sessions alike: JVM rows in, no Python RDD to convert, and no
+        Exchange (about one writer page of rows per task, at most
+        `_task_ceiling` tasks)."""
         from pyspark.sql.types import LongType, StructField, StructType
 
-        fields = self.schema.struct_type().fields
+        schema = self.schema.struct_type()
+        fields = schema.fields
         if kv_dedup:
             fields = [*fields, StructField(segscan.SEQ, LongType())]
         elif self.schema.kv:
@@ -1044,38 +1056,17 @@ class Series:
             fields = [f for c in cols for f in fields if f.name == c]
         struct = StructType(fields)
         spark = self.spark
-        try:
-            sc = spark.sparkContext
-            ceiling = 2 * sc.defaultParallelism
-        except Exception:  # noqa: BLE001 — Connect: no sparkContext
-            sc = None
-            ceiling = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        metas = [
-            pickle.dumps(m)
-            for m in segscan.partitions(self, segs, plan, ceiling, kv_dedup)
-        ]
-        if sc is not None:
-            rdd = sc.parallelize([(m,) for m in metas], len(metas))
-            parts = spark.createDataFrame(rdd, "part binary")
-        else:
-            parts = (
-                spark.createDataFrame(
-                    list(enumerate(metas)), "chunk int, part binary"
-                )
-                .repartitionByRange(len(metas), "chunk")
-                .sortWithinPartitions("chunk")
-                .select("part")
-            )
-        schema = self.schema.struct_type()
+        chunks = segscan.partitions(
+            self, segs, plan, _task_ceiling(spark), kv_dedup
+        )
 
         def read(batches):
             for batch in batches:
-                for meta in batch.column("part").to_pylist():
-                    yield from segscan.scan(
-                        pickle.loads(meta), struct, schema
-                    )
+                for i in batch.column("id").to_pylist():
+                    yield from segscan.scan(chunks[i], struct, schema)
 
-        df = parts.mapInArrow(read, struct)
+        n = len(chunks)
+        df = spark.range(0, n, 1, n).mapInArrow(read, struct)
         return self._kv_dedup(df) if kv_dedup else df
 
     def _kv_dedup(self, df: DataFrame) -> DataFrame:

@@ -30,12 +30,13 @@ Degradation map (why each allowlisted site is safe under Connect):
   `combiners=` map (r12).
 - series.py `_physical_plan_str`: `_jdf.queryExecution()` → captured
   `df.explain()` fallback.
-- series.py sorted-write partition gate: try/except → always-sort path
-  (correct, conservative; ``validate_sorted=True`` still checks first).
-- series.py `_read` chunk fan-out: `sc.parallelize` → local relation
-  of the planned chunks range-partitioned on the chunk index, then
-  sorted on it (partition order stays the sort order;
-  `tests/test_scan_chunks.py` forces this branch).
+- series.py `_task_ceiling` (the `_read` task cap and the presorted
+  write's partition gate): 2 × defaultParallelism →
+  spark.sql.shuffle.partitions fallback. The `_read` relation itself
+  (``spark.range`` + `mapInArrow`, chunks in the closure) and the
+  write's gate (applied inside the encode job) are portable;
+  `tests/test_scan_chunks.py` reads through a session without
+  `sparkContext`.
 - cli.py / bench.py / scripts: driver-side tools that build their own
   classic local session via `get_spark()` — classic by design, never
   imported by library consumers.
@@ -71,6 +72,7 @@ def test_connect_client_ships_every_engine_api():
             "def sortWithinPartitions",
             "def explain",
         ],
+        "session.py": ["def range"],
         "group.py": [
             "def applyInPandas",
             "def applyInPandasWithState",
@@ -102,9 +104,7 @@ _ALLOWED = {
     ("operators/text.py", r"sparkContext"): 1,  # identity fallback
     ("operators/skew.py", r"\._jc\b"): 1,  # guarded classic fallback
     ("series.py", r"_jdf"): 1,  # _physical_plan_str explain fallback
-    ("series.py", r"sparkContext"): 2,  # sort gate + chunk fan-out
-    ("series.py", r"\.rdd\b"): 1,
-    ("series.py", r"parallelize\("): 1,
+    ("series.py", r"sparkContext"): 1,  # _task_ceiling conf fallback
 }
 
 _CONSTRUCTS = [

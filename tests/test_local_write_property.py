@@ -163,3 +163,68 @@ def test_all_write_paths_byte_identical(srepo, spark, case):
     assert got["dict"][1] == n
     for path, v in got.items():
         assert v == got["dict"], (path, v, got["dict"])
+
+
+def test_nan_value_stored_as_null_on_every_path(srepo, spark):
+    """A float NaN in a value column is stored as null whichever path
+    writes it (the dict/pandas conversion's choice, made once in
+    `segwriter.conform`): one segment address, one `frame()` result and
+    one mask count. A Spark frame built from Python rows keeps NaN until
+    the writer conforms it."""
+    nan = float("nan")
+    schema = Schema(ts="int*", value="float")
+    sdf = spark.createDataFrame(
+        [(1, nan), (2, 1.0)], "ts long, value double"
+    ).coalesce(1)
+    assert sdf.where("isnan(value)").count() == 1
+    got = {}
+    for path in ("dict", "pandas", "series_df", "datasource"):
+        label = f"nan_{path}"
+        coll = srepo.create_collection(schema, label)
+        s = coll.series("x")
+        if path == "dict":
+            s.write({"ts": np.array([1, 2]), "value": np.array([nan, 1.0])})
+        elif path == "pandas":
+            s.write(pd.DataFrame({"ts": [1, 2], "value": [nan, 1.0]}))
+        elif path == "series_df":
+            s.write(sdf)
+        else:
+            (sdf.write.format("lakota").option("path", srepo.root)
+             .option("table", f"{label}/x").mode("append").save())
+        (seg,) = coll.snapshot().for_label("x")
+        got[path] = (
+            seg.path,
+            [r.value for r in s.frame().collect()],
+            s.frame(mask="(>= self.value 0)").count(),
+        )
+    assert got["dict"][1:] == ([None, 1.0], 1)
+    for path, v in got.items():
+        assert v == got["dict"], (path, v, got["dict"])
+
+
+def test_float_index_keeps_nan_on_executor_path(srepo, spark):
+    """An index column keeps NaN (it sorts after every number, where
+    null sorts first), and a NaN-bearing float column publishes no
+    parquet min/max: pyarrow skips NaN when it computes them."""
+    import io
+
+    import pyarrow.parquet as pq
+
+    coll = srepo.create_collection(Schema(x="float*", v="float"), "nan_idx")
+    s = coll.series("x")
+    s.write(spark.createDataFrame(
+        [(1.0, 1.0), (2.0, float("nan")), (float("nan"), 3.0)],
+        "x double, v double",
+    ).coalesce(1))
+    got = [(r.x, r.v) for r in s.frame().collect()]
+    assert got[:2] == [(1.0, 1.0), (2.0, None)] and got[2][1] == 3.0
+    assert got[2][0] != got[2][0]  # NaN
+    (seg,) = s.segments()
+    rel = f"{coll.seg_prefix}/{seg.path}"
+    (part,) = [p for p in coll.fs.ls(rel) if p.endswith(".parquet")]
+    meta = pq.ParquetFile(io.BytesIO(coll.fs.read_bytes(f"{rel}/{part}")))
+    rg = meta.metadata.row_group(0)
+    stats = {rg.column(i).path_in_schema: rg.column(i).statistics
+             for i in range(rg.num_columns)}
+    assert stats["x"] is None or not stats["x"].has_min_max
+    assert stats["v"].has_min_max and stats["v"].null_count == 1

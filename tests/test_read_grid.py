@@ -31,6 +31,29 @@ from lakota_spark.schema import Schema
 NAN = float("nan")
 
 
+def write_keeping_nan(series, rows):
+    """Commit ``rows`` (dicts in index order) as one segment whose float
+    NaN values stay NaN. Every write path now stores a NaN value as null
+    (`segwriter.conform`); segments written before that hold NaN, and
+    reads must keep Spark's NaN semantics on them."""
+    import pyarrow as pa
+
+    from lakota_spark import segwriter
+    from lakota_spark.commit import Segment
+
+    coll = series.collection
+    tbl = pa.Table.from_pylist(rows, schema=series.schema.pyarrow_schema())
+    pages = segwriter.encode(tbl, series.schema)
+    path, digest = segwriter.publish(coll.fs, coll.seg_prefix, pages)
+    meta = {"digest": digest}
+    if pages.zmap:
+        meta["zmap"] = pages.zmap
+    series._commit_segment(Segment(
+        series.label, pages.lo, pages.hi, True, True, path, pages.n,
+        meta=meta,
+    ))
+
+
 class Layout:
     """A series plus a row model of its writes: key tuple -> row."""
 
@@ -41,7 +64,7 @@ class Layout:
         self.model: dict = {}
         self.before = None
 
-    def write(self, rows, start=None, stop=None, df=None):
+    def write(self, rows, start=None, stop=None, df=None, keep_nan=False):
         s = self.series
         idx = list(s.schema.idx)
         keys = [tuple(r[c] for c in idx) for r in rows]
@@ -53,7 +76,9 @@ class Layout:
                 if lo <= k[: len(lo)] and k[: len(hi)] <= hi:
                     del self.model[k]
         self.model.update(zip(keys, rows))
-        if df is not None:
+        if keep_nan:
+            write_keeping_nan(s, rows)
+        elif df is not None:
             s.write(df)
         else:
             cols = {c: [r[c] for r in rows] for c in s.schema.columns}
@@ -144,13 +169,11 @@ def grid(spark):
         {"ts": i, "value": NAN if i % 3 == 0 else float(i % 7)}
         for i in range(30, 60)
     ]
-    # a Spark DataFrame of tuples keeps NaN (pandas inputs store null)
-    lay.write(nan_rows, df=spark.createDataFrame(
-        [(r["ts"], r["value"]) for r in nan_rows], "ts long, value double"
-    ))
+    # segments that store NaN values (written before every write path
+    # stored them as null)
+    lay.write(nan_rows, keep_nan=True)
     lay.write([{"ts": 35, "value": 2.0}, {"ts": 40, "value": NAN}],
-              df=spark.createDataFrame(
-                  [(35, 2.0), (40, NAN)], "ts long, value double"))
+              keep_nan=True)
 
     lay = out["before"] = Layout(plain, "before")
     lay.write(_rng(0, 60))

@@ -4,6 +4,8 @@ source's batch and stream readers): about one writer page of rows per
 task, contiguous and in input order, capped by the caller's ceiling.
 """
 
+import re
+
 import pytest
 
 from lakota_spark import plans
@@ -125,11 +127,36 @@ def test_empty_read_keeps_one_partition(spark, repo):
     assert df.count() == 0
 
 
+def _plan_shape(df) -> str:
+    """Physical plan text with expression ids dropped."""
+    return re.sub(r"#\d+L?", "", plans.explain_str(df, "simple"))
+
+
+def test_frame_plan_is_range_then_map_in_arrow(seg21):
+    # the chunks ride in the mapInArrow closure over spark.range: JVM
+    # rows in, no Python RDD, no shuffle
+    _, s = seg21
+    plan = _plan_shape(s.frame(start=250, stop=10_249, mask="(< self.value 1000)"))
+    assert re.search(r"Range \(0, 1, step=1, splits=1\)", plan), plan
+    assert "MapInArrow" in plan, plan
+    for node in ("ExistingRDD", "Exchange", "Sort"):
+        assert node not in plan, plan
+
+
+def test_masked_frame_count_is_one_job(spark, seg21):
+    from tests.test_sorted_write import count_jobs
+
+    _, s = seg21
+    df = s.frame(start=250, stop=10_249, mask="(< self.value 1000)")
+    assert df.count() == 750
+    assert count_jobs(spark.sparkContext, df.count) == 1
+
+
 def test_connect_fallback_keeps_sort_order(spark, repo, monkeypatch):
-    """Without a `sparkContext` (Spark Connect) the segment scan spreads
-    its planned chunks through a local relation; range partitioning and
-    sorting on the chunk index must keep partition order == sort order,
-    as the classic `parallelize` branch does."""
+    """Spark Connect has no `sparkContext`: only the task ceiling falls
+    back (to ``spark.sql.shuffle.partitions``). The relation, its
+    partitions and its rows must match the classic session's, with
+    partition order == sort order across every chunk."""
     coll = repo.create_collection(Schema(ts="int*", value="float"), "fb")
     s = coll.series("x")
     for k in [*range(1, 40, 2), *range(0, 40, 2)]:
@@ -138,12 +165,12 @@ def test_connect_fallback_keeps_sort_order(spark, repo, monkeypatch):
             "ts": list(range(lo, lo + 500)),
             "value": [float(i) for i in range(lo, lo + 500)],
         })
-    # shrink the page so the 20k rows pack into several chunks
-    monkeypatch.setattr("lakota_spark.series.PAGE_LEN", 1000)
+    # one segment per page: the 20k rows ask for 40 chunks
+    monkeypatch.setattr("lakota_spark.series.PAGE_LEN", 500)
     classic_df = s.frame()
-    assert classic_df.rdd.getNumPartitions() == min(
-        20, 2 * spark.sparkContext.defaultParallelism
-    )
+    # 2 x defaultParallelism chunks: more than there are cores
+    n = classic_df.rdd.getNumPartitions()
+    assert n == min(40, 2 * spark.sparkContext.defaultParallelism)
     classic = [(r.ts, r.value) for r in classic_df.collect()]
     assert [t for t, _ in classic] == list(range(20_000))
 
@@ -158,8 +185,13 @@ def test_connect_fallback_keeps_sort_order(spark, repo, monkeypatch):
     monkeypatch.setattr(Series, "spark", property(lambda self: NoContext()))
     with pytest.raises(RuntimeError):
         s.spark.sparkContext
-    fallback_df = s.frame(sort=True)
-    plan = plans.explain_str(fallback_df, "simple")
-    assert "MapInArrow" in plan and "rangepartitioning(chunk" in plan, plan
-    fallback = [(r.ts, r.value) for r in fallback_df.collect()]
-    assert fallback == classic
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(n))  # the same ceiling as the classic one
+    try:
+        connect_df = s.frame(sort=True)
+    finally:
+        spark.conf.set(key, old)
+    assert _plan_shape(connect_df) == _plan_shape(classic_df)
+    assert connect_df.rdd.getNumPartitions() == n
+    assert [(r.ts, r.value) for r in connect_df.collect()] == classic

@@ -109,6 +109,27 @@ def test_time_travel(series):
     assert rows(series.frame(before=cut)) == list(zip(TS, [3.3, 4.4, 5.5]))
 
 
+def test_before_now_sees_a_burst_of_appends(repo):
+    # commit stamps must not run ahead of the wall clock: appends that
+    # land several to a millisecond are all older than time.time()
+    coll = repo.create_collection(Schema(timestamp="int*", value="float"), "b")
+    s = coll.series("x")
+    for i in range(300):
+        s.write({"timestamp": [i], "value": [float(i)]})
+    assert len(s.df(before=time.time())) == 300
+
+
+def test_staging_name_leaves_commit_clock_alone():
+    # staging dirs are unique by their uid: naming one must not bump the
+    # monotonic commit clock
+    from lakota_spark.changelog import hexts, staging_name
+
+    first = int(hexts(), 16)
+    for _ in range(1000):
+        staging_name("u")
+    assert int(hexts(), 16) <= max(int(time.time() * 1000), first + 1)
+
+
 def test_select_limit_offset(series):
     f = series.frame(select=["value"], limit=2, offset=1)
     assert [r.value for r in f.collect()] == [4.4, 5.5]
@@ -425,16 +446,21 @@ def test_content_hash_executor_side(repo, monkeypatch):
         [hashlib.sha1(b).hexdigest() for b in blobs]  # noqa: S324
     )
     assert seg.meta["digest"] == digest and seg.path == digest[:20]
-    # the schema's codec hint and the NaN stat omission hold on the
-    # executor path too (one encoder for every writer)
+    # the schema's codec hint holds on the executor path too (one
+    # encoder for every writer); the NaN values arrive as null, as on
+    # the driver-local path, so the value column publishes min/max
+    # (the NaN stat omission is pinned on a float index in
+    # tests/test_local_write_property.py)
+    nulls = 0
     for b in blobs:
         rg = pq.ParquetFile(io.BytesIO(b)).metadata.row_group(0)
         cols = {rg.column(i).path_in_schema: rg.column(i)
                 for i in range(rg.num_columns)}
         assert cols["key"].compression == "GZIP"
         assert cols["key"].statistics.has_min_max
-        stats = cols["value"].statistics
-        assert stats is None or not stats.has_min_max
+        assert cols["value"].statistics.has_min_max
+        nulls += cols["value"].statistics.null_count
+    assert nulls == 8
     assert coll.series("x").df()["key"].tolist() == [k for k, _ in rows]
 
 

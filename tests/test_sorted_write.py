@@ -134,22 +134,59 @@ def test_presorted_write_runs_one_job(repo):
 
 
 def test_many_partition_validate_checks_then_sorts(repo, monkeypatch):
-    # past the partition gate the write always sorts (the range exchange
-    # compacts confetti); validate_sorted still checks the input first
+    # past the partition gate (more non-empty partitions came back from
+    # the encode job than 2 x defaultParallelism) the write discards the
+    # staged pages and sorts (the range exchange compacts confetti);
+    # validate_sorted still raises on an unsorted input
     spark = repo.spark
+    sc = spark.sparkContext
     schema, parts, _ = CASES["sorted"]
-    monkeypatch.setattr(type(spark.sparkContext), "defaultParallelism", 1)
+    monkeypatch.setattr(type(sc), "defaultParallelism", 1)
     coll = repo.create_collection(schema, "m")
-    sorted_df = frame_of(spark, schema, parts)
-    coll.series("ok").write(sorted_df, validate_sorted=True)
+    sorted_df = frame_of(spark, schema, parts)  # 4 partitions > 2
+    # partitions past the gate are checked, not encoded
+    got, tmp_rel = coll.series("ok")._encode_partitions(sorted_df, 2)
+    assert [(p.n, bool(p.names)) for p in got] == [
+        (25, True), (25, True), (25, False), (25, False)]
+    segwriter.discard(coll.fs, tmp_rel)
+    assert count_jobs(sc, lambda: coll.series("ok").write(
+        sorted_df, validate_sorted=True)) > 1
     assert plain(coll.series("ok").frame().collect()) == plain(
         sorted_df.sort("k").collect()
     )
     _, bad, _ = CASES["partly_overlapping_edges"]
-    bad = bad + [[], [], []]  # 5 partitions > 2 * defaultParallelism
+    bad = bad + [[(9,)], [(10,)], []]  # 4 non-empty partitions > 2
     with pytest.raises(ValueError, match=EDGE):
         coll.series("bad").write(frame_of(spark, schema, bad), validate_sorted=True)
     assert staging_dirs(coll) == []
+
+
+def test_range_exchanged_input_counts_no_partitions_up_front(repo):
+    # the partition gate reads the encode job's own output: a presorted
+    # input with an uncheckpointed range exchange runs only the jobs of
+    # that one encode (range sampling, the shuffle stage, the encode
+    # stage), checkpointed by default or not (the default write ran 5
+    # jobs when the gate asked `df.rdd` for its partition count first)
+    from pyspark.sql import functions as F
+
+    spark = repo.spark
+    sc = spark.sparkContext
+    src = (
+        spark.range(100_000, numPartitions=4)
+        .select(F.col("id").alias("k"), F.col("id").cast("double").alias("v"))
+        .repartitionByRange(2, "k")
+        .sortWithinPartitions("k")
+    )
+    coll = repo.create_collection(ONE, "r")
+    assert count_jobs(sc, lambda: coll.series("a").write(src)) == 3
+    assert count_jobs(
+        sc, lambda: coll.series("b").write(src, checkpoint=False)
+    ) == 3
+    for label in ("a", "b"):
+        (seg,) = coll.series(label).segments()
+        assert seg.length == 100_000
+        # presorted path: one page per input partition
+        assert len(coll.fs.ls(f"{coll.seg_prefix}/{seg.path}")) == 2
 
 
 def test_sort_violation_order():

@@ -300,13 +300,12 @@ def test_nan_mask_semantics_match_classic_path(spark, repo):
     register(spark)
     clc = repo.create_collection(Schema(i="int*", f="float"), "nanz")
     srs = clc.series("n")
-    # REAL NaN only enters through the Spark/arrow write paths — the
-    # driver-local pandas path folds NaN into null at Table.from_pandas
-    # (pandas cannot tell them apart), which is the pandas contract
-    srs.write(
-        spark.createDataFrame(
-            [(0, 5.0), (1, 5.0), (2, float("nan"))], "i long, f double"
-        )
+    # every write path now stores a NaN value as null; a segment written
+    # before that still holds a REAL NaN
+    from tests.test_read_grid import write_keeping_nan
+
+    write_keeping_nan(
+        srs, [{"i": 0, "f": 5.0}, {"i": 1, "f": 5.0}, {"i": 2, "f": float("nan")}]
     )
     srs.write({"i": [3, 4], "f": [1.0, 2.0]})
 
