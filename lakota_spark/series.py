@@ -616,43 +616,41 @@ class Series:
             kv_dedup = not zonemap.pairwise_disjoint(
                 [s for s in segs if s.path]
             )
-        mask_col = mask_plan = None
-        if mask is not None:
-            from lakota_spark import sexpr as _sexpr
+        mask_plan, _ = self._compile_mask(mask)
+        if mask_plan is not None:
+            # value-column zone maps: skip whole segments the mask
+            # provably cannot match. Overlapping KV goes through
+            # the shadowing-aware variant (round 13): only segments
+            # that shadow NOTHING may drop — dropping a masked-out
+            # newer segment would otherwise resurrect the older
+            # rows it shadows (mask applies after last-writer-wins
+            # dedup). Disjoint KV shadows nothing by construction,
+            # so the plain pruner is safe and maximal.
+            from lakota_spark import zonemap
 
-            mc = _sexpr.evaluate(_sexpr.parse(mask))
-            mask_col = mc.value if isinstance(mc, _sexpr.Alias) else mc
-            mask_plan, _ = self._compile_mask(mask)
-            if mask_plan is not None:
-                # value-column zone maps: skip whole segments the mask
-                # provably cannot match. Overlapping KV goes through
-                # the shadowing-aware variant (round 13): only segments
-                # that shadow NOTHING may drop — dropping a masked-out
-                # newer segment would otherwise resurrect the older
-                # rows it shadows (mask applies after last-writer-wins
-                # dedup). Disjoint KV shadows nothing by construction,
-                # so the plain pruner is safe and maximal.
-                from lakota_spark import zonemap
-
-                segs = (
-                    zonemap.prune_kv(segs, mask_plan)
-                    if kv_dedup
-                    else zonemap.prune(segs, mask_plan)
-                )
+            segs = (
+                zonemap.prune_kv(segs, mask_plan)
+                if kv_dedup
+                else zonemap.prune(segs, mask_plan)
+            )
         rng = segscan.range_plan(
             self.schema,
             self.schema.coerce_bound(start),
             self.schema.coerce_bound(stop),
             *CLOSED[closed],
         )
+        # Only these two branches filter with a Spark Column; building
+        # it costs py4j round trips, so a pushed-down mask never does.
+        from lakota_spark import sexpr
+
         if kv_dedup:
             df = self._read(segs, rng, kv_dedup=True)
-            if mask_col is not None:
-                df = df.where(mask_col)
+            if mask is not None:
+                df = sexpr.mask(df, mask)
             if sort:
                 df = df.orderBy(*[F.col(c) for c in self.schema.idx])
-        elif mask_col is not None and mask_plan is None:
-            df = self._read(segs, rng).where(mask_col)
+        elif mask is not None and mask_plan is None:
+            df = sexpr.mask(self._read(segs, rng), mask)
         else:
             df = self._read(segs, segscan.conj(rng, mask_plan), cols=cols)
         if offset:

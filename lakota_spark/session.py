@@ -7,8 +7,40 @@ handling, zstd parquet) while remaining correct on local[N] test runs.
 from __future__ import annotations
 
 import os
+import tempfile
 
 from pyspark.sql import SparkSession
+
+#: Linux ``sun_path`` is 108 bytes, one of them the terminating NUL.
+AF_UNIX_PATH_MAX = 107
+#: Spark binds every Unix socket as ``<dir>/.<uuid4>.sock``.
+_SOCK_NAME = "." + "0" * 36 + ".sock"
+_UDS = "spark.python.unix.domain.socket."
+
+
+def uds_conf(extra_conf: dict[str, str] | None = None) -> dict[str, str]:
+    """The ``spark.python.unix.domain.socket.*`` conf of a new session.
+
+    JVM<->Python traffic (Python tasks, Python data sources, Arrow
+    ``collect``/``toPandas``, accumulators) runs over Unix domain
+    sockets: over loopback TCP every Python task waited a constant
+    ~41 ms for its first input bytes, over a Unix socket under 1 ms
+    (NOTES.md, "Python tasks waited 41.6 ms on TCP"). The socket dir is
+    ``tempfile.gettempdir()`` when a socket path under it fits
+    ``AF_UNIX_PATH_MAX``, else ``/tmp``; if neither fits, the session
+    stays on TCP, because a longer path fails session start with
+    ``OSError: AF_UNIX path too long``. Socket keys in ``extra_conf``
+    win over these defaults.
+    """
+    conf = {}
+    for d in (tempfile.gettempdir(), "/tmp"):
+        if len(os.path.join(d, _SOCK_NAME).encode()) <= AF_UNIX_PATH_MAX:
+            conf = {_UDS + "enabled": "true", _UDS + "dir": d}
+            break
+    conf.update(
+        (k, v) for k, v in (extra_conf or {}).items() if k.startswith(_UDS)
+    )
+    return conf
 
 
 def get_spark(
@@ -60,7 +92,7 @@ def get_spark(
         builder = builder.master(f"local[{cpus}]")
     elif master:
         builder = builder.master(master)
-    for k, v in (extra_conf or {}).items():
+    for k, v in {**uds_conf(extra_conf), **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     _silence_benign_accumulator_noise(spark)

@@ -923,6 +923,55 @@ def test_frame_mask_fallback_and_kv_semantics(repo, planned):
     assert out == {1: 10.0, 3: 30.0}
 
 
+def test_frame_builds_mask_column_only_where_it_filters(
+    spark, tmp_path, monkeypatch
+):
+    # frame(mask=) builds the mask's Spark Column (sexpr.evaluate, py4j
+    # round trips) only in the two branches that filter with it: masks
+    # outside the pushable subset, and overlapping KV after the dedup.
+    from pyspark.errors import AnalysisException
+
+    from lakota_spark import sexpr
+    from lakota_spark.repo import Repo
+
+    built = []
+    real = sexpr.evaluate
+
+    def spy(*args, **kwargs):
+        built.append(args[0])
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(sexpr, "evaluate", spy)
+    repo = Repo(str(tmp_path), spark)
+    s = repo.create_collection(Schema(ts="int*", value="float"), "c").series("x")
+    s.write({"ts": list(range(50)), "value": [float(i) for i in range(50)]})
+
+    df = s.frame(mask="(> self.value 45)")
+    assert built == []
+    assert [r.ts for r in df.collect()] == [46, 47, 48, 49]
+
+    df = s.frame(mask="(< (+ self.value 1) 6)")
+    assert built
+    assert [r.ts for r in df.collect()] == [0, 1, 2, 3, 4]
+
+    ks = repo.create_collection(Schema.kv_schema(k="int*", v="float"), "kv")
+    ks = ks.series("x")
+    ks.write({"k": [1, 2, 3], "v": [10.0, 20.0, 30.0]})
+    ks.write({"k": [2], "v": [5.0]})
+    built.clear()
+    out = {r.k: r.v for r in ks.frame(mask="(> self.v 9)").collect()}
+    assert built
+    assert out == {1: 10.0, 3: 30.0}
+
+    for bad, err in [
+        ("(< self.value", sexpr.SexprError),
+        ("(nosuchfn self.value)", sexpr.SexprError),
+        ("(< self.nosuch 3)", AnalysisException),
+    ]:
+        with pytest.raises(err):
+            s.frame(mask=bad)
+
+
 def test_frame_mask_timestamp_literal_on_fast_path(repo):
     # string literals compared to timestamp columns coerce to UTC
     # datetimes for the arrow-side filter (the cast schema reads ts as
