@@ -16,7 +16,7 @@ from contextlib import contextmanager
 
 from pyspark.sql import functions as F
 
-from lakota_spark import segwriter
+from lakota_spark import segscan, segwriter
 from lakota_spark.changelog import PHI, Changelog, checkpoint_cadence
 from lakota_spark.commit import Segment, Snapshot, payload_paths
 from lakota_spark.schema import Schema
@@ -727,7 +727,9 @@ class Collection:
     def defrag(self, page_len: int = PAGE_LEN, max_chunk: int = DEFRAG_MAX_CHUNK):
         """Compaction (`lakota/collection.py:364-403`): rewrite runs of
         small segments into page-sized ones; fast-forward past chunks that
-        are already large. One Spark job per fragmented run.
+        are already large. A run is fewer than ``2 * page_len`` rows, so
+        each is read in this process (`segscan.table`) and encoded with
+        `segwriter.encode`: defrag starts no Spark job.
 
         Commits with optimistic concurrency (see `leaf_and_snapshot`): a
         write racing past the captured leaf forks the changelog instead
@@ -772,25 +774,17 @@ class Collection:
                             and cmp_prefix(run_lo, tuple(o.stop)) <= 0
                         ):
                             return
-                series = self.series(label)
-                # Driver-local fast path: a fragmented run is many tiny
-                # files with driver-sized total bytes — pyarrow
-                # read+rewrite beats a Spark job by ~20x (see
-                # `Series._read_run_local`). Falls back to the Spark
-                # path for overlapping KV (needs the resolving read),
-                # clipped pieces, and non-arrow backends.
-                tbl = series._read_run_local(run)
-                if tbl is not None:
-                    pages = segwriter.encode(tbl, self.schema)
-                else:
-                    # KV runs may hold several versions of a key across
-                    # overlapping segments: resolve last-writer-wins
-                    # BEFORE merging, else the single merged seq would
-                    # make the surviving version arbitrary at read time
-                    # (the reference defrags through the resolving
-                    # read path).
-                    df = series._read(run, kv_dedup=self.schema.kv)
-                    pages = series._stage_df(df.select(*self.schema.columns))
+                # KV runs may hold several versions of a key across
+                # overlapping segments: resolve last-writer-wins BEFORE
+                # merging, else the single merged seq would make the
+                # surviving version arbitrary at read time (the
+                # reference defrags through the resolving read path).
+                tbl = segscan.table(
+                    self.series(label), run, seq=self.schema.kv
+                )
+                pages = segwriter.encode(
+                    segwriter.conform(tbl, self.schema), self.schema
+                )
                 if pages.n == 0:
                     return
                 # `run` is sorted by start; KV segments may overlap, so

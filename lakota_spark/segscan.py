@@ -1,12 +1,13 @@
 """The one reader of committed segment files.
 
-Every Spark-side read of segments plans and scans here: `Series.frame()`
-and `Series.tail()` (through `Series._read`, a `mapInArrow` relation),
-the Spark branch of `Collection.defrag`, and the ``lakota`` data
-source's batch and stream readers (`datasource.py`). The reference reads
-the same way (`lakota/series.py:314-338`, `lakota/commit.py:425-475`):
-prune segments by interval, decode only the needed columns, clip rows to
-each segment's bounds.
+Every read of segments plans and scans here, on the executors and on
+the driver alike: `Series.frame()` and `Series.tail()` (through
+`Series._read`, a `mapInArrow` relation), `Series.df()` and
+`Collection.defrag` (through `table`, in the calling process), and the
+``lakota`` data source's batch and stream readers (`datasource.py`). The
+reference reads the same way (`lakota/series.py:314-338`,
+`lakota/commit.py:425-475`): prune segments by interval, decode only the
+needed columns, clip rows to each segment's bounds.
 
 * `partitions` (driver): lists each live segment's part files in the
   given order, tags each file with its run key — the clip plan of an
@@ -14,12 +15,15 @@ each segment's bounds.
   segment's seq — and packs the list into `series.scan_chunks` chunks.
   A referenced segment dir that a concurrent gc buried in trash is
   moved back and the listing retried once.
-* `scan` (executor): reads a chunk's files in order, one pyarrow dataset
-  scan per run of consecutive files sharing a run key, with the chunk's
-  plan (query bounds and/or mask) and the run's clip pushed down for
-  row-group pruning, then casts to Spark's arrow types and applies the
-  same plan exactly. A file whose physical type refuses the pushed
-  comparison retries unfiltered; the exact filter still clips it.
+* `scan` (executor, or the driver through `table`): reads a chunk's
+  files in order, one pyarrow dataset scan per run of consecutive files
+  sharing a run key, with the chunk's plan (query bounds and/or mask)
+  and the run's clip pushed down for row-group pruning, then casts to
+  Spark's arrow types and applies the same plan exactly. A file whose
+  physical type refuses the pushed comparison retries unfiltered; the
+  exact filter still clips it.
+* `table` (driver): one chunk, scanned in this process, as one arrow
+  table; last-writer-wins resolved when asked.
 
 Plans are `sexpr.to_filter_plan` trees; bound plans built here carry
 UTC-aware timestamp literals, matching the cast schema.
@@ -216,3 +220,70 @@ def scan(meta: dict, struct, schema=None) -> Iterator:
             ).select(out)
         if tbl.num_rows:
             yield from tbl.to_batches()
+
+
+def read_struct(schema, seq: bool = False, cols=None):
+    """The Spark struct a read yields: ``schema``'s fields, narrowed to
+    ``cols`` when given, plus `SEQ` when ``seq``."""
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    fields = list(schema.fields)
+    if seq:
+        fields.append(StructField(SEQ, LongType()))
+    if cols is not None:
+        fields = [f for c in cols for f in fields if f.name == c]
+    return StructType(fields)
+
+
+def table(series, segs, plan=None, seq: bool = False, cols=None):
+    """Rows of ``segs`` (in the given order) passing ``plan``, read in
+    this process as ONE arrow table in Spark's arrow types: `partitions`
+    into a single chunk, then `scan`. ``seq=True`` resolves
+    last-writer-wins (`lakota/series.py:449-475`): per index key only
+    the row of the highest-seq segment survives, in key order. Without
+    it, ``cols`` narrows the decoded columns (default: every column)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = series.schema.struct_type()
+    struct = read_struct(schema, seq, None if seq else cols)
+    (chunk,) = partitions(series, segs, plan, 1, seq)
+    tbl = pa.Table.from_batches(
+        list(scan(chunk, struct, schema)), schema=to_arrow_schema(struct)
+    )
+    if seq:
+        tbl = _last_writer_wins(tbl, series.schema.idx).drop_columns([SEQ])
+    return tbl
+
+
+def _last_writer_wins(tbl, idx):
+    """The highest-`SEQ` row per index key of ``tbl``, sorted in Spark's
+    order (nulls first, NaN after every number)."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    from lakota_spark.segwriter import adjacent
+
+    keys, sort = {}, []
+    for i, c in enumerate(idx):
+        col = tbl.column(c)
+        if pa.types.is_floating(col.type):
+            # arrow puts NaN before numbers when nulls go first
+            keys[f"n{i}"] = pc.is_nan(col)
+            sort.append((f"n{i}", "ascending"))
+        keys[f"k{i}"] = col
+        sort.append((f"k{i}", "ascending"))
+    keys[SEQ] = tbl.column(SEQ)
+    sort.append((SEQ, "descending"))
+    tbl = tbl.take(
+        pc.sort_indices(
+            pa.table(keys), sort_keys=sort, null_placement="at_start"
+        )
+    )
+    _, tie = adjacent(tbl, idx)
+    if tie is None:
+        return tbl
+    keep = np.ones(len(tbl), dtype=bool)
+    keep[1:] = ~tie.to_numpy()
+    return tbl.filter(keep)

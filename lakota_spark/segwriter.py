@@ -197,17 +197,18 @@ def stage(pages: Pages, uri: str, tmp_rel: str) -> Pages:
     return pages
 
 
-def descents(table, idx) -> int:
-    """Adjacent row pairs of ``table`` whose index tuples DESCEND in the
-    order ``df.sort`` on the index columns produces: lexicographic,
-    nulls first, NaN after every number and equal to NaN. Equal tuples
-    are no descent. Zero iff the rows are already in that order."""
+def adjacent(table, idx):
+    """``(desc, tie)``: boolean arrays over the adjacent row pairs of
+    ``table`` (``len - 1`` of them, no nulls), true where row ``i+1``'s
+    index tuple is below / equal to row ``i``'s in the order ``df.sort``
+    on the index columns produces: lexicographic, nulls first, NaN after
+    every number and equal to NaN. ``(None, None)`` below two rows."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
     n = len(table)
     if n < 2:
-        return 0
+        return None, None
     desc = tie = None  # row i+1 < row i; row i+1 == row i so far
     for c in idx:
         col = table.column(c)
@@ -223,7 +224,17 @@ def descents(table, idx) -> int:
             eq = pc.or_(eq.fill_null(False), pc.and_(an, bn))
         desc = lt if desc is None else pc.or_(desc, pc.and_(tie, lt))
         tie = eq if tie is None else pc.and_(tie, eq)
-    return pc.sum(desc).as_py() or 0
+    return desc, tie
+
+
+def descents(table, idx) -> int:
+    """Adjacent row pairs of ``table`` whose index tuples DESCEND in
+    `adjacent`'s order. Equal tuples are no descent. Zero iff the rows
+    are already in that order."""
+    import pyarrow.compute as pc
+
+    desc, _ = adjacent(table, idx)
+    return 0 if desc is None else pc.sum(desc).as_py() or 0
 
 
 def partition_task(

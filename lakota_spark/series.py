@@ -5,23 +5,21 @@ cast to schema → range-partition + sort → write a content-addressed
 Parquet segment → overlay onto the leaf snapshot → append a revision.
 
 Read path (`lakota/series.py:314-338`): resolve snapshot → prune segments
-by label + interval (pure metadata, before Spark sees any file) → one
-`mapInArrow` relation over ``spark.range``, one id per planned chunk
-of the surviving segments' files in interval order (`segscan`: the
-query bounds and the mask pushed into each pyarrow dataset scan,
+by label + interval (pure metadata, before any segment file is opened)
+→ scan the surviving segments' files in interval order with `segscan`
+(the query bounds and the mask pushed into each pyarrow dataset scan,
 overlay-clipped segments clipped to their effective bounds, only the
-needed columns decoded) → optional select/limit/offset.
-Partition order is sort order, so a sorted read plans no Exchange.
-
-Scale notes: the only driver-side work is metadata (segment lists and
-their file listings); data never flows through the driver.
+needed columns decoded) → optional select/limit/offset. `frame()` runs
+the scan as one `mapInArrow` relation over ``spark.range``, one id per
+planned chunk; partition order is sort order, so a sorted read plans
+no Exchange. `df()` runs the same scan in the calling process and
+starts no Spark job, so its rows do flow through the driver; only a
+mask outside the pushable subset sends it through `frame()`.
 """
 
 from __future__ import annotations
 
 import datetime as dt
-
-import pyarrow as pa_lib
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -45,10 +43,10 @@ CLOSED = {
 
 def scan_chunks(files: list, rows: int, ceiling: int) -> list[list]:
     """The one task-count rule of the segment scan (`segscan.partitions`,
-    behind `Series.frame`/`tail`, defrag and the ``lakota`` data
-    source's batch and stream readers): split the ordered ``files`` into
-    ``ceil(rows / PAGE_LEN)`` contiguous chunks, clamped to
-    ``[1, len(files)]`` and to ``ceiling``.
+    behind `Series.frame`/`tail` and the ``lakota`` data source's batch
+    and stream readers; `Series.df` and defrag ask for one chunk): split
+    the ordered ``files`` into ``ceil(rows / PAGE_LEN)`` contiguous
+    chunks, clamped to ``[1, len(files)]`` and to ``ceiling``.
 
     Every Python task pays a worker round trip whatever it reads, so a
     pruned read of a few small segments runs as ONE task, and a large
@@ -138,11 +136,6 @@ def _physical_plan_str(df) -> str:
 
 
 class Series:
-    #: class-level ring of recent driver-local read fallbacks (reason
-    #: strings) — lets tests and operators detect a silent demotion of
-    #: `df()` to the Spark path (see `df()` docstring)
-    df_fallbacks: list[str] = []
-
     def __init__(self, collection, label: str):
         self.collection = collection
         self.label = label
@@ -600,45 +593,11 @@ class Series:
         are in interval order and partition order == sort order, so
         ``sort=True`` costs no Exchange or Sort. Overlapping KV is the
         one layout that shuffles (the dedup window), then sorts."""
-        segs = self.segments(start, stop, before, closed)
-        cols = select or list(self.schema.columns)
-        # KV dedup is only NEEDED when two queried segments could hold
-        # the same key — i.e. their intervals overlap. A pairwise-
-        # disjoint queried set (the append-heavy registry shape) makes
-        # last-writer-wins a per-row no-op, so the read drops the
-        # window exchange entirely and reads like a non-KV series
-        # (round 13; differential + plan contracts in
-        # tests/test_zonemap.py / test_plans.py).
-        kv_dedup = self.schema.kv
-        if kv_dedup:
-            from lakota_spark import zonemap
-
-            kv_dedup = not zonemap.pairwise_disjoint(
-                [s for s in segs if s.path]
-            )
         mask_plan, _ = self._compile_mask(mask)
-        if mask_plan is not None:
-            # value-column zone maps: skip whole segments the mask
-            # provably cannot match. Overlapping KV goes through
-            # the shadowing-aware variant (round 13): only segments
-            # that shadow NOTHING may drop — dropping a masked-out
-            # newer segment would otherwise resurrect the older
-            # rows it shadows (mask applies after last-writer-wins
-            # dedup). Disjoint KV shadows nothing by construction,
-            # so the plain pruner is safe and maximal.
-            from lakota_spark import zonemap
-
-            segs = (
-                zonemap.prune_kv(segs, mask_plan)
-                if kv_dedup
-                else zonemap.prune(segs, mask_plan)
-            )
-        rng = segscan.range_plan(
-            self.schema,
-            self.schema.coerce_bound(start),
-            self.schema.coerce_bound(stop),
-            *CLOSED[closed],
+        segs, kv_dedup, rng = self._pruned(
+            start, stop, before, closed, mask_plan
         )
+        cols = select or list(self.schema.columns)
         # Only these two branches filter with a Spark Column; building
         # it costs py4j round trips, so a pushed-down mask never does.
         from lakota_spark import sexpr
@@ -659,7 +618,48 @@ class Series:
             df = df.limit(limit)
         return df.select(*cols)
 
-    def _compile_mask(self, mask: str | None, tz_aware: bool = True):
+    def _pruned(self, start, stop, before, closed: str, mask_plan):
+        """Resolve and prune for a read: ``(segs, kv_dedup, rng)`` with
+        ``segs`` the label's segments inside the bounds that the mask
+        plan's zone maps keep, in interval order unless ``kv_dedup``;
+        ``kv_dedup`` whether last-writer-wins must resolve them; ``rng``
+        the query bounds as a plan."""
+        from lakota_spark import zonemap
+
+        segs = self.segments(start, stop, before, closed)
+        # KV dedup is only NEEDED when two queried segments could hold
+        # the same key — i.e. their intervals overlap. A pairwise-
+        # disjoint queried set (the append-heavy registry shape) makes
+        # last-writer-wins a per-row no-op, so the read skips the dedup
+        # and reads like a non-KV series, with the commit-ordered KV
+        # snapshot list re-sorted to interval order (= sort order).
+        kv_dedup = self.schema.kv and not zonemap.pairwise_disjoint(
+            [s for s in segs if s.path]
+        )
+        if self.schema.kv and not kv_dedup:
+            segs = sorted(segs, key=lambda s: tuple(s.start))
+        if mask_plan is not None:
+            # value-column zone maps: skip whole segments the mask
+            # provably cannot match. Overlapping KV goes through the
+            # shadowing-aware variant: only segments that shadow NOTHING
+            # may drop — dropping a masked-out newer segment would
+            # otherwise resurrect the older rows it shadows (the mask
+            # applies after last-writer-wins). Disjoint KV shadows
+            # nothing, so the plain pruner is safe and maximal.
+            segs = (
+                zonemap.prune_kv(segs, mask_plan)
+                if kv_dedup
+                else zonemap.prune(segs, mask_plan)
+            )
+        rng = segscan.range_plan(
+            self.schema,
+            self.schema.coerce_bound(start),
+            self.schema.coerce_bound(stop),
+            *CLOSED[closed],
+        )
+        return segs, kv_dedup, rng
+
+    def _compile_mask(self, mask: str | None):
         """Compile ``mask`` to a pyarrow filter plan for the segment
         scan: `sexpr.to_filter_plan` handles the pushable subset,
         literals compared to timestamp index/value columns coerce to
@@ -668,9 +668,7 @@ class Series:
         type the executors would choke on is applied as a Spark filter
         on the scan's output instead of failing mid-job. Returns
         (plan, fields) or (None, None) when the mask is absent or not
-        pushable.
-        ``tz_aware=False`` keeps timestamp literals naive for the
-        driver-local reader, whose cast target is naive ns."""
+        pushable."""
         if mask is None:
             return None, None
         from lakota_spark import sexpr as _sexpr
@@ -695,9 +693,9 @@ class Series:
             if kind == "cmp":
                 _, op, a, b = node
                 if a[0] == "field" and a[1] in ts_cols and b[0] == "lit":
-                    b = ("lit", self._ts_lit(b[1], tz_aware))
+                    b = ("lit", self._ts_lit(b[1]))
                 elif b[0] == "field" and b[1] in ts_cols and a[0] == "lit":
-                    a = ("lit", self._ts_lit(a[1], tz_aware))
+                    a = ("lit", self._ts_lit(a[1]))
                 return ("cmp", op, a, b)
             if kind in ("and", "or"):
                 return (kind, [coerce(x) for x in node[1]])
@@ -707,7 +705,7 @@ class Series:
                 return (
                     "in",
                     node[1],
-                    [self._ts_lit(v, tz_aware) for v in node[2]],
+                    [self._ts_lit(v) for v in node[2]],
                 )
             return node
 
@@ -726,71 +724,27 @@ class Series:
                     if k == "float"
                 },
             )
-            if tz_aware:
-                probe = to_arrow_schema(
-                    self.schema.struct_type()
-                ).empty_table()
-            else:
-                import pyarrow as pa
-
-                pa_ns = {"timestamp": pa.timestamp("ns"),
-                         "date": pa.date32(), "int": pa.int64(),
-                         "float": pa.float64(), "str": pa.string()}
-                probe = pa.schema(
-                    [(c, pa_ns[t]) for c, t in self.schema.columns.items()]
-                ).empty_table()
-            probe.filter(_arrow_mask_expr(plan))
+            to_arrow_schema(self.schema.struct_type()).empty_table().filter(
+                _arrow_mask_expr(plan)
+            )
         except Exception:  # noqa: BLE001 — any rejection: filter on top
             return None, None
         return plan, fields
 
     @staticmethod
-    def _ts_lit(v, tz_aware: bool = True):
-        """Timestamp literal for an arrow-side mask: parse strings /
-        naive datetimes; UTC-localized for the executor reader (its
-        cast schema reads timestamps as tz=UTC; session timezone is
-        UTC), naive for the driver-local ns reader."""
+    def _ts_lit(v):
+        """Timestamp literal for an arrow-side mask: strings and naive
+        datetimes parse to UTC-aware datetimes, matching the scan's cast
+        schema (timestamps read as tz=UTC; the session timezone is
+        UTC)."""
         import pandas as pd
 
-        ts = pd.Timestamp(v)
-        out = ts.to_pydatetime()
-        if tz_aware and out.tzinfo is None:
+        out = pd.Timestamp(v).to_pydatetime()
+        if out.tzinfo is None:
             out = out.replace(tzinfo=dt.timezone.utc)
         return out
 
-    def df(self, *args, **kwargs):
-        """pandas sink (`lakota/series.py:340-358`).
-
-        When the backend exposes a pyarrow filesystem and every pruned
-        segment is clean (never clipped by an overlay) and the
-        collection is not KV, the frame is read DRIVER-SIDE with
-        pyarrow — parallel file reads, zero Spark jobs, and the global
-        sort comes free (clean segments are pairwise disjoint and
-        internally sorted, so interval-ordered concatenation IS the
-        sorted frame). Everything else falls back to
-        ``frame(...).toPandas()``; both paths return identical frames
-        (covered by the differential tests that call ``df()``).
-
-        The fallback catches ONLY environment-shaped failures (IO /
-        Arrow / OS errors — e.g. a backend that advertised
-        arrow_readable but can't serve a path) and counts them in
-        ``Series.df_fallbacks`` so a silent demotion to the ~100×
-        slower Spark path is observable. Programming errors in
-        ``_df_local`` propagate — tests must see them, not a slow
-        green run."""
-        try:
-            out = self._df_local(*args, **kwargs)
-        except (OSError, pa_lib.ArrowInvalid, pa_lib.ArrowException) as exc:
-            Series.df_fallbacks.append(
-                f"{type(exc).__name__}: {exc}"
-            )
-            del Series.df_fallbacks[:-20]  # bounded ring
-            out = None
-        if out is not None:
-            return out
-        return self.frame(*args, **kwargs).toPandas()
-
-    def _df_local(
+    def df(
         self,
         start=None,
         stop=None,
@@ -802,226 +756,42 @@ class Series:
         sort: bool = True,
         mask: str | None = None,
     ):
-        fs = self.collection.fs
-        if not getattr(fs, "arrow_readable", False):
-            return None
-        mask_plan = mask_fields = None
-        if mask is not None:
-            # naive-ns literals: the local cast target is timestamp[ns]
-            mask_plan, mask_fields = self._compile_mask(
-                mask, tz_aware=False
-            )
-            if mask_plan is None:
-                return None  # non-pushable mask -> the Spark path
-        segs = self.segments(start, stop, before, closed)
-        live = [s for s in segs if s.path]
-        if self.schema.kv:
-            from lakota_spark import zonemap
+        """pandas sink (`lakota/series.py:340-358`), read in this process
+        with no Spark job: resolve, prune, then one `segscan.table` over
+        the pruned segments in interval order, which is the sorted frame
+        (``sort`` is accepted for `frame()` parity). Overlapping KV
+        resolves last-writer-wins first and applies the mask after it.
+        Timestamps come back as naive ``datetime64[ns]`` UTC wall times,
+        the dtype ``frame(...).toPandas()`` yields.
 
-            if not zonemap.pairwise_disjoint(live):
-                # overlapping KV needs last-writer-wins dedup — only
-                # the Spark path implements it. Disjoint KV (round 13)
-                # reads driver-local like any other series, with the
-                # commit-ordered snapshot list re-sorted to interval
-                # order (concat order below IS the sort order).
-                return None
-            live = sorted(live, key=lambda s: tuple(s.start))
-        if mask_plan is not None:
-            from lakota_spark import zonemap
+        A mask outside the pushable subset is applied by Spark:
+        ``frame(...).toPandas()``."""
+        import pyarrow as pa
 
-            live = zonemap.prune(live, mask_plan)
-        if any(s.meta.get("clip") for s in live):
-            return None  # narrowed bounds need the per-segment filter
-        import pandas as pd
-
+        mask_plan, _ = self._compile_mask(mask)
+        if mask is not None and mask_plan is None:
+            return self.frame(
+                start, stop, before, closed, select, limit, offset, sort,
+                mask,
+            ).toPandas()
+        segs, kv_dedup, rng = self._pruned(
+            start, stop, before, closed, mask_plan
+        )
         cols = select or list(self.schema.columns)
-        if not live:
-            import pyarrow as pa
-
-            pa_ns = {
-                "timestamp": pa.timestamp("ns"),
-                "date": pa.date32(),
-                "int": pa.int64(),
-                "float": pa.float64(),
-                "str": pa.string(),
-            }
-            return pa.schema(
-                [(c, pa_ns[self.schema.columns[c]]) for c in cols]
-            ).empty_table().to_pandas()
-        import pyarrow.parquet as pq
-        from concurrent.futures import ThreadPoolExecutor
-
-        idx = self.schema.idx
-        read_cols = list(
-            dict.fromkeys([*cols, *idx, *(mask_fields or ())])
-        )
-        start_b = self.schema.coerce_bound(start)
-        stop_b = self.schema.coerce_bound(stop)
-        start_closed, stop_closed = CLOSED[closed]
-        # coarse row-group pruning on the leading index column; the exact
-        # prefix bound applies below (`_pandas_bound_mask`)
-        filters = []
-        if start_b is not None:
-            op = ">=" if (start_closed or len(start_b) > 1) else ">"
-            filters.append((idx[0], op, start_b[0]))
-        if stop_b is not None:
-            op = "<=" if (stop_closed or len(stop_b) > 1) else "<"
-            filters.append((idx[0], op, stop_b[0]))
-        seg_prefix = self.collection.seg_prefix
-        files = []
-        for s in live:  # interval order == global sort order
-            d = f"{seg_prefix}/{s.path}"
-            files.extend(
-                f"{d}/{nm}" for nm in fs.ls(d) if nm.endswith(".parquet")
-            )
-
-        def read_one(rel: str):
-            return pq.read_table(
-                fs.full(rel),
-                filesystem=fs.fs,
-                columns=read_cols,
-                filters=filters or None,
-            )
-
-        if len(files) == 1:
-            tables = [read_one(files[0])]
+        if kv_dedup:
+            tbl = segscan.table(self, segs, rng, seq=True)
+            if mask_plan is not None:
+                tbl = tbl.filter(_arrow_mask_expr(mask_plan))
         else:
-            with ThreadPoolExecutor(max_workers=min(16, len(files))) as ex:
-                tables = list(ex.map(read_one, files))
-        # Stay in arrow until ONE to_pandas at the end: the naive-pandas
-        # shape (per-file to_pandas + pd.concat + dtype normalize +
-        # column select) costs four full-frame copies — measured 4 s on
-        # 5.26M rows where the arrow-level concat/cast/select runs in
-        # 0.09 s. The cast also unifies mixed physical timestamps
-        # (Spark INT96 → ns-naive, driver-written us/UTC → ns-naive
-        # wall values — the session timezone is UTC) to the exact dtype
-        # Spark's toPandas yields.
-        import pyarrow as pa
-
-        pa_ns = {
-            "timestamp": pa.timestamp("ns"),
-            "date": pa.date32(),
-            "int": pa.int64(),
-            "float": pa.float64(),
-            "str": pa.string(),
-        }
-        target = pa.schema(
-            [(c, pa_ns[self.schema.columns[c]]) for c in read_cols]
-        )
-        tbl = (
-            pa.concat_tables(tables, promote_options="permissive")
-            .select(read_cols)
-            .cast(target)
-        )
-        if mask_plan is not None:
-            # arrow-side exact mask before the single to_pandas
-            tbl = tbl.filter(_arrow_mask_expr(mask_plan))
-        pdf = tbl.to_pandas(self_destruct=True)
-        if start_b is not None:
-            pdf = pdf[
-                self._pandas_bound_mask(pdf, start_b, start_closed, True)
-            ]
-        if stop_b is not None:
-            pdf = pdf[
-                self._pandas_bound_mask(pdf, stop_b, stop_closed, False)
-            ]
-        if start_b is not None or stop_b is not None:
-            pdf = pdf.reset_index(drop=True)
-        if offset:
-            pdf = pdf.iloc[offset:].reset_index(drop=True)
-        if limit is not None:
-            pdf = pdf.iloc[:limit]
-        if list(pdf.columns) != cols:
-            pdf = pdf[cols]
-        return pdf
-
-    def _read_run_local(self, segs: list[Segment]):
-        """Driver-local arrow table of a CLEAN segment run — the defrag
-        fast path: a fragmented run is thousands of tiny files whose
-        total bytes are driver-sized, so rewriting it through a Spark
-        job pays pure scheduler/discovery overhead (measured 37.6 s for
-        a 10k-segment defrag that the pyarrow path does in ~2 s). Same
-        concat/cast pipeline as `_df_local`, limited to the given
-        segments, in run order (clean segments are disjoint and sorted,
-        so run-ordered concat IS the sorted frame). Returns None when
-        the run disqualifies (non-arrow FS, OVERLAPPING-KV, clipped
-        pieces — those need the resolving read / per-segment bounds
-        re-filter only the Spark path implements). A pairwise-disjoint
-        KV run qualifies (round 13): last-writer-wins is a per-row
-        no-op, and KV snapshots keep the label block start-sorted
-        (`Snapshot.overlay`'s bisect insert), so run-ordered concat is
-        the sorted frame here too — fragmented KV registries defrag at
-        pyarrow speed instead of one Spark job per run."""
-        fs = self.collection.fs
-        if not getattr(fs, "arrow_readable", False):
-            return None
-        if self.schema.kv:
-            from lakota_spark import zonemap
-
-            if not zonemap.pairwise_disjoint(
-                [s for s in segs if s.path]
-            ):
-                return None
-        if any(s.meta.get("clip") or not s.path for s in segs):
-            return None
-        from concurrent.futures import ThreadPoolExecutor
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        cols = list(self.schema.columns)
-        seg_prefix = self.collection.seg_prefix
-        files = []
-        for s in segs:
-            d = f"{seg_prefix}/{s.path}"
-            files.extend(
-                f"{d}/{nm}" for nm in fs.ls(d) if nm.endswith(".parquet")
+            tbl = segscan.table(
+                self, segs, segscan.conj(rng, mask_plan), cols=cols
             )
-        if not files:
-            return None
-        if len(files) > 64:
-            # one C++-parallel dataset scan: per-file pq.read_table calls
-            # are GIL-bound python overhead that dominates thousands of
-            # tiny files (profiled 2.8 s of lock churn at 4k files).
-            # Scanner.to_table materializes in fragment (= given-path)
-            # order, preserving the run's sort order.
-            import pyarrow.dataset as pads
-
-            tables = [
-                pads.dataset(
-                    [fs.full(f) for f in files],
-                    format="parquet",
-                    filesystem=fs.fs,
-                ).to_table(columns=cols)
-            ]
-        else:
-
-            def read_one(rel: str):
-                return pq.read_table(
-                    fs.full(rel), filesystem=fs.fs, columns=cols
-                )
-
-            with ThreadPoolExecutor(max_workers=min(16, len(files))) as ex:
-                tables = list(ex.map(read_one, files))
-        return segwriter.conform(
-            pa.concat_tables(tables, promote_options="permissive"),
-            self.schema,
-        )
-
-    def _pandas_bound_mask(self, pdf, bound, closed: bool, is_start: bool):
-        """Pandas twin of `segscan.bound_plan`: lexicographic prefix
-        compare over the leading ``len(bound)`` index columns."""
-        import numpy as np
-
-        idx = self.schema.idx
-        strict = np.zeros(len(pdf), dtype=bool)
-        eq_all = np.ones(len(pdf), dtype=bool)
-        for c, v in zip(idx[: len(bound)], bound):
-            s = pdf[c]
-            cmp = (s > v) if is_start else (s < v)
-            strict |= eq_all & cmp.to_numpy()
-            eq_all &= (s == v).to_numpy()
-        return strict | eq_all if closed else strict
+        tbl = tbl.slice(offset or 0, limit).select(cols)
+        return tbl.cast(pa.schema([
+            (f.name, pa.timestamp("ns"))
+            if pa.types.is_timestamp(f.type) else f
+            for f in tbl.schema
+        ])).to_pandas()
 
     def _read(
         self, segs: list[Segment], plan=None, kv_dedup=False, cols=None
@@ -1040,19 +810,8 @@ class Series:
         sessions alike: JVM rows in, no Python RDD to convert, and no
         Exchange (about one writer page of rows per task, at most
         `_task_ceiling` tasks)."""
-        from pyspark.sql.types import LongType, StructField, StructType
-
         schema = self.schema.struct_type()
-        fields = schema.fields
-        if kv_dedup:
-            fields = [*fields, StructField(segscan.SEQ, LongType())]
-        elif self.schema.kv:
-            # the KV snapshot keeps commit order: interval order is the
-            # sort order of a disjoint set
-            segs = sorted(segs, key=lambda s: tuple(s.start))
-        if cols is not None:
-            fields = [f for c in cols for f in fields if f.name == c]
-        struct = StructType(fields)
+        struct = segscan.read_struct(schema, kv_dedup, cols)
         spark = self.spark
         chunks = segscan.partitions(
             self, segs, plan, _task_ceiling(spark), kv_dedup

@@ -109,13 +109,13 @@ def test_squash_keep_history(repo):
     assert rows(s.frame()) == [(0, 0.0), (1, 1.0), (2, 2.0)]
 
 
-def test_defrag(repo):
+def test_defrag(repo, count_jobs):
     coll = _mk(repo)
     s = coll.series("s")
     for i in range(6):
         s.write({"ts": [i], "value": [float(i)]})
     n_before = len(coll.snapshot().for_label("s"))
-    coll.defrag()
+    assert count_jobs(coll.defrag) == 0
     n_after = len(coll.snapshot().for_label("s"))
     assert n_after < n_before
     assert rows(s.frame()) == [(i, float(i)) for i in range(6)]
@@ -935,11 +935,10 @@ def test_defrag_kv_skips_runs_shadowed_from_outside(repo):
     assert len(coll.snapshot().for_label("x")) == n_before
 
 
-def test_defrag_kv_disjoint_registry_compacts_locally(repo):
+def test_defrag_kv_disjoint_registry_compacts_locally(repo, count_jobs):
     """Round 13: a fragmented DISJOINT KV registry (no shadowing
-    anywhere) compacts through the driver-local pyarrow path — one
-    merged segment, identical reads, and the merged segment still
-    serves the dedup-free fast read."""
+    anywhere) compacts into one merged segment with identical reads,
+    and the merged segment still reads without a Spark job."""
     coll = repo.create_collection(
         Schema.kv_schema(k="int*", v="int"), "kvreggy"
     )
@@ -955,14 +954,39 @@ def test_defrag_kv_disjoint_registry_compacts_locally(repo):
     segs = coll.snapshot().for_label("x")
     assert len(segs) == 1
     assert segs[0].meta.get("defrag")
-    # local fast path computed exact zone maps from the frame
+    # the encode computed exact zone maps from the merged rows
     assert segs[0].meta.get("zmap", {}).get("v") == [0, 11, False]
     after = sorted((r.k, r.v) for r in s.frame().collect())
     assert after == before
-    # still disjoint -> still the dedup-free local path (only where the
-    # backend is pyarrow-readable; memory/http decline by design)
-    if getattr(coll.fs, "arrow_readable", False):
-        assert s._df_local() is not None
+    out = []
+    assert count_jobs(lambda: out.append(s.df())) == 0
+    assert list(zip(out[-1]["k"], out[-1]["v"])) == before
+
+
+def test_defrag_kv_overlapping_run_starts_no_job(repo, count_jobs):
+    """An OVERLAPPING KV run (three upserts over shared keys) is read,
+    resolved last-writer-wins and re-encoded in this process: defrag
+    starts no Spark job, every key keeps its newest value, and the
+    merged segment's zone map is exact."""
+    coll = repo.create_collection(
+        Schema.kv_schema(k="int*", v="int"), "kvlap"
+    )
+    s = coll.series("x")
+    model = {}
+    for lo, hi, v in ((0, 10, 0), (5, 15, 1), (3, 7, 2)):
+        s.write({"k": list(range(lo, hi)), "v": [v] * (hi - lo)})
+        model.update((k, v) for k in range(lo, hi))
+    want = sorted(model.items())
+    before = s.df()
+    assert list(zip(before["k"], before["v"])) == want
+    assert count_jobs(
+        lambda: coll.defrag(page_len=100, max_chunk=1)
+    ) == 0
+    (seg,) = coll.snapshot().for_label("x")
+    assert seg.meta.get("defrag") and seg.length == len(want)
+    assert seg.meta.get("zmap", {}).get("v") == [0, 2, False]
+    assert s.df().equals(before)
+    assert sorted((r.k, r.v) for r in s.frame().collect()) == want
 
 
 def test_kv_maintenance_differential(repo):

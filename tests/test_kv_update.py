@@ -68,7 +68,7 @@ def test_update_zero_fill(repo, t, zero, a1, a2):
     assert out == [(1, a1, a2), (2, a2, a2), (3, a2, zero)]
 
 
-def test_kv_compact_restores_disjoint_fast_paths(spark, repo):
+def test_kv_compact_restores_disjoint_fast_paths(spark, repo, count_jobs):
     """Round 13: compact() rewrites the resolved rows as one full-span
     segment — same reads, disjoint layout, so the dedup-free fast
     paths AND the data source serve the table again; time travel
@@ -84,7 +84,7 @@ def test_kv_compact_restores_disjoint_fast_paths(spark, repo):
     s.write({"k": [2, 4], "v": [21, 40]})      # overlapping upsert
     want = [(1, 10), (2, 21), (3, 30), (4, 40)]
     assert sorted((r.k, r.v) for r in s.frame().collect()) == want
-    # overlapping: the data source refuses, the local path declines
+    # overlapping: the data source refuses
     import pytest as _pytest
 
     with _pytest.raises(Exception, match="OVERLAPPING"):
@@ -104,8 +104,9 @@ def test_kv_compact_restores_disjoint_fast_paths(spark, repo):
     segs = coll.snapshot().for_label("x")
     assert len(segs) == 1
     assert sorted((r.k, r.v) for r in s.frame().collect()) == want
-    if getattr(coll.fs, "arrow_readable", False):
-        assert s._df_local() is not None
+    out = []
+    assert count_jobs(lambda: out.append(s.df())) == 0
+    assert list(zip(out[-1]["k"], out[-1]["v"])) == want
     ds = (
         spark.read.format("lakota")
         .option("path", repo.root)

@@ -1,15 +1,17 @@
 """One read path, checked over a layout grid.
 
-Every Spark-side read of segments goes through `segscan` (the planner and
-scanner shared by `Series.frame()`, `tail()`, defrag and the ``lakota``
+Every read of segments goes through `segscan` (the planner and scanner
+shared by `Series.frame()`, `tail()`, `df()`, defrag and the ``lakota``
 data source). This grid writes each layout the engine can produce —
 clean appends, overlay-clipped segments, one file under two pieces,
 disjoint and overlapping KV, time travel, a two-column index read with
-prefix bounds, a timestamp index — and checks, for bounds and masks
-inside and outside the pushable subset (``or``, NaN rows):
+prefix bounds, a timestamp index — on the file, HTTP and memory
+backends, and checks, for bounds (one of them past the last key) and
+masks inside and outside the pushable subset (``or``, NaN rows):
 
 * ``frame()`` equals a row model of the writes (in sort order), and
-  ``df()`` equals ``frame()``;
+  ``df()`` equals ``frame()`` in rows and dtypes, starting no Spark job
+  unless the mask is outside the pushable subset;
 * ``frame(sort=True)`` plans no Exchange, Sort or Join except for
   overlapping KV (the last-writer-wins window);
 * the data source equals ``frame(sort=False)`` wherever it serves.
@@ -29,6 +31,8 @@ from lakota_spark.datasource import register
 from lakota_spark.schema import Schema
 
 NAN = float("nan")
+#: a start bound past the last key of every layout
+PAST = 10**6
 
 
 def write_keeping_nan(series, rows):
@@ -136,13 +140,8 @@ def _rng(lo, hi):
     return [{"ts": i, "value": float(i % 7)} for i in range(lo, hi)]
 
 
-@pytest.fixture(scope="module")
-def grid(spark):
-    from lakota_spark.repo import Repo
-
-    register(spark)
-    root = tempfile.mkdtemp(prefix="lakota-grid-")
-    repo = Repo(root, spark)
+def build_grid(repo):
+    """Every layout of the grid, written into ``repo``: name -> Layout."""
     plain = repo.create_collection(Schema(ts="int*", value="float"), "p")
     out = {}
 
@@ -215,7 +214,20 @@ def grid(spark):
     lay.write(_rng(0, 40))
     lay.write([{"ts": i, "value": 9.0} for i in range(10, 30, 3)])
     lay.write([{"ts": i, "value": 8.0} for i in range(25, 50, 4)])
-    yield out
+    return out
+
+
+@pytest.fixture(scope="module")
+def grid(spark):
+    from lakota_spark.repo import Repo
+
+    register(spark)
+    return build_grid(Repo(tempfile.mkdtemp(prefix="lakota-grid-"), spark))
+
+
+@pytest.fixture(scope="module")
+def store_grid(module_store_repo):
+    return build_grid(module_store_repo)
 
 
 #: (frame kwargs, model kwargs): bounds, closedness, select, and masks
@@ -234,6 +246,7 @@ READS = {
     "nan_ne": ({"mask": "(!= self.value 2)"}, {"sql": "value != 2"}),
     "arith": ({"mask": "(< (* self.value 2) 5)", "start": 3},
               {"sql": "value * 2 < 5", "start": 3}),
+    "empty": ({"start": PAST}, {"start": PAST}),
 }
 
 LAYOUTS = [
@@ -249,16 +262,20 @@ def _adapt(layout, kw):
     for b in ("start", "stop"):
         if b not in kw:
             continue
-        if layout == "two_col":
+        if kw[b] == PAST:
+            kw[b] = (
+                (PAST,) if layout == "two_col"
+                else dt.datetime(2100, 1, 1) if layout == "ts_clipped"
+                else PAST
+            )
+        elif layout == "two_col":
             kw[b] = (kw[b] % 12,) if b == "start" else (7, "b")
         elif layout == "ts_clipped":
             kw[b] = dt.datetime(2024, 1, 1) + dt.timedelta(hours=kw[b] // 2)
     return kw
 
 
-@pytest.mark.parametrize("read", list(READS))
-@pytest.mark.parametrize("layout", LAYOUTS)
-def test_frame_matches_model_and_df(spark, grid, layout, read):
+def check_frame_and_df(spark, grid, layout, read, count_jobs):
     lay = grid[layout]
     fkw, mkw = (_adapt(layout, kw) for kw in READS[read])
     if lay.before is not None:
@@ -267,12 +284,33 @@ def test_frame_matches_model_and_df(spark, grid, layout, read):
     want = lay.expected(spark, **mkw)
     assert _rows(df) == want
     plan = plans.explain_str(df, "simple")
-    if layout == "kv_overlap":
+    if layout == "kv_overlap" and read != "empty":
         assert "Window" in plan, plan
     else:
         for node in ("Exchange", "Sort", "Join"):
             assert node not in plan, plan
-    assert _pdf_rows(lay.series.df(**fkw)) == want
+    got = []
+    jobs = count_jobs(lambda: got.append(lay.series.df(**fkw)))
+    assert _pdf_rows(got[0]) == want
+    # only a mask outside the pushable subset reads through Spark
+    if read != "arith":
+        assert jobs == 0
+    assert list(got[0].dtypes.items()) == list(df.toPandas().dtypes.items())
+
+
+@pytest.mark.parametrize("read", list(READS))
+@pytest.mark.parametrize("layout", LAYOUTS)
+def test_frame_matches_model_and_df(spark, grid, layout, read, count_jobs):
+    check_frame_and_df(spark, grid, layout, read, count_jobs)
+
+
+@pytest.mark.parametrize("read", list(READS))
+@pytest.mark.parametrize("layout", LAYOUTS)
+def test_frame_matches_model_and_df_on_store(
+    spark, store_grid, layout, read, count_jobs
+):
+    """The same grid on the HTTP and memory backends."""
+    check_frame_and_df(spark, store_grid, layout, read, count_jobs)
 
 
 @pytest.mark.parametrize("read", ["all", "range", "lt", "or", "nan_ge",

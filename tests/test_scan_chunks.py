@@ -143,13 +143,11 @@ def test_frame_plan_is_range_then_map_in_arrow(seg21):
         assert node not in plan, plan
 
 
-def test_masked_frame_count_is_one_job(spark, seg21):
-    from tests.test_sorted_write import count_jobs
-
+def test_masked_frame_count_is_one_job(seg21, count_jobs):
     _, s = seg21
     df = s.frame(start=250, stop=10_249, mask="(< self.value 1000)")
     assert df.count() == 750
-    assert count_jobs(spark.sparkContext, df.count) == 1
+    assert count_jobs(df.count) == 1
 
 
 def test_connect_fallback_keeps_sort_order(spark, repo, monkeypatch):

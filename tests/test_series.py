@@ -735,10 +735,10 @@ def test_df_local_parity_multi_index_and_date(repo, spark):
         assert a.equals(b), (kw, a, b)
 
 
-def test_df_local_fast_path_engages(spark, tmp_path):
-    # guard against the fast path silently regressing to the Spark
-    # fallback: on a clean file-backed series _df_local must serve the
-    # frame itself (non-None), and must decline once a clip exists
+def test_df_local_fast_path_engages(spark, tmp_path, count_jobs):
+    # df() reads in this process on every layout: a clean series and
+    # one whose segments an overlay clipped both come back with zero
+    # Spark jobs
     from lakota_spark.repo import Repo
 
     file_repo = Repo(str(tmp_path / "fp"), spark)
@@ -747,37 +747,33 @@ def test_df_local_fast_path_engages(spark, tmp_path):
     )
     s = coll.series("s")
     s.write({"ts": [1, 2, 3], "value": [1.0, 2.0, 3.0]})
-    out = s._df_local()
-    assert out is not None and len(out) == 3
+    out = []
+    assert count_jobs(lambda: out.append(s.df())) == 0
+    assert list(out[-1]["value"]) == [1.0, 2.0, 3.0]
     s.write({"ts": [2], "value": [9.0]})  # overlay -> clipped pieces
-    assert s._df_local() is None
-    assert list(s.df()["value"]) == [1.0, 9.0, 3.0]  # fallback correct
+    assert any(seg.meta.get("clip") for seg in s.segments())
+    assert count_jobs(lambda: out.append(s.df())) == 0
+    assert list(out[-1]["value"]) == [1.0, 9.0, 3.0]
 
 
-def test_df_fallback_narrow_and_counted(spark, tmp_path, monkeypatch):
-    # IO/Arrow failures in the driver-local read fall back to the Spark
-    # path AND are counted (observable demotion); a programming error
-    # must PROPAGATE — a bug in _df_local may not silently demote every
-    # read to the ~100x slower path
+def test_df_errors_propagate(spark, tmp_path, monkeypatch):
+    # df() has no fallback to demote a failing local read to: an error
+    # in the read (here a programming error in the scan) propagates, and
+    # a mask outside the pushable subset is still served (by Spark)
+    from lakota_spark import segscan
     from lakota_spark.repo import Repo
-    from lakota_spark.series import Series
 
     file_repo = Repo(str(tmp_path / "fb"), spark)
     coll = file_repo.create_collection(Schema(ts="int*", value="float"), "fb")
     s = coll.series("s")
     s.write({"ts": [1, 2], "value": [1.0, 2.0]})
+    out = s.df(mask="(< (+ self.value 1) 3)")
+    assert list(out["value"]) == [1.0]
 
-    monkeypatch.setattr(
-        Series, "_df_local", lambda self, *a, **k: (_ for _ in ()).throw(OSError("disk gone"))
-    )
-    del Series.df_fallbacks[:]
-    out = s.df()
-    assert list(out["value"]) == [1.0, 2.0]  # fallback served the frame
-    assert Series.df_fallbacks and "disk gone" in Series.df_fallbacks[-1]
+    def bug(*a, **k):
+        raise TypeError("bug")
 
-    monkeypatch.setattr(
-        Series, "_df_local", lambda self, *a, **k: (_ for _ in ()).throw(TypeError("bug"))
-    )
+    monkeypatch.setattr(segscan, "scan", bug)
     import pytest as _pytest
 
     with _pytest.raises(TypeError):
@@ -994,14 +990,13 @@ def test_frame_mask_timestamp_literal_on_fast_path(repo):
     assert got == rows[24:]
 
 
-def test_df_local_mask(repo):
-    # df(mask=...) applies the pushable mask ARROW-SIDE in the
-    # driver-local reader (zero Spark jobs); non-pushable forms route
-    # to the Spark path (frame(mask=) -> classic scan) — never a crash
+def test_df_local_mask(repo, count_jobs):
+    # df(mask=...) applies the pushable mask inside the local scan (zero
+    # Spark jobs); non-pushable forms route to the Spark path
+    # (frame(mask=).toPandas()) — never a crash
     import datetime as dt
 
     from lakota_spark.schema import Schema
-    from lakota_spark.series import Series
 
     coll = repo.create_collection(
         Schema(ts="timestamp*", value="float", tag="str"), "dfm"
@@ -1013,13 +1008,17 @@ def test_df_local_mask(repo):
         "value": [float(i % 7) for i in range(48)],
         "tag": ["a" if i % 2 else "b" for i in range(48)],
     })
-    del Series.df_fallbacks[:]
-    pdf = s.df(mask="(and (< self.value 5) (= self.tag 'a'))")
+    out = []
+    assert count_jobs(lambda: out.append(
+        s.df(mask="(and (< self.value 5) (= self.tag 'a'))")
+    )) == 0
     want = [float(i % 7) for i in range(48) if i % 2 and i % 7 < 5]
-    assert list(pdf["value"]) == want
-    # timestamp literal coerces to the local reader's naive-ns dtype
-    assert len(s.df(mask="(>= self.ts '2024-03-02')")) == 24
-    assert Series.df_fallbacks == []  # pushable masks stayed local
+    assert list(out[-1]["value"]) == want
+    # a timestamp literal compares with the scan's UTC timestamps
+    assert count_jobs(lambda: out.append(
+        s.df(mask="(>= self.ts '2024-03-02')")
+    )) == 0
+    assert len(out[-1]) == 24
     # arithmetic (non-pushable) falls through to the Spark path
     out = s.df(mask="(< (+ self.value 1) 6)")
     assert len(out) == len([i for i in range(48) if (i % 7) + 1 < 6])

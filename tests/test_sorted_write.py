@@ -15,7 +15,6 @@ Neither may leave a ``_tmp-`` staging dir under ``segments/``.
 """
 
 import math
-import uuid
 
 import pytest
 
@@ -77,17 +76,6 @@ def staging_dirs(coll):
     return [n for n in coll.fs.ls(coll.seg_prefix) if n.startswith("_tmp-")]
 
 
-def count_jobs(sc, fn):
-    """Spark jobs started by ``fn()`` on this thread."""
-    group = f"lakota-count-jobs-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 @pytest.mark.parametrize("case", sorted(CASES))
 def test_written_rows_equal_sort_and_validate_raises(repo, case):
     schema, parts, err = CASES[case]
@@ -111,29 +99,30 @@ def test_written_rows_equal_sort_and_validate_raises(repo, case):
     assert staging_dirs(coll) == []
 
 
-def test_presorted_write_runs_one_job(repo):
+def test_presorted_write_runs_one_job(repo, count_jobs):
     # the presorted path is one encode job, with or without
     # validate_sorted; a descent costs the sort path after it
     spark = repo.spark
-    sc = spark.sparkContext
     schema, parts, _ = CASES["sorted"]
     df = frame_of(spark, schema, parts)
     coll = repo.create_collection(schema, "j")
-    assert count_jobs(sc, lambda: coll.series("a").write(df)) == 1
+    assert count_jobs(lambda: coll.series("a").write(df)) == 1
     assert (
-        count_jobs(sc, lambda: coll.series("b").write(df, validate_sorted=True))
+        count_jobs(lambda: coll.series("b").write(df, validate_sorted=True))
         == 1
     )
     # one page per input partition: the input layout was written as-is
     (seg,) = coll.series("a").segments()
     assert len(coll.fs.ls(f"{coll.seg_prefix}/{seg.path}")) == len(parts)
     _, bad, _ = CASES["descent"]
-    assert count_jobs(sc, lambda: coll.series("c").write(
+    assert count_jobs(lambda: coll.series("c").write(
         frame_of(spark, schema, bad))) > 1
     assert staging_dirs(coll) == []
 
 
-def test_many_partition_validate_checks_then_sorts(repo, monkeypatch):
+def test_many_partition_validate_checks_then_sorts(
+    repo, monkeypatch, count_jobs
+):
     # past the partition gate (more non-empty partitions came back from
     # the encode job than 2 x defaultParallelism) the write discards the
     # staged pages and sorts (the range exchange compacts confetti);
@@ -149,7 +138,7 @@ def test_many_partition_validate_checks_then_sorts(repo, monkeypatch):
     assert [(p.n, bool(p.names)) for p in got] == [
         (25, True), (25, True), (25, False), (25, False)]
     segwriter.discard(coll.fs, tmp_rel)
-    assert count_jobs(sc, lambda: coll.series("ok").write(
+    assert count_jobs(lambda: coll.series("ok").write(
         sorted_df, validate_sorted=True)) > 1
     assert plain(coll.series("ok").frame().collect()) == plain(
         sorted_df.sort("k").collect()
@@ -161,7 +150,9 @@ def test_many_partition_validate_checks_then_sorts(repo, monkeypatch):
     assert staging_dirs(coll) == []
 
 
-def test_range_exchanged_input_counts_no_partitions_up_front(repo):
+def test_range_exchanged_input_counts_no_partitions_up_front(
+    repo, count_jobs
+):
     # the partition gate reads the encode job's own output: a presorted
     # input with an uncheckpointed range exchange runs only the jobs of
     # that one encode (range sampling, the shuffle stage, the encode
@@ -170,7 +161,6 @@ def test_range_exchanged_input_counts_no_partitions_up_front(repo):
     from pyspark.sql import functions as F
 
     spark = repo.spark
-    sc = spark.sparkContext
     src = (
         spark.range(100_000, numPartitions=4)
         .select(F.col("id").alias("k"), F.col("id").cast("double").alias("v"))
@@ -178,9 +168,9 @@ def test_range_exchanged_input_counts_no_partitions_up_front(repo):
         .sortWithinPartitions("k")
     )
     coll = repo.create_collection(ONE, "r")
-    assert count_jobs(sc, lambda: coll.series("a").write(src)) == 3
+    assert count_jobs(lambda: coll.series("a").write(src)) == 3
     assert count_jobs(
-        sc, lambda: coll.series("b").write(src, checkpoint=False)
+        lambda: coll.series("b").write(src, checkpoint=False)
     ) == 3
     for label in ("a", "b"):
         (seg,) = coll.series(label).segments()

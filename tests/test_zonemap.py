@@ -434,12 +434,12 @@ def test_zone_map_kv_shadowing_differential(spark, repo):
             assert sorted(zip(pdf["k"], pdf["v"])) == want, (case, mask)
 
 
-def test_kv_disjoint_reads_skip_dedup(spark, repo):
+def test_kv_disjoint_reads_skip_dedup(spark, repo, count_jobs):
     """Round 13: a pairwise-disjoint KV segment set needs no
     last-writer-wins window — frame(sort=True) takes the exchange-free
     ordered scan, frame(sort=False) the join-free raw scan, and df()
-    the driver-local pyarrow path; one overlapping write flips all
-    three back to the dedup plan with identical results throughout."""
+    the local scan without a dedup; one overlapping write flips all
+    three back to last-writer-wins with identical results throughout."""
     from lakota_spark import plans
 
     clc = repo.create_collection(
@@ -464,8 +464,9 @@ def test_kv_disjoint_reads_skip_dedup(spark, repo):
     assert "Exchange" not in plan and "Window" not in plan, plan
     assert sorted((r.k, r.v) for r in unsorted_df.collect()) == want
 
-    local = srs._df_local()
-    assert local is not None, "disjoint KV must take the local path"
+    out = []
+    assert count_jobs(lambda: out.append(srs.df())) == 0
+    local = out[-1]
     assert list(zip(local["k"], local["v"])) == want
     # masked local read: zone maps prune, rows match the Spark path
     got = srs.df(mask="(>= self.v 2)")
@@ -473,14 +474,14 @@ def test_kv_disjoint_reads_skip_dedup(spark, repo):
 
     # one overlapping upsert -> dedup is back, results stay right
     srs.write({"k": [11, 12], "v": [9, 9]})
-    assert srs._df_local() is None
     plan = plans.explain_str(srs.frame(sort=False), "simple")
     assert "Window" in plan, plan
     want2 = sorted([(0, 0), (1, 0), (2, 0), (10, 1), (11, 9), (12, 9),
                     (20, 2), (21, 2), (22, 2)])
     assert sorted((r.k, r.v) for r in srs.frame().collect()) == want2
-    got = sorted(zip(*[srs.df()[c] for c in ("k", "v")]))
-    assert got == want2
+    # df() resolves last-writer-wins in the local scan too
+    assert count_jobs(lambda: out.append(srs.df())) == 0
+    assert list(zip(out[-1]["k"], out[-1]["v"])) == want2
 
 
 def test_kv_disjoint_tail_prunes_segments(spark, repo):
