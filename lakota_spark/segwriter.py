@@ -51,16 +51,20 @@ class Pages:
 
 def conform(table, schema):
     """Cast an arrow table to the schema's arrow types, in schema column
-    order, timestamps truncated to the second (the reference's M8[s]
-    write cast; idempotent on engine-cast input), as ONE chunk per
-    column: the parquet writer cuts pages at batch boundaries too, so
-    the same rows must arrive in the same layout on every path.
+    order, as ONE chunk per column: the parquet writer cuts pages at
+    batch boundaries too, so the same rows must arrive in the same
+    layout on every path. This is the one cast of arrow data: in-memory
+    writes, executor tasks, the data source and defrag all run it, and
+    it gives what ``Schema.cast`` gives (ANSI, session time zone UTC)
+    for the input forms `_cast` accepts. Idempotent on its own output.
 
-    A NaN in a non-index float column becomes null, as the dict/pandas
-    path's ``from_pandas`` conversion stores it (and as the reference's
-    numpy masks treat it: no comparison matches), so every write path
-    stores one value and one address. Index columns keep NaN: it has a
-    place in the sort order (`descents`, ``df.sort``), null another."""
+    Timestamps are floored to the second (the reference's M8[s] write
+    cast). A NaN in a non-index float column becomes null, as the
+    reference's numpy masks treat it (no comparison matches), so every
+    write path stores one value and one address. Index columns keep
+    NaN: it has a place in the sort order (`descents`, ``df.sort``),
+    null another. A null index value raises a ValueError naming the
+    column: the changelog cannot order a segment bound holding one."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -68,17 +72,133 @@ def conform(table, schema):
     idx = set(schema.idx)
     cols = []
     for field in target:
-        col = table.column(field.name).cast(field.type)
-        if pa.types.is_timestamp(field.type):
-            col = pc.floor_temporal(col, unit="second")
-        elif (
-            pa.types.is_floating(field.type)
-            and field.name not in idx
-            and pc.any(pc.is_nan(col)).as_py()
-        ):
+        if field.name not in table.column_names:
+            raise ValueError(f"missing column {field.name!r}")
+        col = _cast(table.column(field.name).combine_chunks(), field)
+        if field.name in idx:
+            if col.null_count:
+                raise ValueError(
+                    f"index column {field.name!r} holds "
+                    f"{col.null_count} null value(s)"
+                )
+        elif pa.types.is_floating(field.type) and pc.any(
+            pc.is_nan(col)
+        ).as_py():
             col = pc.if_else(pc.is_nan(col), None, col)
         cols.append(col)
-    return pa.Table.from_arrays(cols, schema=target).combine_chunks()
+    return pa.Table.from_arrays(cols, schema=target)
+
+
+#: per-second factor of each arrow timestamp unit
+_PER_S = {"s": 1, "ms": 10**3, "us": 10**6, "ns": 10**9}
+
+
+def _cast(col, field):
+    """One column (a `pyarrow.Array`) cast to ``field``'s type as
+    ``Schema.cast`` casts it. Text is trimmed and parsed (`_parse_iso`
+    for dates and times; malformed text raises). A float NaN bound for
+    a non-float column is a missing value, as pandas stores one. Ints
+    and floats in a timestamp column are epoch seconds; every timestamp
+    is floored to the second in its own unit, then narrowed to µs.
+    Floats truncate toward zero in an int column; ints, booleans and
+    dates become text in a str column. Any other pair raises a
+    TypeError naming the column (NOTES.md "One cast for in-memory
+    writes")."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    is_ = pa.types
+    t, want = col.type, field.type
+    if is_.is_dictionary(t):
+        col = col.dictionary_decode()
+        t = col.type
+    if is_.is_null(t) or (t == want and not is_.is_timestamp(want)):
+        return col.cast(want)
+    if is_.is_string(t) or is_.is_large_string(t):
+        if is_.is_string(want):
+            return col.cast(want)
+        col = pc.utf8_trim_whitespace(col)
+        if is_.is_timestamp(want) or is_.is_date(want):
+            return _parse_iso(col, want)
+        return col.cast(want)
+    if is_.is_floating(t) and not is_.is_floating(want):
+        col = pc.if_else(pc.is_nan(col), None, col)
+    if is_.is_timestamp(want):
+        if is_.is_date(t):
+            col, t = col.cast(pa.timestamp("s")), pa.timestamp("s")
+        if is_.is_timestamp(t):
+            return _floor_to(
+                col.cast(pa.int64()), _PER_S[t.unit], 10**6, want
+            )
+        if is_.is_integer(t):
+            return _floor_to(col.cast(pa.int64()), 1, 10**6, want)
+        if is_.is_floating(t):  # as Spark: (long)(seconds * 1e6), floored
+            micros = _to_int64(pc.multiply(col.cast(pa.float64()), 1e6), field)
+            return _floor_to(micros, 10**6, 10**6, want)
+    elif is_.is_date(want) and is_.is_timestamp(t):
+        per_day = _PER_S[t.unit] * 86_400
+        days = _floor_to(col.cast(pa.int64()), per_day, 1, pa.int64())
+        return days.cast(pa.int32()).cast(want)
+    elif is_.is_date(want) and is_.is_date(t):
+        return col.cast(want)
+    elif is_.is_integer(want):
+        if is_.is_floating(t):
+            return _to_int64(col, field)
+        if is_.is_integer(t) or is_.is_boolean(t):
+            return col.cast(want)
+    elif is_.is_floating(want):
+        if is_.is_integer(t) or is_.is_floating(t) or is_.is_boolean(t):
+            return col.cast(want, safe=False)  # past 2**53: nearest, as Spark
+    elif is_.is_string(want):
+        if is_.is_integer(t) or is_.is_boolean(t) or is_.is_date(t):
+            return col.cast(want)
+    raise TypeError(f"column {field.name!r}: cannot write {t} as {want}")
+
+
+def _to_int64(col, field):
+    """Floats truncated toward zero as int64; out of range raises."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    col = pc.trunc(col)
+    if pc.any(pc.invert(pc.less(pc.abs(col), 2.0**63))).as_py():
+        raise ValueError(f"column {field.name!r}: value out of int64 range")
+    return col.cast(pa.int64(), safe=False)
+
+
+def _floor_to(iv, per: int, scale: int, type_):
+    """``iv // per * scale`` (an int64 array, floor division) as
+    ``type_``, nulls kept."""
+    import pyarrow as pa
+
+    mask = None
+    if iv.null_count:
+        mask = iv.is_null().to_numpy(zero_copy_only=False)
+        iv = iv.fill_null(0)
+    v = iv.to_numpy()
+    return pa.array(v // per * scale, pa.int64(), mask=mask).cast(type_)
+
+
+def _parse_iso(col, want):
+    """ISO-8601 text as ``want`` (timestamp(us, UTC) or date32), as
+    Spark's string cast reads it: a year, or a year and month, alone
+    mean their first day; text without an offset is UTC and an offset
+    (``Z``, ``+02``, ``+0200``, ``+02:00``) is applied; dropping the
+    fraction floors to the second (it only ever adds to the wall time);
+    a date keeps the part before ``T`` or a space."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    sub = pc.replace_substring_regex
+    s = sub(sub(col, r"^(\d{4})$", r"\1-01"), r"^(\d{4}-\d\d)$", r"\1-01")
+    if pa.types.is_date(want):
+        return sub(s, r"[T ].*$", "").cast(want)
+    s = sub(s, r"^(\d{4}-\d\d-\d\d)$", r"\1T00:00")
+    s = sub(s, r"(:\d\d)\.\d*", r"\1")
+    zoned = pc.match_substring_regex(s, r"\d(Z|[+-]\d\d(:?\d\d)?)$")
+    s = pc.if_else(zoned, s, pc.binary_join_element_wise(s, "Z", ""))
+    secs = s.cast(pa.timestamp("s", tz="UTC")).cast(pa.int64())
+    return _floor_to(secs, 1, 10**6, want)
 
 
 def _nan_safe_stat_columns(table) -> list[str] | bool:

@@ -135,6 +135,43 @@ def _physical_plan_str(df) -> str:
         return buf.getvalue()
 
 
+def arrow_input(data):
+    """An in-memory write input as an arrow table, uncast: a pandas
+    frame (its index dropped), a dict of columns (NumPy arrays, lists
+    or pandas series) or a list of row dicts. `segwriter.conform` casts
+    it; nothing here decides a type."""
+    import numpy as np
+    import pandas as pd
+    import pyarrow as pa
+
+    if isinstance(data, pd.DataFrame):
+        # nthreads=1 below 100k rows: from_pandas otherwise spins up a
+        # fresh thread pool per call (~1.5 ms), which dominates the
+        # conversion itself on small append chunks
+        return pa.Table.from_pandas(
+            data,
+            preserve_index=False,
+            nthreads=1 if len(data) < 100_000 else None,
+        )
+    if isinstance(data, dict):
+        cols = {}
+        for name, v in data.items():
+            if (
+                isinstance(v, np.ndarray)
+                and v.dtype.kind == "M"
+                and np.datetime_data(v.dtype)[0] not in ("s", "ms", "us", "ns")
+            ):
+                v = v.astype("M8[s]")  # arrow has no minute/hour/... unit
+            cols[name] = v
+        return pa.table(cols)
+    if isinstance(data, list):
+        return pa.Table.from_pylist(data)
+    raise TypeError(
+        "write() takes a Spark or pandas DataFrame, a dict of columns or "
+        f"a list of row dicts, not {type(data).__name__}"
+    )
+
+
 class Series:
     def __init__(self, collection, label: str):
         self.collection = collection
@@ -150,202 +187,15 @@ class Series:
     def _idx_struct(self):
         return F.struct(*[F.col(c) for c in self.schema.idx])
 
-    def _coerce_df(self, data) -> DataFrame:
-        """Coerce to a DataFrame cast to the declared schema."""
-        if isinstance(data, DataFrame):
-            return self.schema.cast(data)
-        # dict-of-lists / list-of-rows / pandas convenience (tests, CLI)
-        import pandas as pd
-
-        if isinstance(data, dict):
-            data = pd.DataFrame(data)
-        if isinstance(data, pd.DataFrame) and len(data) == 0:
-            return self.spark.createDataFrame([], self.schema.struct_type())
-        # infer first, then cast: inputs may hold ISO strings for timestamps
-        # etc. — the declared schema coerces (`lakota/schema.py:130-133`)
-        return self.schema.cast(self.spark.createDataFrame(data))
-
-    def _local_cast(self, pdf):
-        """Vectorized driver-side equivalent of ``Schema.cast`` for
-        engine-ready pandas inputs: returns the coerced frame (schema
-        column order, exact physical dtypes, timestamps floored to the
-        second like the engine cast) or None when any column needs the
-        Spark cast (ISO strings, NA index values, unknown dtypes)."""
-        import datetime as dtmod
-
-        import pandas as pd
-
-        cols = {}
-        for name, alias in self.schema.columns.items():
-            if name not in pdf.columns:
-                return None
-            s = pdf[name]
-            kind = s.dtype.kind
-            if alias == "int":
-                if kind not in "iu":
-                    return None
-                cols[name] = s if s.dtype == "int64" else s.astype("int64")
-            elif alias == "float":
-                if kind not in "iuf":
-                    return None
-                cols[name] = (
-                    s if s.dtype == "float64" else s.astype("float64")
-                )
-            elif alias == "timestamp":
-                if kind != "M" or getattr(s.dtype, "tz", None) is not None:
-                    return None
-                if s.isna().any():
-                    return None  # NaT breaks the integer floor below
-                # integer floor-to-second, vectorized (dt.floor builds
-                # rounding machinery — 25x slower at millions of rows);
-                # numpy // floors toward -inf so pre-epoch values truncate
-                # the same way as Spark's date_trunc
-                unit = s.dtype.str.rsplit("[", 1)[-1].rstrip("]")
-                per_s = {"ns": 10**9, "us": 10**6, "ms": 10**3, "s": 1}[
-                    unit
-                ]
-                iv = s.to_numpy().view("i8")
-                cols[name] = pd.Series(
-                    (iv // per_s * 1_000_000).view("M8[us]"),
-                    index=s.index,
-                )
-            elif alias == "str":
-                if kind != "O" or s.isna().any() or not all(
-                    isinstance(v, str) for v in s
-                ):
-                    return None
-                cols[name] = s
-            elif alias == "date":
-                if kind != "O" or not all(type(v) is dtmod.date for v in s):
-                    return None
-                cols[name] = s
-            else:
-                return None
-        out = pd.DataFrame(cols)
-        # NA index values: let the engine path decide. int (cannot hold
-        # NA) and timestamp (NaT-rejected above) index columns are
-        # already proven non-null — only float/date/str still can be.
-        nullable_idx = [
-            c
-            for c in self.schema.idx
-            if self.schema.columns[c] not in ("int", "timestamp")
-        ]
-        if nullable_idx and out[nullable_idx].isna().any().any():
-            return None
-        return out
-
-    def _local_cast_arrow(self, data: dict):
-        """Zero-copy arrow twin of `_local_cast` for dict-of-numpy
-        inputs whose columns are already engine-physical (int64 /
-        float64 / datetime64) — the small-frequent-append shape of the
-        reference's fragmentation bench. Skips pandas entirely: the
-        block-manager construction alone costs ~8 ms per 500 k-row
-        write (two full copies of the data), ~20% of the write floor
-        the frag-500k rung measures. Returns the table cast + floored
-        in the schema's arrow types, or None to fall back to
-        the pandas path (str/date columns, non-numpy values, NaT,
-        NA index values). Content addresses are byte-identical to the
-        pandas path (pinned by tests/test_series.py)."""
-        import numpy as np
-        import pyarrow as pa
-
-        n = None
-        arrays: dict = {}
-        for name, alias in self.schema.columns.items():
-            a = data.get(name)
-            if not isinstance(a, np.ndarray) or a.ndim != 1:
-                return None
-            if n is None:
-                n = len(a)
-            elif len(a) != n:
-                return None
-            kind = a.dtype.kind
-            if alias == "int":
-                if kind not in "iu":
-                    return None
-                arrays[name] = (
-                    a if a.dtype == np.int64 else a.astype(np.int64)
-                )
-            elif alias == "float":
-                if kind not in "iuf":
-                    return None
-                arrays[name] = (
-                    a if a.dtype == np.float64 else a.astype(np.float64)
-                )
-            elif alias == "timestamp":
-                if kind != "M":
-                    return None
-                if not a.flags.c_contiguous:
-                    # .view raises on strided arrays (e.g. arr[::2])
-                    a = np.ascontiguousarray(a)
-                iv = a.view("i8")
-                if (iv == np.iinfo("i8").min).any():
-                    return None  # NaT: engine path decides
-                unit = a.dtype.str.rsplit("[", 1)[-1].rstrip("]")
-                per_s = {
-                    "ns": 10**9, "us": 10**6, "ms": 10**3, "s": 1
-                }.get(unit)
-                if per_s is None:
-                    # coarse units (m/h/D/W/M/Y): the pandas path
-                    # coerces them through pd.DataFrame — fall back
-                    return None
-                # same integer floor-to-second as _local_cast
-                arrays[name] = (iv // per_s * 1_000_000).view("M8[us]")
-            else:  # str/date: the pandas path owns the validation
-                return None
-        if not n:
-            return None
-        idx = self.schema.idx
-        # NA guard for float INDEX columns (int/timestamp proven above)
-        for c in idx:
-            if self.schema.columns[c] == "float" and np.isnan(
-                arrays[c]
-            ).any():
-                return None
-        pa_schema = self.schema.pyarrow_schema()
-        cols = []
-        for name, alias in self.schema.columns.items():
-            # from_pandas=True: float NaN -> parquet NULL, exactly like
-            # the pandas path (pa.Table.from_pandas) — the two write
-            # paths must emit byte-identical blobs for the same data
-            arr = pa.array(arrays[name], from_pandas=True)
-            if alias == "timestamp":
-                # metadata-only reinterpret: naive M8[us] == UTC wall
-                # (exactly what from_pandas does against the tz field)
-                arr = arr.cast(pa_schema.field(name).type)
-            cols.append(arr)
-        return pa.Table.from_arrays(cols, schema=pa_schema)
-
     def _local_table(self, data, validate_sorted: bool = False):
-        """Driver-local sorted arrow table for a dict/pandas input, in
-        the schema's arrow types: `_local_cast_arrow` for dict-of-numpy,
-        else the pandas cast (`_local_cast`) + ONE ``from_pandas``; then
-        a stable sort unless `segwriter.descents` finds none. None when
-        a column needs the engine's Spark cast (ISO strings, NA index
-        values, unknown dtypes)."""
-        import pandas as pd
-        import pyarrow as pa
-
-        tbl = self._local_cast_arrow(data) if isinstance(data, dict) else None
-        if tbl is None:
-            if isinstance(data, dict):
-                data = pd.DataFrame(data)
-            if not isinstance(data, pd.DataFrame):
-                return None
-            if len(data) == 0:
-                return self.schema.pyarrow_schema().empty_table()
-            pdf = self._local_cast(data)
-            if pdf is None:
-                return None
-            tbl = pa.Table.from_pandas(
-                pdf,
-                schema=self.schema.pyarrow_schema(),
-                preserve_index=False,
-                # nthreads=1 below 100k rows: from_pandas otherwise spins
-                # up a fresh thread pool per call (~1.5 ms), which
-                # dominates the conversion itself on small append chunks
-                nthreads=1 if len(pdf) < 100_000 else None,
-            )
+        """A dict, pandas or row-list input as a sorted arrow table in
+        the schema's arrow types: `arrow_input`, then the one cast
+        (`segwriter.conform`), then a stable sort unless
+        `segwriter.descents` finds none."""
+        tbl = arrow_input(data)
+        if not len(tbl):
+            return self.schema.pyarrow_schema().empty_table()
+        tbl = segwriter.conform(tbl, self.schema)
         if segwriter.descents(tbl, self.schema.idx):
             if validate_sorted:
                 raise ValueError("frame is not sorted by index columns")
@@ -376,7 +226,11 @@ class Series:
         (`tests/series_test.py:251-371` semantics). Empty data + explicit
         bounds = range delete.
 
-        A DataFrame input is written in one Spark job when it is
+        A dict, pandas or row-list input is cast (`segwriter.conform`),
+        sorted and encoded in this process, with no Spark job; a null
+        index value or a value that cannot take its column's type raises
+        before anything is staged. A Spark DataFrame is cast with
+        ``Schema.cast`` and written in one Spark job when it is
         already sorted by the index: the encode tasks check the row
         order as they encode (see `_stage_df`). An input that is not
         sorted is read again by ``df.sort`` and a second encode job;
@@ -392,26 +246,19 @@ class Series:
         scans), True to force (expensive narrow transforms the heuristic
         can't see).
         """
-        # Fully driver-local fast path: a dict/pandas input whose dtypes
-        # are already engine-ready never touches Spark at all — the bytes
-        # are already in driver memory, so a cluster round-trip would add
-        # scheduler latencies of pure overhead per append (the
-        # reference's fragmentation bench, `bench/bench_fragmentation.py`,
-        # is this shape). Everything else encodes on the executors.
-        table = None
-        if not isinstance(data, DataFrame):
-            table = self._local_table(data, validate_sorted)
-        if table is not None:
-            pages = segwriter.encode(table, self.schema)
-        else:
-            df = self._coerce_df(data)
+        if isinstance(data, DataFrame):
+            df = self.schema.cast(data)
             if checkpoint is None:
-                checkpoint = isinstance(
-                    data, DataFrame
-                ) and "Exchange" in _physical_plan_str(df)
+                checkpoint = "Exchange" in _physical_plan_str(df)
             if checkpoint:
                 df = df.localCheckpoint(eager=False)
             pages = self._stage_df(df, validate_sorted)
+        else:
+            # in-memory input: cast, sorted and encoded right here, with
+            # no Spark job (the bytes are already in this process)
+            pages = segwriter.encode(
+                self._local_table(data, validate_sorted), self.schema
+            )
         start_closed, stop_closed = CLOSED[closed]
         start = self.schema.coerce_bound(start)
         stop = self.schema.coerce_bound(stop)
@@ -538,10 +385,16 @@ class Series:
         if getattr(fs, "arrow_readable", False):
             uri = fs.uri
             tmp_rel = segwriter.new_staging_rel(self.collection.seg_prefix)
-        rows = df.mapInArrow(
-            segwriter.partition_task(self.schema, uri, tmp_rel, max_parts),
-            "pid int, pages binary",
-        ).collect()
+        try:
+            rows = df.mapInArrow(
+                segwriter.partition_task(self.schema, uri, tmp_rel, max_parts),
+                "pid int, pages binary",
+            ).collect()
+        except Exception:
+            # a failed task (a null index value, say) leaves the pages of
+            # the tasks that ran before it staged: drop them
+            segwriter.discard(fs, tmp_rel)
+            raise
         rows.sort(key=lambda r: r["pid"])
         parts = [
             None if r["pages"] is None else pickle.loads(r["pages"])

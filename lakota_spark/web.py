@@ -29,9 +29,11 @@ Endpoints (reference parity, `lkweb/main.py:68-244`):
                                           mirroring the reference's
                                           ``(last self.col)`` reduce
 
-Paging goes through ``Series.frame(limit=, offset=, select=)`` — the
-interval-ordered segment scan serves each page without a global sort,
-so the UI stays responsive on large series. Read-only by construction: the
+Paging goes through ``Series.df(limit=, offset=, select=)`` — the
+interval-ordered segment scan serves each page in the server process,
+without a global sort or a Spark job, so the UI stays responsive on
+large series. Only the composite-index plot feed runs a Spark
+aggregation. Read-only by construction: the
 handler never mutates the repo; like the reference it is a deployment
 building block (put it behind your gateway), not a multi-tenant
 service.
@@ -91,10 +93,31 @@ def _time_dim(schema) -> str | None:
     return None
 
 
+def _page_rows(series, cols: list, page: int, start, stop) -> list[dict]:
+    """Rows of one page of ``cols`` (`Series.df`, no Spark job) as the
+    values a Spark row holds: a null is None, an int column holds ints."""
+    pdf = series.df(
+        start=start or None,
+        stop=stop or None,
+        limit=PAGE_LEN,
+        offset=page * PAGE_LEN,
+        select=cols,
+    )
+    rows = pdf.astype(object).where(pdf.notna(), None).to_dict("records")
+    # pandas holds an int column with nulls as floats
+    ints = [c for c in cols if series.schema.columns[c] == "int"]
+    for r in rows:
+        for c in ints:
+            if r[c] is not None:
+                r[c] = int(r[c])
+    return rows
+
+
 def _read_page(series, column: str, page: int, start, stop):
-    """(epoch_seconds, values) for one page — frame(limit/offset/select)
-    through the engine, last-aggregated per time point when the index is
-    composite (the reference's ``(last self.col)`` reduce)."""
+    """(epoch_seconds, values) for one page, last-aggregated per time
+    point when the index is composite (the reference's ``(last
+    self.col)`` reduce, a Spark ``groupBy``); a single-column index
+    pages through `_page_rows`."""
     from pyspark.sql import functions as F
 
     schema = series.schema
@@ -102,38 +125,32 @@ def _read_page(series, column: str, page: int, start, stop):
     if tdim is None or column not in schema.columns:
         return None
     select = list(dict.fromkeys([*schema.idx, column]))
-    if len(schema.idx) > 1:
-        # ADVICE r9: aggregate per time point BEFORE paging — paging the
-        # raw rows first would last-aggregate a boundary-straddling
-        # timestamp from only the rows on that page. Page over the
-        # DISTINCT time points instead: the agg is distributed (one
-        # groupBy over the pruned range) and limit/offset slice its
-        # ordered output, so every plotted 'last' equals the
-        # whole-series answer.
-        frm = (
-            series.frame(
-                start=start or None, stop=stop or None, select=select
-            )
-            .groupBy(tdim)
-            .agg(
-                F.expr(
-                    f"max_by({column}, struct({', '.join(schema.idx)}))"
-                ).alias(column)
-            )
-            .orderBy(tdim)
+    if len(schema.idx) == 1:
+        rows = _page_rows(series, select, page, start, stop)
+        return (
+            [int(r[tdim].timestamp()) for r in rows],
+            [r[column] for r in rows],
         )
-        if page:
-            frm = frm.offset(page * PAGE_LEN)
-        frm = frm.limit(PAGE_LEN)
-    else:
-        frm = series.frame(
-            start=start or None,
-            stop=stop or None,
-            limit=PAGE_LEN,
-            offset=page * PAGE_LEN,
-            select=select,
+    # ADVICE r9: aggregate per time point BEFORE paging — paging the
+    # raw rows first would last-aggregate a boundary-straddling
+    # timestamp from only the rows on that page. Page over the
+    # DISTINCT time points instead: the agg is distributed (one
+    # groupBy over the pruned range) and limit/offset slice its
+    # ordered output, so every plotted 'last' equals the
+    # whole-series answer.
+    frm = (
+        series.frame(start=start or None, stop=stop or None, select=select)
+        .groupBy(tdim)
+        .agg(
+            F.expr(
+                f"max_by({column}, struct({', '.join(schema.idx)}))"
+            ).alias(column)
         )
-    rows = frm.select(
+        .orderBy(tdim)
+    )
+    if page:
+        frm = frm.offset(page * PAGE_LEN)
+    rows = frm.limit(PAGE_LEN).select(
         F.col(tdim).cast("timestamp").cast("long").alias("_t"),
         F.col(column).alias("_v"),
     ).collect()
@@ -326,17 +343,12 @@ def _make_handler(repo):
             start, stop = q.get("start"), q.get("stop")
             nav = self._nav_links(collection, label, column, q, page)
             if q.get("view") == "table":
-                series = coll.series(label)
                 cols = list(
                     dict.fromkeys([*coll.schema.idx, column])
                 )
-                rows = series.frame(
-                    start=start or None,
-                    stop=stop or None,
-                    limit=PAGE_LEN,
-                    offset=page * PAGE_LEN,
-                    select=cols,
-                ).collect()
+                rows = _page_rows(
+                    coll.series(label), cols, page, start, stop
+                )
                 head = "".join(f"<th>{escape(c)}</th>" for c in cols)
                 body = "".join(
                     "<tr>"

@@ -1,15 +1,19 @@
-"""Capture .explain("formatted") for bench rungs into plans/r14/.
+"""Capture .explain("formatted") for bench rungs into a directory.
 
-Usage: python scripts/capture_plans_r14.py <suffix> [query ...]
-  suffix: "before" or "after" — file name becomes plans/r14/<q>_<suffix>.txt
+Usage: python scripts/capture_plans.py <out_dir> <suffix> [query ...]
+  out_dir: where the plans go (created if missing), e.g. plans/r14
+  suffix:  "before" or "after": each plan is written to
+           <out_dir>/<query>_<suffix>.txt
+  query:   bench rung names (default: every rung in bench.BENCH_QUERIES)
 
 Plan-only (no execution): builds each DataFrame and dumps the formatted
 physical plan, plus a one-line summary (Exchange count, join nodes,
 Python-eval nodes) to stdout so plan shapes can be diffed at a glance.
+The data is read from $SPARK_GRAFT_SF_DIR (required here).
 
-Unlike the r13 version this captures through the PUBLIC explain() API
-(ADVICE r13: PythonSQLUtils.explainString is a private JVM hook that
-breaks under Connect / version bumps) by redirecting stdout.
+Plans are captured through the public ``explain()`` API (stdout
+redirected), which also works under Spark Connect, not through the
+private ``PythonSQLUtils.explainString`` JVM hook.
 """
 
 from __future__ import annotations
@@ -20,12 +24,10 @@ import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry_mod  # noqa: E402
 from lakota_spark.session import get_spark  # noqa: E402
-
-OUT_DIR = "/root/repo/plans/r14"
 
 
 def summarize(plan: str) -> str:
@@ -63,14 +65,18 @@ def formatted_plan(df) -> str:
 
 
 def main() -> None:
-    suffix = sys.argv[1] if len(sys.argv) > 1 else "before"
-    only = set(sys.argv[2:])
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    os.makedirs(OUT_DIR, exist_ok=True)
+    if len(sys.argv) < 3:
+        sys.exit(__doc__)
+    out_dir, suffix = sys.argv[1], sys.argv[2]
+    only = set(sys.argv[3:])
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR")
+    if not sf_dir:
+        sys.exit("set SPARK_GRAFT_SF_DIR to the data dir bench.py reads")
+    import bench
+
+    os.makedirs(out_dir, exist_ok=True)
     spark = get_spark("lakota-plan-capture")
     spark.sparkContext.setLogLevel("ERROR")
-
-    import bench
 
     qs = entry_mod.queries()
     names = [n for n in bench.BENCH_QUERIES if not only or n in only]
@@ -81,7 +87,7 @@ def main() -> None:
         except Exception as exc:  # noqa: BLE001
             print(f"PLAN_ERROR {name}: {str(exc)[:160]}")
             continue
-        path = os.path.join(OUT_DIR, f"{name}_{suffix}.txt")
+        path = os.path.join(out_dir, f"{name}_{suffix}.txt")
         with open(path, "w") as fh:
             fh.write(plan)
         print(f"{name}: {summarize(plan)}")

@@ -64,7 +64,9 @@ def test_branch_merge_newest_wins(repo):
         from lakota_spark import segwriter
 
         seg_series = coll.series("s")
-        df = seg_series._coerce_df({"ts": [2], "value": [vals]})
+        df = coll.schema.cast(
+            repo.spark.createDataFrame([{"ts": 2, "value": vals}])
+        )
         path, digest = segwriter.publish(
             coll.fs, coll.seg_prefix, seg_series._stage_df(df)
         )

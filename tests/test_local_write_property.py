@@ -228,3 +228,38 @@ def test_float_index_keeps_nan_on_executor_path(srepo, spark):
              for i in range(rg.num_columns)}
     assert stats["x"] is None or not stats["x"].has_min_max
     assert stats["v"].has_min_max and stats["v"].null_count == 1
+
+
+@pytest.mark.parametrize("path", ["dict", "pandas", "series_df", "datasource"])
+@pytest.mark.parametrize("alias", ["float", "str"])
+def test_null_index_raises_before_staging(srepo, spark, path, alias):
+    """A null index value cannot be ordered in a segment bound, so every
+    write path refuses it, naming the column, before a segment is
+    staged or published (it used to publish, then fail the commit)."""
+    vals = [1.0, None, 0.5] if alias == "float" else ["b", None, "a"]
+    coll = srepo.create_collection(
+        Schema(k=f"{alias}*", v="int"), f"null_{alias}_{path}"
+    )
+    s = coll.series("x")
+    data = {"k": vals, "v": [1, 2, 3]}
+    sdf = spark.createDataFrame(
+        list(zip(vals, data["v"])),
+        f"k {'double' if alias == 'float' else 'string'}, v long",
+    )
+    with pytest.raises(Exception, match="index column 'k' holds"):
+        if path == "dict":
+            s.write(data)
+        elif path == "pandas":
+            s.write(pd.DataFrame(data))
+        elif path == "series_df":
+            s.write(sdf)
+        else:
+            (sdf.write.format("lakota").option("path", srepo.root)
+             .option("table", f"{coll.label}/x").mode("append").save())
+    left = coll.fs.ls(coll.seg_prefix)
+    assert [p for p in left if not p.startswith("_tmp-")] == []
+    if path != "datasource":
+        # a failed data-source job can leave the staging dirs its other
+        # tasks wrote; gc ages those out
+        assert left == []
+    assert s.segments() == []

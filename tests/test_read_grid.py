@@ -348,3 +348,10 @@ def test_datasource_matches_frame(spark, grid, layout, read):
     got = sorted(_rows(ds.select(*cols)), key=str)
     ref = sorted(_rows(lay.series.frame(sort=False, **fkw)), key=str)
     assert got == ref
+
+
+def test_grid_builds_without_spark_jobs(any_repo, count_jobs):
+    """Every layout of the grid is built by dict and row-list writes,
+    which cast and encode in this process: no Spark job on any
+    backend."""
+    assert count_jobs(lambda: build_grid(any_repo)) == 0

@@ -473,7 +473,9 @@ def test_content_hash_dedup_same_path(series):
     coll = s.collection
 
     def stage_and_publish():
-        df = s._coerce_df({"timestamp": [1589455990], "value": [9.0]})
+        df = s.schema.cast(s.spark.createDataFrame(
+            [{"timestamp": 1589455990, "value": 9.0}]
+        ))
         return segwriter.publish(coll.fs, coll.seg_prefix, s._stage_df(df))
 
     assert stage_and_publish() == stage_and_publish()

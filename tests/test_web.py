@@ -167,3 +167,39 @@ def test_server_side_faults_are_500_with_log(ui, monkeypatch, caplog):
         except HTTPError as e:
             assert e.code == 500
     assert any("RuntimeError" in r.message for r in caplog.records)
+
+
+def test_single_index_pages_render_nulls_without_a_job(repo, count_jobs):
+    # the table view and the single-index plot feed page through
+    # Series.df: no Spark job, and each cell holds what a Spark row of
+    # frame() holds (None for a null, an int in an int column)
+    import lakota_spark.web as web
+
+    coll = repo.create_collection(
+        Schema(ts="timestamp*", value="float", n="int", tag="str"), "nulls"
+    )
+    s = coll.series("x")
+    base = dt.datetime(2024, 1, 1)
+    s.write({
+        "ts": [base, base + dt.timedelta(minutes=1)],
+        "value": [1.5, None],
+        "n": [None, 2],
+        "tag": [None, "a"],
+    })
+    cols = ["ts", "value", "n", "tag"]
+    rows, feed = [], []
+    assert count_jobs(
+        lambda: rows.extend(web._page_rows(s, cols, 0, None, None))
+    ) == 0
+    assert rows == [r.asDict() for r in s.frame().collect()]
+    assert count_jobs(
+        lambda: feed.append(web._read_page(s, "value", 0, None, None))
+    ) == 0
+    t0 = int(base.replace(tzinfo=dt.timezone.utc).timestamp())
+    assert feed == [([t0, t0 + 60], [1.5, None])]
+    with serve_ui(repo) as url:
+        body = _get(url + "/view/nulls/x/n?view=table").decode()
+    assert (
+        "<td>2024-01-01 00:00:00</td><td>None</td></tr>"
+        "<tr><td>2024-01-01 00:01:00</td><td>2</td>"
+    ) in body
